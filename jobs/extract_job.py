@@ -207,10 +207,11 @@ def main(argv=None) -> int:
         )
         if args.fuzzy_dedup is None:
             return maybe_budget(curated)
-        # materialize the (small) curated survivor set once: the pair
-        # mining below scans it several times (signatures, shingle table
-        # twice, sizes, join-back), and each un-materialized scan would
-        # re-run the FULL upstream extraction — measured 40.3 s -> 20.3 s
+        # materialize the (small) curated survivor set once: it is
+        # scanned twice below (the pair miner shingles it once into its
+        # own pinned shingle arrays, then the join-back drops the
+        # losers), and each un-materialized scan would re-run the FULL
+        # upstream extraction — measured 40.3 s -> 20.3 s
         # total pipeline wall at 400k pages (BENCH.md r5).  With
         # --checkpoint-dir the pin is a RELIABLE checkpoint (survives
         # executor preemption — localCheckpoint blocks live on executors

@@ -7,23 +7,25 @@ Three tiers, each with the scale path spelled out:
 - **n-gram Jaccard**: exact pairwise similarity via a shingle self-join —
   the *verification* primitive.  Quadratic in cluster size, so it runs on
   candidate pairs, not the full corpus.
-- **MinHash + LSH banding**: the scale path — signatures are computed in
-  one vectorized pass (numpy inside ``mapInPandas``), band buckets shuffle
-  (band_id, band_hash) keys only, candidate pairs are verified with exact
-  Jaccard.  This is the standard shingle→minhash→band→bucket-join design
-  (Broder 1997 / MMDS ch.3, public knowledge).
+- **MinHash + LSH banding**: the scale path — each doc is shingled ONCE
+  into a shingle array that both later steps read; signatures are one
+  vectorized numpy pass per Arrow batch (``mapInArrow`` over the flattened
+  shingle hashes), band buckets shuffle (band_id, band slice) keys only,
+  and candidate pairs are verified with exact Jaccard by intersecting the
+  two docs' shingle arrays.  This is the standard
+  shingle→minhash→band→bucket-join design (Broder 1997 / MMDS ch.3,
+  public knowledge).
 
 Determinism: the hash family is seeded and fixed; no ``PYTHONHASHSEED``
-dependence (blake2b-based shingle hashing, not Python ``hash``).
+dependence (JVM ``xxhash64`` shingle hashing, not Python ``hash``).
 """
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -77,7 +79,15 @@ def dedup_keep_first(
             "fingerprint", F.sha2(F.col(col).cast("binary"), 256)
         )
         .groupBy("fingerprint")
-        .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_r"))
+        # min_by skips NULL ordering keys, so order by (id IS NOT NULL,
+        # id): a NULL-id row survives first (NULLS FIRST) and an all-NULL-id
+        # group keeps its real row instead of a fabricated all-NULL one
+        .agg(
+            F.min_by(
+                F.struct(*cols),
+                F.struct(F.col(id_col).isNotNull(), F.col(id_col)),
+            ).alias("_r")
+        )
         .select(*[F.col(f"_r.{c}").alias(c) for c in cols], "fingerprint")
     )
 
@@ -254,6 +264,78 @@ def _mersenne_mod(x: np.ndarray) -> np.ndarray:
     return np.where(x >= _MERSENNE_P, x - np.uint64(_MERSENNE_P), x)
 
 
+def _shingled(docs: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id, _s): each doc's distinct word n-gram shingles as one array."""
+    return docs.select(F.col(id_col), word_shingles("text", n).alias("_s"))
+
+
+def _offsets(arr: pa.Array) -> np.ndarray:
+    """Slice-aware int64 offsets of a binary or list Arrow array.  The
+    offset width comes from the type (int32 for ``binary``/``list``, int64
+    for the ``large_`` variants that ``useLargeVarTypes`` produces); any
+    other type raises instead of reinterpreting the buffer."""
+    t = arr.type
+    if pa.types.is_binary(t) or pa.types.is_list(t):
+        width = np.int32
+    elif pa.types.is_large_binary(t) or pa.types.is_large_list(t):
+        width = np.int64
+    else:
+        raise TypeError(f"expected a binary or list Arrow array, got {t}")
+    return np.frombuffer(arr.buffers()[1], dtype=width)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+
+
+def _signatures(
+    shingled: DataFrame, id_col: str, num_hashes: int, seed: int
+) -> DataFrame:
+    """MinHash signatures of a ``(id, _s)`` shingle-array frame — see
+    :func:`minhash_signatures`."""
+    a_params, b_params = _hash_params(num_hashes, seed)
+    id_type = shingled.schema[id_col].dataType.simpleString()
+    hashed = shingled.select(
+        F.col(id_col), F.transform("_s", lambda s: F.xxhash64(s)).alias("_h")
+    )
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids, hs = batch.column(0), batch.column(1)
+            off = _offsets(hs)
+            if not pa.types.is_int64(hs.type.value_type):
+                raise TypeError(f"expected list<int64> shingle hashes, got {hs.type}")
+            sig = np.zeros((len(hs), num_hashes), dtype=np.int64)
+            if off[-1] > off[0]:
+                h64 = np.asarray(hs.values)[off[0] : off[-1]].view(np.uint64)
+                h32 = (h64 ^ (h64 >> np.uint64(32))) & np.uint64(0xFFFFFFFF)
+                # zero-shingle docs own no values, so segmenting at the
+                # non-empty docs' starts gives exactly one segment per doc;
+                # they keep the all-zero signature
+                nz = off[1:] > off[:-1]
+                starts = off[:-1][nz] - off[0]
+                # one vector pass per hash function keeps the working set at
+                # one batch of shingles; a (hashes x shingles) broadcast is
+                # 64x the memory and measured ~3x slower
+                for k in range(num_hashes):
+                    m = _mersenne_mod(a_params[k] * h32 + b_params[k])
+                    sig[nz, k] = np.minimum.reduceat(m, starts).view(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids,
+                    pa.ListArray.from_arrays(
+                        pa.array(
+                            np.arange(0, sig.size + 1, num_hashes, dtype=np.int32)
+                        ),
+                        pa.array(sig.ravel(), type=pa.int64()),
+                    ),
+                ],
+                names=[id_col, "sig"],
+            )
+
+    return hashed.mapInArrow(gen, schema=f"{id_col} {id_type}, sig array<long>")
+
+
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -264,39 +346,18 @@ def minhash_signatures(
     """(id, sig array<long>) MinHash signatures.
 
     Shingle hashing happens JVM-side (``xxhash64`` over the shingle array —
-    zero Python hashing); the Python stage is one uint64 numpy broadcast
-    ``min((a*h32 + b) mod (2^61-1))`` per doc — no object dtype, no Python
-    bigints (the round-1 weak spot).  The id column keeps its INPUT type
-    (numeric doc ids and string urls both work — a hardcoded long schema
-    silently casts url keys to BIGINT in the downstream verify joins and
-    crashes on real urls, found via the CLI --fuzzy-dedup stage r5)."""
-    a_params, b_params = _hash_params(num_hashes, seed)
-    id_type = docs.schema[id_col].dataType.simpleString()
-    with_sh = docs.select(
-        F.col(id_col),
-        F.transform(word_shingles("text", n), lambda s: F.xxhash64(s)).alias("_sh"),
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        a = a_params[:, None]
-        b = b_params[:, None]
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, shingles in zip(pdf[id_col], pdf["_sh"]):
-                if len(shingles) == 0:
-                    sigs.append([0] * num_hashes)
-                    ids.append(doc_id)
-                    continue
-                h64 = np.asarray(shingles, dtype=np.int64).astype(np.uint64)
-                h32 = (h64 ^ (h64 >> np.uint64(32))) & np.uint64(0xFFFFFFFF)
-                m = _mersenne_mod(a * h32[None, :] + b)
-                sigs.append(m.min(axis=1).astype(np.int64).tolist())
-                ids.append(doc_id)
-            yield pd.DataFrame({id_col: ids, "sig": sigs})
-
-    return with_sh.mapInPandas(
-        gen, schema=f"{id_col} {id_type}, sig array<long>"
-    )
+    zero Python hashing); the Python stage is one ``mapInArrow`` pass per
+    batch over the FLATTENED ``list<long>`` hash values, read zero-copy
+    through the list offsets: per hash function one uint64 numpy
+    ``(a*h32 + b) mod (2^61-1)`` over every shingle of the batch, then
+    ``np.minimum.reduceat`` at the doc offsets — no per-doc loop, no
+    pandas, no object dtype, no Python bigints.  Docs without shingles get
+    the all-zero signature.  The id column passes through as the untouched
+    Arrow array, so it keeps its INPUT type (numeric doc ids and string
+    urls both work — a hardcoded long schema silently casts url keys to
+    BIGINT in the downstream verify joins and crashes on real urls, found
+    via the CLI --fuzzy-dedup stage r5)."""
+    return _signatures(_shingled(docs, id_col, n), id_col, num_hashes, seed)
 
 
 def lsh_candidate_pairs(
@@ -306,27 +367,23 @@ def lsh_candidate_pairs(
     cap: int = 1024,
 ) -> DataFrame:
     """Band the signatures and bucket-join: (id_a, id_b) candidate pairs.
-    Only (band_id, band_hash, id) rows shuffle — constant bytes per doc."""
+    The join key is (band_id, the band's own ``array<long>`` slice of the
+    signature), so key equality is exactly band equality — no string
+    rendering or digest of the band.  Only (band_id, band, id) rows
+    shuffle — constant bytes per doc."""
     rows_per_band = (F.size("sig") / bands).cast("int")
     banded = signatures.select(
         F.col(id_col),
         F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda band: F.sha2(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", band * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).cast("binary"),
-                    256,
-                ),
+            F.array(
+                *[
+                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
+                    for i in range(bands)
+                ]
             )
-        ).alias("band_id", "band_hash"),
+        ).alias("band_id", "band"),
     )
-    return guarded_pair_join(banded, ["band_id", "band_hash"], id_col, cap)
+    return guarded_pair_join(banded, ["band_id", "band"], id_col, cap)
 
 
 def minhash_dedup_pairs(
@@ -341,26 +398,42 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Full near-dup pipeline: minhash -> LSH candidates -> exact-Jaccard
     verification.  Returns the same schema as ``ngram_jaccard_pairs`` but
-    only ever computes Jaccard on candidate pairs."""
-    sigs = minhash_signatures(docs, id_col, num_hashes, n, seed)
-    cands = lsh_candidate_pairs(sigs, bands, id_col, cap)
-    sh = shingle_table(docs, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    # verify candidates only: tag pair rows with a-side shingles, then
-    # inner-join the b side on (id_b, shingle) -> intersection counts
-    a_sh = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b_sh = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        cands.join(a_sh, "id_a")
-        .join(b_sh, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
+    only ever computes Jaccard on candidate pairs.
+
+    Each doc is shingled ONCE: the ``(id, shingle array)`` frame is pinned
+    with a non-eager ``localCheckpoint`` (the first action that reads it
+    materializes it; with AQE, shuffle stages upstream of ``docs`` would
+    run at pin time, so pass a pinned ``docs`` as the CLI does) and feeds
+    both the signatures and the verify step.  Verify joins each candidate pair to both docs' shingle
+    arrays and intersects them — the arrays are already distinct, so
+    ``size(array_intersect)`` is the exact intersection count and no
+    shingle row ever shuffles on its own."""
+    sh = _shingled(docs, id_col, n).localCheckpoint(eager=False)
+    cands = lsh_candidate_pairs(
+        _signatures(sh, id_col, num_hashes, seed), bands, id_col, cap
     )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b")
-    return (
-        inter.join(sa, "id_a")
+    sa = sh.select(F.col(id_col).alias("id_a"), F.col("_s").alias("_sa"))
+    sb = sh.select(F.col(id_col).alias("id_b"), F.col("_s").alias("_sb"))
+    counted = (
+        cands.join(sa, "id_a")
         .join(sb, "id_b")
+        # one row per pair already (cands is distinct and partitioned on the
+        # pair, so no exchange is added): the groupBy is the barrier that
+        # keeps the string-array intersection to ONE evaluation per pair —
+        # a plain projection is inlined into the filters below, pushed into
+        # the join condition and evaluated three more times per pair
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.max(F.size(F.array_intersect("_sa", "_sb"))).cast("long").alias("inter"),
+            F.max(F.size("_sa")).cast("long").alias("n_a"),
+            F.max(F.size("_sb")).cast("long").alias("n_b"),
+        )
+    )
+    return (
+        # two shingle-less docs share the all-zero signature and become a
+        # candidate with an empty union: drop disjoint pairs BEFORE the
+        # division (ANSI mode raises on x / 0)
+        counted.filter(F.col("inter") > 0)
         .withColumn(
             "jaccard",
             F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
@@ -453,23 +526,17 @@ def simhash(
     weights = (1 << np.arange(bits - 1, -1, -1, dtype=np.int64))
 
     def gen(batches):
-        import pyarrow as pa
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             ids = batch.column(0)
             hx = batch.column(1)
-            # binary column = validity + int32 offsets + data buffer; the
-            # offsets slice respects a possibly non-zero array offset
-            bufs = hx.buffers()
-            off = np.frombuffer(bufs[1], dtype=np.int32)[
-                hx.offset : hx.offset + len(hx) + 1
-            ].astype(np.int64)
+            # binary column = validity + offsets + data buffer
+            off = _offsets(hx)
             counts = (off[1:] - off[:-1]) // 8
             out = np.zeros(len(hx), dtype=np.int64)
             if off[-1] > off[0]:
-                raw = np.frombuffer(bufs[2], dtype=np.uint8)[off[0] : off[-1]]
+                raw = np.frombuffer(hx.buffers()[2], dtype=np.uint8)[off[0] : off[-1]]
                 bitmat = np.unpackbits(raw.reshape(-1, 8), axis=1)[:, :bits]
                 nz = counts > 0
                 # zero-shingle docs contribute no rows, so segmenting at the
@@ -518,12 +585,15 @@ def guarded_pair_join(
     """
     from pyspark.sql import Window
 
-    wb = Window.partitionBy(*keys)
-    sized = tagged.withColumn("_bn", F.count("*").over(wb)).withColumn(
+    # one partition+order spec serves both the whole-frame bucket size and
+    # the row number, so each side pays one sort and one window operator
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    sized = tagged.withColumn("_bn", F.count("*").over(whole)).withColumn(
         "_chunk",
         F.when(
             F.col("_bn") > cap,
-            ((F.row_number().over(wb.orderBy(id_col)) - 1) / cap).cast("int"),
+            ((F.row_number().over(w) - 1) / cap).cast("int"),
         ).otherwise(0),
     )
     n_chunks = ((F.col("_bn") + cap - 1) / cap).cast("int")

@@ -331,6 +331,33 @@ def test_quality_and_lang_domains(docs):
     assert langs <= {"en", "de", "fr", "es"}
 
 
+def test_word_ngrams_match_split_reference(spark):
+    """The regex n-gram extraction equals joining every window of
+    ``split(text, " ")`` — including the empty tokens that double,
+    leading and trailing spaces make, other whitespace inside tokens,
+    non-ASCII text and NULL text (no n-grams)."""
+    from tesseract_rs_spark.functions.text import word_ngrams_all, word_shingles
+
+    texts = [
+        None, "", " ", "   ", "a", "a b", "a b c", " a b c", "a b c ",
+        "a  b c d", "x\ny z\tw", "é ü ñ ß", "one two three one two three",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    for n in (1, 2, 3):
+        got = {
+            r["i"]: (list(r["all"]), list(r["sh"]))
+            for r in df.select(
+                "i",
+                word_ngrams_all("text", n).alias("all"),
+                word_shingles("text", n).alias("sh"),
+            ).collect()
+        }
+        for i, text in enumerate(texts):
+            t = [] if text is None else text.split(" ")
+            want = [" ".join(t[k : k + n]) for k in range(len(t) - n + 1)]
+            assert got[i][0] == want, (n, text)
+            assert got[i][1] == list(dict.fromkeys(want)), (n, text)
+
 def test_short_doc_shingle_edges(spark, tmp_path):
     """Docs with fewer than n words emit NO shingles: word_shingles is
     empty, simhash is 0, shingle_fingerprint is NULL, and a one-word doc
@@ -2098,6 +2125,186 @@ def test_simhash_arrow_edges(spark):
     }
     assert rev == out
 
+
+
+def test_simhash_large_var_types(spark):
+    """The binary offsets width comes from the Arrow type: with
+    ``useLargeVarTypes`` the digests arrive as ``large_binary`` (int64
+    offsets) and must hash exactly as the int32-offset ``binary`` path
+    (the MinHash signature reader shares the offsets helper, and its
+    string ids arrive as ``large_string``); any other type fails loudly
+    instead of being reinterpreted."""
+    import pyarrow as pa
+
+    from tesseract_rs_spark.functions.dedup import (
+        _offsets,
+        minhash_signatures,
+        simhash,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            ("u1", "too short"),
+            ("u2", "one two three four five six seven"),
+            ("u3", "alpha beta gamma delta epsilon zeta eta theta"),
+        ],
+        "url string, text string",
+    )
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    out = {}
+    for v in ("false", "true"):
+        spark.conf.set(key, v)
+        try:
+            out[v] = {
+                r["url"]: r["simhash"]
+                for r in simhash(docs, id_col="url").collect()
+            }
+            out[v + "_sig"] = {
+                r["url"]: list(r["sig"])
+                for r in minhash_signatures(docs, id_col="url").collect()
+            }
+        finally:
+            spark.conf.unset(key)
+    assert out["true"] == out["false"]
+    assert out["true_sig"] == out["false_sig"]
+    assert out["false"]["u1"] == 0 and out["false"]["u2"] != 0
+    with pytest.raises(TypeError):
+        _offsets(pa.array(["x"]))
+
+
+def test_dedup_keep_first_null_ids(spark):
+    """NULL ids order FIRST within a digest group (the row_number NULLS
+    FIRST survivor): an all-NULL-id group keeps its real row, not a
+    fabricated all-NULL one, and a mixed group keeps the NULL-id row."""
+    from tesseract_rs_spark.functions.dedup import dedup_keep_first
+
+    df = spark.createDataFrame(
+        [
+            (None, "aaa"),
+            (None, "aaa"),
+            (3, "bbb"),
+            (None, "bbb"),
+            (2, "ccc"),
+            (1, "ccc"),
+        ],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        ((r["text"], r["doc_id"]) for r in dedup_keep_first(df).collect()),
+        key=repr,
+    )
+    assert got == [("aaa", None), ("bbb", None), ("ccc", 1)]
+
+
+def test_minhash_signatures_match_reference(spark):
+    """The vectorised signature pass equals a per-doc reference in exact
+    Python integers, across several Arrow batches per partition, for
+    zero-shingle (empty, fewer-than-3-word) docs and ordinary ones."""
+    from tesseract_rs_spark.functions.dedup import (
+        _MERSENNE_P,
+        _hash_params,
+        minhash_signatures,
+    )
+    from tesseract_rs_spark.functions.text import word_shingles
+
+    texts = [
+        "",
+        "two words",
+        "one two three",
+        "one two three four five six",
+        "the quick brown fox jumps over the lazy dog again and again",
+        "one two three four five six",
+        "a",
+        "spark arrow numpy minhash band bucket join verify",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).repartition(2)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "2")
+    try:
+        got = {
+            r["doc_id"]: list(r["sig"])
+            for r in minhash_signatures(docs, num_hashes=16).collect()
+        }
+    finally:
+        spark.conf.set(key, "4096")
+    hashes = {
+        r["doc_id"]: list(r["h"])
+        for r in docs.select(
+            "doc_id",
+            F.transform(word_shingles("text", 3), lambda s: F.xxhash64(s)).alias("h"),
+        ).collect()
+    }
+    a, b = _hash_params(16, 42)
+    for doc_id, hs in hashes.items():
+        h32 = [((h % (1 << 64)) ^ ((h % (1 << 64)) >> 32)) & 0xFFFFFFFF for h in hs]
+        want = [
+            min(((int(ak) * h + int(bk)) % _MERSENNE_P for h in h32), default=0)
+            for ak, bk in zip(a, b)
+        ]
+        assert got[doc_id] == want, doc_id
+    assert got[0] == got[1] == got[6] == [0] * 16
+    assert got[3] == got[5] and got[2] != [0] * 16
+
+
+def test_minhash_shingleless_docs_no_pair_under_ansi(spark):
+    """Two docs without shingles share the all-zero signature, so they ARE
+    an LSH candidate with an empty union; verify must drop them without a
+    divide-by-zero under ANSI and without emitting a pair."""
+    from tesseract_rs_spark.functions.dedup import (
+        lsh_candidate_pairs,
+        minhash_dedup_pairs,
+        minhash_signatures,
+    )
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    docs = spark.createDataFrame(
+        [
+            (1, ""),
+            (2, "too short"),
+            (3, "one two three four five six seven"),
+            (4, "one two three four five six seven"),
+        ],
+        "doc_id long, text string",
+    )
+    cands = {
+        (r["id_a"], r["id_b"])
+        for r in lsh_candidate_pairs(minhash_signatures(docs)).collect()
+    }
+    assert (1, 2) in cands
+    pairs = [
+        (r["id_a"], r["id_b"], r["inter"], r["n_a"], r["n_b"], r["jaccard"])
+        for r in minhash_dedup_pairs(docs, threshold=0.01).collect()
+    ]
+    assert pairs == [(3, 4, 5, 5, 5, 1.0)]
+
+
+def test_lsh_candidates_same_under_bucket_cap(spark):
+    """A band bucket larger than ``cap`` goes through the chunked grid and
+    still yields exactly the uncapped candidate and pair sets."""
+    from tesseract_rs_spark.functions.dedup import (
+        lsh_candidate_pairs,
+        minhash_dedup_pairs,
+        minhash_signatures,
+    )
+
+    base = "spark table query join merge scan filter window batch shuffle"
+    rows = [(i, base) for i in range(8)]
+    rows += [(10 + i, base.replace("join", f"edit{i}")) for i in range(3)]
+    rows += [(20 + i, f"unrelated text number {i} with its own words") for i in range(4)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = minhash_signatures(docs)
+
+    def pairs_of(df):
+        return {(r["id_a"], r["id_b"]) for r in df.collect()}
+
+    capped = pairs_of(lsh_candidate_pairs(sigs, cap=3))
+    assert capped == pairs_of(lsh_candidate_pairs(sigs))
+    assert {(a, b) for a in range(8) for b in range(8) if a < b} <= capped
+    assert pairs_of(minhash_dedup_pairs(docs, threshold=0.5, cap=3)) == pairs_of(
+        minhash_dedup_pairs(docs, threshold=0.5)
+    )
 
 def test_stratified_token_budget_empty_nonstring_stratum(spark):
     """r7 ADVICE fix: the empty-input early return derives the stratum
