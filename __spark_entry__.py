@@ -904,16 +904,6 @@ def _q_dedup_minhash_lsh(spark, sf_dir):
     return minhash_dedup_pairs(_docs(spark, sf_dir), threshold=0.8)
 
 
-def _q_repeated_spans(spark, sf_dir):
-    """Cross-document repeated 3-gram spans (substring-level dedup,
-    Lee et al. 2022): merged per-doc token spans whose n-grams occur in
-    at least one other document.  Oracle: string-level self-join + the
-    same gaps-and-islands window in SQL."""
-    from tesseract_rs_spark.functions.cleaning import repeated_ngram_spans
-
-    return repeated_ngram_spans(_docs(spark, sf_dir), n=3)
-
-
 def _q_repeated_spans_m(spark, sf_dir):
     """Substring dedup, BOTH halves of Lee et al. 2022 under one name:
     the find half (repeated-span rows, part='span') and the scrub half
@@ -1055,10 +1045,6 @@ def _q_token_count_bpe(spark, sf_dir):
     )
 
 
-def _q_dedup_embedding(spark, sf_dir):
-    return embedding_dup_pairs(_emb(spark, sf_dir), threshold=0.45)
-
-
 def _q_dedup_embedding_m(spark, sf_dir):
     """Embedding near-dup surface, four operators tagged by method:
     the LSH + exact-verify pairs, the SemDeDup IVF cell-bucketed pairs,
@@ -1127,20 +1113,6 @@ def _media_pgm(spark, sf_dir):
 
     return docs.select("doc_id", "text").mapInPandas(
         gen, "media_id long, payload binary"
-    )
-
-
-def _q_media_image_stats(spark, sf_dir):
-    """REAL image decode end-to-end: each document rendered to a raster
-    page, encoded as a binary PGM (P5), decoded back by the real PGM
-    parser, and reduced to pixel statistics.  Width/height follow the
-    shared render geometry and n_ink_px is the glyph ink mass — both
-    closed-form from the source text (ink per glyph = 48 spine px + 56 px
-    per set bit of the charset code)."""
-    from tesseract_rs_spark.functions.multimodal import image_stats
-
-    return image_stats(_media_pgm(spark, sf_dir)).select(
-        F.col("media_id").alias("doc_id"), "status", "width", "height", "n_ink_px"
     )
 
 

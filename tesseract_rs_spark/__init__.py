@@ -15,8 +15,10 @@ pipeline over Common-Crawl-style page tables
 - never fail a job on one corrupt page: per-row status + failure spans
   (error model: /root/reference/src/error.rs:6-41).
 
-Everything executes as Arrow-vectorized ``mapInPandas`` stages — zero
-per-row Python UDFs.
+Every Python stage is Arrow-vectorized — zero per-row Python UDFs.  Most
+are ``mapInPandas``; ``extract_words``, ``simhash`` and the MinHash
+signature step are ``mapInArrow`` over the raw Arrow buffers.  Python
+workers start through ``worker_daemon`` (see ``session.get_spark``).
 """
 
 __version__ = "0.1.0"

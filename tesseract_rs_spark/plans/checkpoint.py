@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import defaultdict
 from typing import Sequence
 
 import pyspark.sql.functions as F
@@ -35,6 +36,8 @@ STAGED_DIR = "_staged"
 # confidence histogram bucket edges (0-100 in tens, like the reference's
 # 0-100 confidence domain, /root/reference/src/api.rs:555-572)
 _CONF_BUCKETS = 10
+# lineage counters that add up across a bucket's per-decile partial rows
+_SUMS = ("n_rows", "n_ok", "chars_emitted", "words_emitted", "failure_spans_total")
 
 
 def _lineage_path(out_dir: str, bucket: int) -> str:
@@ -157,15 +160,20 @@ def run_checkpointed(
             .partitionBy("bucket")
             .parquet(os.path.join(out_dir, DATA_DIR))
         )
-        # per-bucket metrics from what we just wrote (no recompute).  The
-        # confidence histogram aggregates as (bucket, conf_decile) COUNTS —
-        # constant rows per bucket, never a collected list (at 10^12 docs a
-        # collect_list here would be the job's largest allocation).
-        written = spark.read.parquet(os.path.join(out_dir, DATA_DIR)).filter(
-            F.col("bucket").isin(group)
-        )
-        stats = (
-            written.groupBy("bucket")
+        # per-bucket metrics from what we just wrote (no recompute), in ONE
+        # aggregation: partial sums per (bucket, conf_decile), folded per
+        # bucket here.  Constant rows per bucket, never a collected list (at
+        # 10^12 docs a collect_list here would be the job's largest
+        # allocation).
+        partials = (
+            spark.read.parquet(os.path.join(out_dir, DATA_DIR))
+            .filter(F.col("bucket").isin(group))
+            .groupBy(
+                "bucket",
+                F.least(
+                    F.floor(F.col("mean_conf") / 10), F.lit(_CONF_BUCKETS - 1)
+                ).alias("decile"),
+            )
             .agg(
                 F.count("*").alias("n_rows"),
                 F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
@@ -175,31 +183,16 @@ def run_checkpointed(
             )
             .collect()
         )
-        hist_rows = (
-            written.groupBy(
-                "bucket",
-                F.least(
-                    F.floor(F.col("mean_conf") / 10), F.lit(_CONF_BUCKETS - 1)
-                ).alias("decile"),
-            )
-            .count()
-            .collect()
-        )
-        hists: dict = {}
-        for row in hist_rows:
-            hists.setdefault(row["bucket"], [0] * _CONF_BUCKETS)[
-                int(row["decile"])
-            ] += int(row["count"])
+        stats = defaultdict(_empty_stats)
+        for row in partials:
+            rec = stats[row["bucket"]]
+            for k in _SUMS:
+                rec[k] += row[k] or 0
+            rec["conf_histogram"][int(row["decile"])] += row["n_rows"]
         wall = time.time() - t0
-        for row in stats:
-            _commit_lineage(
-                out_dir, row, hists.get(row["bucket"], [0] * _CONF_BUCKETS), wall, len(group)
-            )
-        # buckets with zero rows still need lineage so resume skips them
-        seen = {row["bucket"] for row in stats}
         for b in group:
-            if b not in seen:
-                _commit_lineage_empty(out_dir, b, wall, len(group))
+            # buckets with zero rows still need lineage so resume skips them
+            _commit_lineage(out_dir, b, stats[b], wall, len(group))
     # every bucket committed: the input snapshot has no consumer left.
     # Runs unconditionally (not just when THIS invocation had pending
     # work) so a crash between the last lineage commit and the cleanup
@@ -210,33 +203,20 @@ def run_checkpointed(
     return spark.read.parquet(os.path.join(out_dir, DATA_DIR))
 
 
-def _commit_lineage(out_dir: str, row, hist: list, wall: float, group_len: int) -> None:
-    rec = {
-        "bucket": int(row["bucket"]),
-        "n_rows": int(row["n_rows"]),
-        "n_ok": int(row["n_ok"]),
-        "n_failed": int(row["n_rows"]) - int(row["n_ok"]),
-        "chars_emitted": int(row["chars_emitted"]),
-        "words_emitted": int(row["words_emitted"]),
-        "failure_spans_total": int(row["failure_spans_total"]),
-        "conf_histogram": hist,
-        "wall_s_group": round(wall, 3),
-        "group_size": group_len,
-        "ts": time.time(),
-    }
-    _atomic_write_json(_lineage_path(out_dir, rec["bucket"]), rec)
+def _empty_stats() -> dict:
+    return dict.fromkeys(_SUMS, 0) | {"conf_histogram": [0] * _CONF_BUCKETS}
 
 
-def _commit_lineage_empty(out_dir: str, bucket: int, wall: float, group_len: int) -> None:
+def _commit_lineage(out_dir: str, bucket: int, stats: dict, wall: float, group_len: int) -> None:
     rec = {
         "bucket": int(bucket),
-        "n_rows": 0,
-        "n_ok": 0,
-        "n_failed": 0,
-        "chars_emitted": 0,
-        "words_emitted": 0,
-        "failure_spans_total": 0,
-        "conf_histogram": [0] * _CONF_BUCKETS,
+        "n_rows": stats["n_rows"],
+        "n_ok": stats["n_ok"],
+        "n_failed": stats["n_rows"] - stats["n_ok"],
+        "chars_emitted": stats["chars_emitted"],
+        "words_emitted": stats["words_emitted"],
+        "failure_spans_total": stats["failure_spans_total"],
+        "conf_histogram": stats["conf_histogram"],
         "wall_s_group": round(wall, 3),
         "group_size": group_len,
         "ts": time.time(),

@@ -78,6 +78,40 @@ def test_lineage_metrics(spark, pages_path, tmp_path):
     assert os.path.isdir(os.path.join(out, "data"))
 
 
+def test_lineage_equals_recount_of_written_data(spark, pages_path, tmp_path):
+    """Every lineage counter equals a pandas recount of the bucket's rows in
+    the written parquet.  Groups are uneven (40, 40, 16) and there are more
+    buckets than pages, so some buckets have no rows at all."""
+    import numpy as np
+    import pandas as pd
+
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "out_recount")
+    n_buckets = 96
+    run_checkpointed(
+        spark, pages, out, ExtractConfig(), n_buckets=n_buckets, group_size=40
+    )
+    data = pd.read_parquet(os.path.join(out, "data"))
+    data["bucket"] = data["bucket"].astype(int)
+    rows = read_lineage(out)
+    assert [r["bucket"] for r in rows] == list(range(n_buckets))
+    assert sum(r["n_rows"] == 0 for r in rows) > 0
+    for r in rows:
+        d = data[data["bucket"] == r["bucket"]]
+        assert d["failure_spans"].notna().all()
+        deciles = np.minimum(np.floor(d["mean_conf"] / 10), 9).astype(int)
+        want = {
+            "n_rows": len(d),
+            "n_ok": int((d["status"] == "ok").sum()),
+            "n_failed": int((d["status"] != "ok").sum()),
+            "chars_emitted": int(d["n_chars"].sum()),
+            "words_emitted": int(d["n_words"].sum()),
+            "failure_spans_total": int(sum(len(s) for s in d["failure_spans"])),
+            "conf_histogram": np.bincount(deciles, minlength=10).tolist(),
+        }
+        assert {k: r[k] for k in want} == want, r["bucket"]
+
+
 class TestBucketing:
     """Shuffle-free co-located joins via catalog bucketing
     (plans/bucketing.py): pay the shuffle once at write time."""
