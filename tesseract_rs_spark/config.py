@@ -38,8 +38,6 @@ OEM_TEMPLATE = 0   # exact Hamming template matcher (legacy-engine analog)
 OEM_NCC = 1        # normalized-correlation matcher (LSTM-engine analog)
 OEM_DEFAULT = 3    # resolves to OEM_TEMPLATE
 
-_VALID_OEMS = (OEM_TEMPLATE, OEM_NCC, OEM_DEFAULT)
-
 
 def mode_from_int(value: int) -> int:
     """Total decode with default-on-invalid, mirroring the reference's

@@ -70,9 +70,8 @@ def dedup_keep_first(
     map-side), and no per-group sort happens at all — the r6 row_number
     window shipped EVERY row to its digest's reducer and sorted there.
     At 100 TB this moves at most (map partitions x distinct digests)
-    candidate rows, bounded above by the old one-row-per-input shuffle;
-    pre-bucketing the table by digest (plans/bucketing) removes even
-    that exchange.  Adds the digest as a ``fingerprint`` column."""
+    candidate rows, bounded above by the old one-row-per-input shuffle.
+    Adds the digest as a ``fingerprint`` column."""
     cols = docs.columns
     return (
         docs.withColumn(

@@ -34,12 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 MEDIA_MAGIC = b"MEDI"
 KINDS = ("image", "audio", "video")
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "meta struct<width: int, height: int, sample_rate: int, "
-    "duration_ms: int, n_frames: int>"
-)
-
 
 def make_media_corpus(n: int = 64, seed: int = 42) -> pd.DataFrame:
     """Deterministic synthetic media table: MEDI header + seeded bytes."""

@@ -39,7 +39,6 @@ from dataclasses import dataclass
 import numpy as np
 
 MAGIC = 0x50414745  # "PAGE"
-HEADER = struct.Struct("<IiiII")  # magic, width, height, bpp, bpl... see decode
 
 GLYPH_W = 16
 GLYPH_H = 24
@@ -840,7 +839,6 @@ def deskew(binary: np.ndarray, angle_deg: float) -> np.ndarray:
 
 
 WRITING_DIRECTION_LTR = "left_to_right"
-TEXTLINE_ORDER_TTB = "top_to_bottom"
 SCRIPT_LATIN = "Latin"
 
 # choose the non-default orientation only on a clear win (the

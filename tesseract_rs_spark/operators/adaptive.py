@@ -48,9 +48,8 @@ _CELL_SHAPE_ROW = -1  # pos of the per-char example-count row
 def accumulate_page_glyphs(acc: dict, payload, truth: str | None) -> None:
     """Fold one labeled page into a glyph accumulator
     ``{char: [pixel-count int64 vec, n_examples]}`` — the per-page half
-    of :func:`learn_glyphs`, shared with the streaming sequential
-    adaptation (`streaming/adaptive.py`).  Misaligned pages are skipped
-    defensively (adaptation must never learn from a misalignment)."""
+    of :func:`learn_glyphs`.  Misaligned pages are skipped defensively
+    (adaptation must never learn from a misalignment)."""
     from tesseract_rs_spark.kernels.raster import (
         GLYPH_H,
         GLYPH_W,
@@ -85,9 +84,7 @@ def accumulate_page_glyphs(acc: dict, payload, truth: str | None) -> None:
 
 def atlas_from_acc(acc: dict) -> dict:
     """Accumulator -> atlas: strict per-pixel majority (ties OFF — any
-    tie-break works; strict-off is partition/arrival-order independent).
-    Empty accumulator -> empty atlas (the streaming operator decodes
-    with the embedded models until the first labeled page arrives)."""
+    tie-break works; strict-off is partition/arrival-order independent)."""
     from tesseract_rs_spark.kernels.raster import GLYPH_H, GLYPH_W
 
     return {
@@ -181,7 +178,7 @@ def ocr_text_adapted(
     where they match better, the distributed stand-in for the
     reference's mutated classifier.  (ids, text, status, mean_conf,
     n_words)."""
-    from tesseract_rs_spark.operators.ocr import _id_schema
+    from tesseract_rs_spark.operators.extract import _id_schema
 
     cfg = cfg or ExtractConfig()
     schema = (

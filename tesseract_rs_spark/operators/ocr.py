@@ -22,6 +22,7 @@ from tesseract_rs_spark.kernels.raster import (
     raster_symbols,
     thresholded_image,
 )
+from tesseract_rs_spark.operators.extract import _id_schema
 
 OCR_TEXT_FIELDS = (
     "text string, status string, threshold long, orientation_deg long, "
@@ -33,9 +34,26 @@ OCR_WORD_FIELDS = (
 )
 
 
-def _id_schema(pages: DataFrame, id_cols: Sequence[str]) -> str:
-    by_name = {f.name: f for f in pages.schema.fields}
-    return ", ".join(f"{c} {by_name[c].dataType.simpleString()}" for c in id_cols)
+def _explode(pdf, id_cols, per_doc: list, names: Sequence[str],
+             dtypes: dict) -> tuple:
+    """Per-doc row lists -> output columns, one row per kernel row: the
+    id columns repeat per row (``np.repeat``), the rows transpose once
+    per batch, and each named column takes its ``dtypes`` entry (default
+    int64; ``object`` keeps a plain list).  Row tuples may carry extra
+    trailing fields; only ``names`` are kept.  Returns (columns dict in
+    output order, per-doc row counts)."""
+    counts = np.fromiter(
+        (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
+    )
+    out: dict = {c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols}
+    rows: list = []
+    for r in per_doc:
+        rows.extend(r)
+    t = list(zip(*rows)) if rows else [()] * len(names)
+    for name, col in zip(names, t):
+        dt = dtypes.get(name, np.int64)
+        out[name] = list(col) if dt is object else np.asarray(col, dtype=dt)
+    return out, counts
 
 
 def raster_batch_results(pdf, cfg: ExtractConfig, payload_col: str = "html",
@@ -170,35 +188,22 @@ def ocr_symbols(
     wl = cfg.char_whitelist
     schema = _id_schema(pages, id_cols) + ", " + OCR_SYMBOL_FIELDS
     id_cols = tuple(id_cols)
+    names = (
+        "para_id", "line_id", "word_id", "symbol_id", "glyph", "conf", "choices",
+    )
+    dtypes = {"glyph": object, "conf": np.float64, "choices": object}
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             per_doc = [raster_symbols(p, wl, k)[1] for p in pdf[payload_col]]
-            counts = np.fromiter(
-                (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
-            )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in per_doc:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [[]] * 7
-            for i, name in enumerate(
-                ("para_id", "line_id", "word_id", "symbol_id")
-            ):
-                out[name] = np.asarray(t[i], dtype=np.int64)
-            out["glyph"] = list(t[4])
-            out["conf"] = np.asarray(t[5], dtype=np.float64)
+            out, _ = _explode(pdf, id_cols, per_doc, names, dtypes)
             out["choices"] = [
-                [{"glyph": g, "conf": c} for g, c in alts] for alts in t[6]
+                [{"glyph": g, "conf": c} for g, c in alts]
+                for alts in out["choices"]
             ]
-            cols = list(id_cols) + [
-                "para_id", "line_id", "word_id", "symbol_id", "glyph", "conf", "choices",
-            ]
-            yield pd.DataFrame(out)[cols]
+            yield pd.DataFrame(out)
 
     return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
 
@@ -224,35 +229,24 @@ def ocr_symbol_attrs(
     wl = cfg.char_whitelist
     schema = _id_schema(pages, id_cols) + ", " + OCR_SYMBOL_ATTR_FIELDS
     id_cols = tuple(id_cols)
-    names = [
+    names = (
         "para_id", "line_id", "word_id", "symbol_id", "glyph",
         "left", "top", "right", "bottom",
         "is_superscript", "is_subscript", "is_dropcap",
-    ]
+    )
+    dtypes = {
+        "glyph": object, "is_superscript": bool, "is_subscript": bool,
+        "is_dropcap": bool,
+    }
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             per_doc = [raster_symbol_attrs(p, wl)[1] for p in pdf[payload_col]]
-            counts = np.fromiter(
-                (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
+            yield pd.DataFrame(
+                _explode(pdf, id_cols, per_doc, names, dtypes)[0]
             )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in per_doc:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [[]] * len(names)
-            for i, name in enumerate(names):
-                if name == "glyph":
-                    out[name] = list(t[i])
-                elif name.startswith("is_"):
-                    out[name] = np.asarray(t[i], dtype=bool)
-                else:
-                    out[name] = np.asarray(t[i], dtype=np.int64)
-            yield pd.DataFrame(out)[list(id_cols) + names]
 
     return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
 
@@ -289,32 +283,20 @@ def ocr_layout(
     (/root/reference/src/api.rs:1353-1364, 774-781)."""
     schema = _id_schema(pages, id_cols) + ", " + OCR_LAYOUT_FIELDS
     id_cols = tuple(id_cols)
-    names = [
+    names = (
         "para_id", "n_lines", "n_words", "left", "top", "right", "bottom",
         "block_type", "justification", "first_line_indent",
-    ]
+    )
+    dtypes = {"block_type": object, "justification": object}
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             per_doc = [raster_layout_blocks(p)[1] for p in pdf[payload_col]]
-            counts = np.fromiter(
-                (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
+            yield pd.DataFrame(
+                _explode(pdf, id_cols, per_doc, names, dtypes)[0]
             )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in per_doc:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [[]] * len(names)
-            for i, name in enumerate(names):
-                if name in ("block_type", "justification"):
-                    out[name] = list(t[i])
-                else:
-                    out[name] = np.asarray(t[i], dtype=np.int64)
-            yield pd.DataFrame(out)[list(id_cols) + names]
 
     return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
 
@@ -367,35 +349,20 @@ def ocr_words(
         schema += ", word_lang string"
     schema += ", page_width long, page_height long"
     id_cols = tuple(id_cols)
-    keys = (
+    names = (
         "block_id", "para_id", "line_id", "word_id", "word", "conf",
         "left", "top", "right", "bottom", "baseline_y",
     ) + (("word_lang",) if include_lang else ())
+    dtypes = {"word": object, "conf": np.float64, "word_lang": object}
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            # vectorized explode: one C-speed list.extend per doc, ONE
-            # zip-transpose per batch, np.repeat for the id columns
             docs = raster_batch_results(pdf, cfg, payload_col, langs=langs)
-            counts = np.fromiter(
-                (len(r.words) for r in docs), dtype=np.int64, count=len(docs)
+            out, counts = _explode(
+                pdf, id_cols, [r.words for r in docs], names, dtypes
             )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in docs:
-                rows.extend(r.words)
-            t = list(zip(*rows)) if rows else [[]] * len(keys)
-            for i, k in enumerate(keys):
-                if k in ("word", "word_lang"):
-                    out[k] = list(t[i])
-                elif k == "conf":
-                    out[k] = np.asarray(t[i], dtype=np.float64)
-                else:
-                    out[k] = np.asarray(t[i], dtype=np.int64)
             # page dims: per-doc values repeated per word (the coordinate
             # frame for bottom-left-origin box renderers)
             out["page_width"] = np.repeat(
@@ -406,8 +373,6 @@ def ocr_words(
                 np.fromiter((r.page_height for r in docs), np.int64, len(docs)),
                 counts,
             )
-            yield pd.DataFrame(out)[
-                list(id_cols) + list(keys) + ["page_width", "page_height"]
-            ]
+            yield pd.DataFrame(out)
 
     return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)

@@ -3,9 +3,9 @@
 The canonical input is an Iceberg-style table
 ``pages(url string, warc_ts timestamp, html binary, text string,
 lang string)`` (BASELINE.json input_hint).  At test scale plain parquet
-stands in for Iceberg (FIXTURES.md §1); the reader only assumes
-``spark.read`` semantics, so swapping ``format("iceberg")`` in is a
-one-line change on a real cluster.
+stands in for Iceberg (FIXTURES.md §1); callers scan it with plain
+``spark.read``, so swapping ``format("iceberg")`` in is a one-line change
+on a real cluster.
 
 ``pages_from_documents`` derives a deterministic pages table from the
 driver-provided ``documents`` parquet (TESTDATA.md) by rendering each
@@ -18,7 +18,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.corpus import (
     DEFAULT_PARA_WORDS,
@@ -31,12 +31,6 @@ PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
 PAGES_FROM_DOCS_SCHEMA = "doc_id long, " + PAGES_SCHEMA
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Scan the pages table.  Column pruning and predicate pushdown are
-    Catalyst's job — callers select/filter declaratively."""
-    return spark.read.parquet(path)
 
 
 def render_batch(

@@ -5,16 +5,15 @@ dedup) composes naturally onto a continuously-arriving crawl: extraction
 and the signal filters are stateless (they run inside the same fused
 stage, streaming or not), and the only stateful step — exact dedup —
 becomes ``dropDuplicatesWithinWatermark`` on the content digest, whose
-state is bounded by (dup horizon x ingest rate) rather than corpus size
-(the same bounded-state argument as ``streaming/dedup.py``).  First
-arrival per digest wins (the streaming analog of keep-first: one survivor
+state is bounded by (dup horizon x ingest rate) rather than corpus size.
+First arrival per digest wins (the streaming analog of keep-first: one survivor
 per distinct text either way; which row survives differs — min-id in
 batch, first-seen in the stream — and the batch-equivalence test compares
 the surviving DIGEST set, the invariant both share).
 
 The reference has no streaming surface (SURVEY.md §2.7); this is
 engine-native capability beyond parity, exactly-once via Spark's
-offset/commit log like ``streaming/incremental.py``.
+offset/commit log.
 """
 
 from __future__ import annotations

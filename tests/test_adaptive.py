@@ -5,7 +5,6 @@ reference's in-place classifier adaptation
 (/root/reference/src/api.rs:584-592)."""
 
 import numpy as np
-import pyspark.sql.functions as F
 import pytest
 
 from tesseract_rs_spark.config import ExtractConfig
@@ -89,92 +88,3 @@ def test_register_atlas_validates(spark):
     # worker would corrupt later plain decodes (review r5)
     with pytest.raises(ValueError, match="embedded"):
         register_atlas("eng", {"a": np.zeros((24, 16), dtype=bool)})
-
-
-class TestStreamingSequentialAdaptation:
-    """The sequential in-place adaptation API (adapt_to_word_str,
-    api.rs:584-592) as a stateful stream (streaming/adaptive.py): pages
-    arriving BEFORE any labeled example decode with the embedded models;
-    pages after adaptation decode with everything learned so far; the
-    final state equals the batch operator's atlas."""
-
-    def test_order_dependence_and_batch_equivalence(self, spark, tmp_path):
-        import os
-        import time
-
-        from tesseract_rs_spark.streaming.adaptive import stream_adaptive_ocr
-        from tesseract_rs_spark.kernels.raster import golden_raster_text
-
-        heldout = "fox jug zip quw bem dyn"
-        held_page = bytearray(render_page(heldout, tur_every=1))
-        schema = "engine string, doc_id long, html binary, truth string"
-        in_dir = tmp_path / "in"
-        # trigger 1: the held-out page arrives UNLABELED, pre-adaptation
-        spark.createDataFrame(
-            [("e1", 0, held_page, None)], schema
-        ).coalesce(1).write.parquet(str(in_dir / "f=0"))
-        # trigger 2: the labeled corpus + the same page again
-        rows = [
-            ("e1", 10 + i, bytearray(render_page(t, tur_every=1)), t)
-            for i, t in enumerate(_TEXTS)
-        ] + [("e1", 99, held_page, None)]
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(in_dir / "f=1")
-        )
-        # pin trigger order by file mtime (FileStreamSource sorts on it)
-        now = time.time()
-        for sub, ts in (("f=0", now - 100), ("f=1", now)):
-            for f in (in_dir / sub).iterdir():
-                os.utime(f, (ts, ts))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(in_dir) + "/*")
-        )
-        q = (
-            stream_adaptive_ocr(stream)
-            .writeStream.format("memory")
-            .queryName("adapt_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = {
-            r["doc_id"]: r
-            for r in spark.sql("SELECT * FROM adapt_stream").collect()
-        }
-        assert set(got) == {0, 10, 11, 12, 99}
-        golden = golden_raster_text(heldout)
-        # pre-adaptation: embedded models only — no atlas, imperfect conf
-        assert got[0]["adapted_chars"] == 0
-        assert got[0]["mean_conf"] < 100
-        # post-adaptation: the SAME page decodes exactly at conf 100
-        seen = {ch for t in _TEXTS for ch in t if ch != " "}
-        assert got[99]["adapted_chars"] == len(seen)
-        assert got[99]["mean_conf"] == 100
-        assert got[99]["text"] == golden
-        # the labeled pages themselves decode adapted in their trigger
-        for i, t in enumerate(_TEXTS):
-            assert got[10 + i]["mean_conf"] == 100
-            assert got[10 + i]["text"] == golden_raster_text(t)
-        # batch equivalence: the stream's final decode == ocr_text_adapted
-        # with learn_glyphs over the same labeled set
-        labeled_df = spark.createDataFrame(
-            [
-                (f"u{i}", bytearray(render_page(t, tur_every=1)), t)
-                for i, t in enumerate(_TEXTS)
-            ],
-            "url string, html binary, truth string",
-        )
-        batch = ocr_text_adapted(
-            spark.createDataFrame(
-                [("held", held_page)], "url string, html binary"
-            ),
-            learn_glyphs(labeled_df),
-            ExtractConfig(),
-        ).collect()[0]
-        assert (batch["text"], batch["mean_conf"]) == (
-            got[99]["text"],
-            got[99]["mean_conf"],
-        )

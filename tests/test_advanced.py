@@ -15,7 +15,6 @@ from tesseract_rs_spark.functions.multimodal import (
 from tesseract_rs_spark.kernels.raster import raster_symbols, render_page
 from tesseract_rs_spark.operators.multipage import process_pages
 from tesseract_rs_spark.operators.ocr import ocr_layout, ocr_symbols
-from tesseract_rs_spark.streaming.incremental import stream_extract
 
 
 class TestMultiPage:
@@ -84,30 +83,90 @@ class TestLayoutOp:
         assert rows[0]["left"] == 16 and rows[0]["top"] == 16
 
 
-class TestStreaming:
-    def test_incremental_extract_exactly_once(self, spark, tmp_path):
-        from tesseract_rs_spark.corpus import make_corpus
+def test_exploding_operators_equal_their_kernels(spark):
+    """One batch of two pages and one corrupt payload through each
+    exploding raster operator: per page, the operator rows are exactly
+    its kernel's rows with the ids repeated in front, the corrupt page
+    explodes to zero rows, and the declared schema holds."""
+    from tesseract_rs_spark.kernels.raster import (
+        extract_raster_doc,
+        raster_layout_blocks,
+        raster_symbol_attrs,
+    )
+    from tesseract_rs_spark.operators.ocr import (
+        OCR_LAYOUT_FIELDS,
+        OCR_SYMBOL_ATTR_FIELDS,
+        OCR_SYMBOL_FIELDS,
+        OCR_WORD_FIELDS,
+        ocr_symbol_attrs,
+        ocr_words,
+    )
 
-        inp, out, ckpt = (
-            str(tmp_path / "in"),
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
+    payloads = [
+        render_page("abc def ghi jkl mno pqr", sup_every=4, drop_every=5),
+        render_page(
+            "stu vwx yz1 234", words_per_line=2, lines_per_para=1, sub_every=3
+        ),
+        b"PAGE but not a page",
+    ]
+    ids = "url string, doc_id bigint"
+    pages = spark.createDataFrame(
+        [(f"u{i}", 10 + i, bytearray(p)) for i, p in enumerate(payloads)],
+        "url string, doc_id long, html binary",
+    ).coalesce(1)
+    id_cols = ("url", "doc_id")
+    cfg = ExtractConfig()
+
+    def doc_words(p):
+        r = extract_raster_doc(
+            p, timeout_ms=cfg.page_timeout_ms, langs=cfg.langs, oem=cfg.oem,
+            roi=cfg.roi_rect, orient_margin=cfg.min_orientation_margin,
         )
-        pages, golden = make_corpus("smoke")
-        first, second = pages.iloc[:40], pages.iloc[40:]
-        spark.createDataFrame(first).write.parquet(inp)
-        q = stream_extract(spark, inp, out, ckpt)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(out).count()
-        assert n1 == 40
-        # new files arrive -> re-run processes ONLY the delta
-        spark.createDataFrame(second).write.mode("append").parquet(inp)
-        q2 = stream_extract(spark, inp, out, ckpt)
-        q2.awaitTermination(120)
-        result = spark.read.parquet(out)
-        assert result.count() == 64  # no duplicates: offsets committed
-        ok = result.filter("status = 'ok'").count()
-        assert ok == len(golden[golden.expected_status == "ok"])
+        return [(*w, r.page_width, r.page_height) for w in r.words]
+
+    def symbols(p):
+        return [
+            (*row[:6], [tuple(a) for a in row[6]])
+            for row in raster_symbols(p, None, 3)[1]
+        ]
+
+    cases = [
+        (ocr_symbols(pages, id_cols=id_cols), OCR_SYMBOL_FIELDS, symbols),
+        (
+            ocr_symbol_attrs(pages, id_cols=id_cols),
+            OCR_SYMBOL_ATTR_FIELDS,
+            lambda p: raster_symbol_attrs(p)[1],
+        ),
+        (
+            ocr_layout(pages, id_cols=id_cols),
+            OCR_LAYOUT_FIELDS,
+            lambda p: raster_layout_blocks(p)[1],
+        ),
+        (
+            ocr_words(pages, id_cols=id_cols),
+            OCR_WORD_FIELDS + ", page_width long, page_height long",
+            lambda p: [w[:11] + w[12:] for w in doc_words(p)],
+        ),
+        (
+            ocr_words(pages, id_cols=id_cols, include_lang=True),
+            OCR_WORD_FIELDS
+            + ", word_lang string, page_width long, page_height long",
+            doc_words,
+        ),
+    ]
+    for df, fields, kernel in cases:
+        assert df.schema == spark.createDataFrame([], f"{ids}, {fields}").schema
+        got = [
+            tuple([tuple(a) for a in v] if isinstance(v, list) else v for v in row)
+            for row in df.collect()
+        ]
+        want = [
+            (f"u{i}", 10 + i, *row)
+            for i, p in enumerate(payloads)
+            for row in kernel(p)
+        ]
+        assert want and not kernel(payloads[2]), fields
+        assert got == want, fields
 
 
 class TestMultimodal:
@@ -328,250 +387,6 @@ class TestResize:
         # refuse at call time, never a silent all-bad_geometry run
         with pytest.raises(ValueError, match="downscale kernel"):
             resize_images(df, scale=2, method="area")
-
-
-class TestStatefulStreaming:
-    """applyInPandasWithState sessionization must converge to the batch
-    answer across micro-batches (SURVEY §2.7 streaming surface)."""
-
-    def test_stream_sessionize_equals_batch(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-
-        from tesseract_rs_spark.functions.events import sessionize
-        from tesseract_rs_spark.streaming.stateful import stream_sessionize
-
-        events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-            F.col("user_id").cast("long"),
-            F.col("event_id").cast("long"),
-            F.col("ts").cast("timestamp"),
-        )
-        # two time-ordered files -> two micro-batches carrying state across
-        median = events.approxQuantile("event_id", [0.5], 0.0)[0]
-        in_dir = tmp_path / "in"
-        events.filter(F.col("ts") <= F.lit("2026-01-15")).coalesce(1).write.parquet(
-            str(in_dir / "f=0")
-        )
-        events.filter(F.col("ts") > F.lit("2026-01-15")).coalesce(1).write.parquet(
-            str(in_dir / "f=1")
-        )
-        stream = (
-            spark.readStream.schema("user_id long, event_id long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(in_dir) + "/*")
-        )
-        q = (
-            stream_sessionize(stream)
-            .writeStream.format("memory")
-            .queryName("sess_stream")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        emitted = spark.sql("SELECT * FROM sess_stream").toPandas()
-        # update mode appends every emission; the final state per user is
-        # the emission with the largest n_events (monotone per user)
-        final = emitted.sort_values("n_events").groupby("user_id").last()
-        batch = {
-            r["user_id"]: (r["n_sessions"], r["n_events"], r["max_session_events"])
-            for r in sessionize(events).collect()
-        }
-        got = {
-            int(uid): (int(r["n_sessions"]), int(r["n_events"]), int(r["max_session_events"]))
-            for uid, r in final.iterrows()
-        }
-        assert got == batch
-
-
-class TestStreamStreamJoin:
-    """Watermarked stream-stream time-bounded join: two live parquet
-    streams (views, purchases) inner-join on user within a time horizon;
-    the streamed result must equal the batch twin with the identical
-    condition, across micro-batch boundaries on BOTH sides."""
-
-    def test_stream_join_equals_batch(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-
-        from tesseract_rs_spark.streaming.joins import (
-            stream_time_bounded_join,
-            time_bounded_join,
-        )
-
-        events = spark.read.parquet(
-            "/root/testdata/sf0.001/events.parquet"
-        ).select(
-            F.col("event_id").cast("long"),
-            F.col("ts").cast("timestamp"),
-            F.col("user_id").cast("long"),
-            "event_type",
-            F.col("value").cast("double"),
-            "props",
-        )
-        views = events.filter(F.col("event_type") == "view")
-        purchases = events.filter(F.col("event_type") == "purchase")
-        cut = "2026-01-15"
-        dirs = {}
-        for name, df in (("views", views), ("purchases", purchases)):
-            d = tmp_path / name
-            # two time-ordered files per side -> the join must carry
-            # buffered state across micro-batch boundaries on both sides
-            df.filter(F.col("ts") <= F.lit(cut)).coalesce(1).write.parquet(
-                str(d / "f=0")
-            )
-            df.filter(F.col("ts") > F.lit(cut)).coalesce(1).write.parquet(
-                str(d / "f=1")
-            )
-            dirs[name] = str(d) + "/*"
-        joined = stream_time_bounded_join(
-            spark,
-            dirs["views"],
-            dirs["purchases"],
-            horizon="30 minutes",
-            max_files_per_trigger=1,
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("ss_join")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["l_id"], r["r_id"])
-            for r in spark.sql("SELECT * FROM ss_join").collect()
-        }
-        batch = time_bounded_join(
-            views, purchases, horizon="30 minutes"
-        ).collect()
-        want = {(r["l_id"], r["r_id"]) for r in batch}
-        assert got == want
-        assert want  # non-vacuous: the horizon actually matches pairs
-        # and the horizon actually CUTS: widening it adds pairs
-        wider = time_bounded_join(views, purchases, horizon="4 hours")
-        assert wider.count() > len(want)
-
-
-class TestStreamDedup:
-    """Streaming exact dedup: duplicates within AND across micro-batches
-    collapse to one row per content digest; unique content all passes."""
-
-    def test_stream_dedup_within_and_across_batches(self, spark, tmp_path):
-        import pandas as pd
-
-        from tesseract_rs_spark.streaming.dedup import stream_dedup
-
-        t0 = pd.Timestamp("2026-01-01 10:00:00")
-        mk = lambda url, text, mins: {
-            "url": url,
-            "warc_ts": t0 + pd.Timedelta(minutes=mins),
-            "text": text,
-        }
-        # batch 0: A, B, dup-of-A (same batch); batch 1: dup-of-B
-        # (across batches, inside the horizon), C (new)
-        in_dir = tmp_path / "in"
-        spark.createDataFrame(
-            pd.DataFrame(
-                [mk("u1", "alpha", 0), mk("u2", "beta", 1), mk("u3", "alpha", 2)]
-            )
-        ).coalesce(1).write.parquet(str(in_dir / "f=0"))
-        spark.createDataFrame(
-            pd.DataFrame([mk("u4", "beta", 3), mk("u5", "gamma", 4)])
-        ).coalesce(1).write.parquet(str(in_dir / "f=1"))
-        stream = (
-            spark.readStream.schema("url string, warc_ts timestamp, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(in_dir) + "/*")
-        )
-        q = (
-            stream_dedup(stream, horizon="1 hour")
-            .writeStream.format("memory")
-            .queryName("dedup_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        out = spark.sql("SELECT text, url FROM dedup_stream").toPandas()
-        assert sorted(out["text"]) == ["alpha", "beta", "gamma"]
-        # first arrival wins across batches: beta's survivor is batch-0's
-        assert set(out[out["text"] == "beta"]["url"]) == {"u2"}
-        assert set(out[out["text"] == "gamma"]["url"]) == {"u5"}
-
-
-class TestWatermarkLateData:
-    """withWatermark bounded-lateness semantics (SURVEY §2.7 streaming):
-    a late row INSIDE the lateness bound is counted; a row older than the
-    watermark is dropped; finalized windows emit exactly once."""
-
-    def test_watermark_drops_too_late_rows(self, spark, tmp_path):
-        import pandas as pd
-
-        from tesseract_rs_spark.streaming.windowed import windowed_counts_stream
-
-        def write(sub, rows):
-            pdf = pd.DataFrame(
-                rows, columns=["event_id", "ts", "event_type"]
-            )
-            pdf["ts"] = pd.to_datetime(pdf["ts"])
-            spark.createDataFrame(pdf).coalesce(1).write.parquet(
-                str(tmp_path / "in" / sub)
-            )
-
-        import time
-
-        t = "2026-01-01 "
-        # batch 0: hours 00 (x2), 01, and a clock event at 05:30 that
-        # advances the watermark to 03:30 (lateness = 2 hours)
-        write("f=0", [
-            (1, t + "00:05:00", "click"),
-            (2, t + "00:20:00", "click"),
-            (3, t + "01:10:00", "view"),
-            (4, t + "05:30:00", "click"),
-        ])
-        time.sleep(1.1)  # file mtime defines micro-batch order
-        # batch 1: a late-but-allowed row (hour 04 is still open).  Note
-        # Spark filters late rows with the PREVIOUS batch's watermark
-        # (SPARK-40925 watermarkForLateEvents), so the beyond-watermark
-        # probe must arrive one batch after the clock's batch.
-        write("f=1", [
-            (6, t + "04:15:00", "view"),
-        ])
-        time.sleep(1.1)
-        # batch 2: one row BEYOND the watermark (00:40 < 03:30 -> DROPPED,
-        # hour 00 already finalized) and a clock at 08:00 that finalizes
-        # hours 04/05 in the trailing no-data flush batch
-        write("f=2", [
-            (5, t + "00:40:00", "click"),
-            (7, t + "08:00:00", "click"),
-        ])
-        q = (
-            windowed_counts_stream(
-                spark, str(tmp_path / "in") + "/*", lateness="2 hours",
-                max_files_per_trigger=1,
-            )
-            .writeStream.format("memory")
-            .queryName("wm_counts")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["hour"], r["event_type"]): r["n"]
-            for r in spark.sql("SELECT * FROM wm_counts").collect()
-        }
-        # hour 00 finalized with exactly the 2 on-time clicks: the
-        # beyond-watermark row 5 was dropped, not appended as a new row
-        assert got[("2026-01-01 00", "click")] == 2
-        assert got[("2026-01-01 01", "view")] == 1
-        # the within-bound late row WAS counted
-        assert got[("2026-01-01 04", "view")] == 1
-        assert got[("2026-01-01 05", "click")] == 1
-        # hour 08's window never finalized (watermark stopped at 06:00)
-        assert ("2026-01-01 08", "click") not in got
-        assert len(got) == 4
 
 
 class TestStreamCuration:

@@ -112,37 +112,6 @@ def test_lineage_equals_recount_of_written_data(spark, pages_path, tmp_path):
         assert {k: r[k] for k in want} == want, r["bucket"]
 
 
-class TestBucketing:
-    """Shuffle-free co-located joins via catalog bucketing
-    (plans/bucketing.py): pay the shuffle once at write time."""
-
-    def test_bucketed_join_has_no_exchange(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-
-        from tesseract_rs_spark.plans.bucketing import bucketed_join, write_bucketed
-
-        li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
-            F.col("o_orderkey").alias("l_orderkey"), "o_orderdate"
-        )
-        write_bucketed(li, "li_b", "l_orderkey", n_buckets=8)
-        write_bucketed(orders, "ord_b", "l_orderkey", n_buckets=8)
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = bucketed_join(spark, "li_b", "ord_b", "l_orderkey")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            # and it computes the same answer as the shuffled join
-            want = li.join(orders, "l_orderkey").count()
-            assert joined.count() == want
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.sql("DROP TABLE IF EXISTS li_b")
-            spark.sql("DROP TABLE IF EXISTS ord_b")
-
-
 def test_staging_prunes_mismatches_and_cleans_up(spark, pages_path, tmp_path):
     """VERDICT r3 scan fix + review hardening: per-group reads must NOT
     rescan the whole input (the staged `bucket` partition column prunes
