@@ -8,21 +8,27 @@ This is the web-text analog of the reference's page-analysis pipeline
 1. **decode** — bytes -> str with strict UTF-8 validation; invalid UTF-8 is
    an error row, never an exception (reference Utf8Error,
    /root/reference/src/error.rs:13-14).
-2. **segment** — a single-pass tag tokenizer builds a flat list of *blocks*
-   (the reference's RIL_BLOCK level, /root/reference/src/enums.rs:48-54);
-   ``<br>`` produces lines within a block (RIL_TEXTLINE), whitespace splits
-   words (RIL_WORD).
+2. **segment** — one ``re.split`` tokenizes the page; a loop over its
+   tokens, dispatching each through bounded token and tag-name caches,
+   builds a flat list of *blocks* (the reference's RIL_BLOCK level,
+   ``enums.rs``).
+   ``<br>`` produces lines within a block (RIL_TEXTLINE); a line's words
+   (RIL_WORD) are its ``' '``-separated parts and are only split out where
+   word rows are emitted.  A block whose ancestry is hard boilerplate or
+   negative-class is dropped whatever its words, so it is never
+   normalized: it keeps only its source span and whether it holds text.
 3. **classify** — densitometric boilerplate classification (link density +
    word count, Boilerpipe-style) combined with semantic-tag and class/id
    heuristics decides which blocks are main content; the per-block score
    doubles as the confidence channel (reference confidences are 0-100,
    /root/reference/src/result_iterator.rs:65-71).
-4. **assemble** — words joined by ``' '``, lines by ``'\\n'``, blocks by
-   ``'\\n\\n'``, one trailing ``'\\n'`` — the byte-identical invariant
-   surface (get_utf8_text contract, SURVEY.md §2.4).
+4. **assemble** — lines joined by ``'\\n'``, blocks by ``'\\n\\n'``, one
+   trailing ``'\\n'`` (words inside a line are already ``' '``-joined) —
+   the byte-identical invariant surface (get_utf8_text contract,
+   SURVEY.md §2.4).
 
 Everything here is deterministic: pure functions of (bytes, config).  No
-I/O, no randomness, no wall-clock.
+I/O, no randomness, no wall-clock (the optional page deadline aside).
 """
 
 from __future__ import annotations
@@ -31,7 +37,8 @@ import functools as _functools
 import html as _htmllib
 import re
 import time as _time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from itertools import accumulate as _accumulate
 
 from tesseract_rs_spark.config import (
     MODE_AUTO,
@@ -44,34 +51,36 @@ from tesseract_rs_spark.config import (
 # Tokenizer
 # ---------------------------------------------------------------------------
 
-# One compiled regex, applied once per document.  Raw-text elements
-# (script/style/...) are consumed whole so their contents never reach the
-# text stream; comments and doctypes likewise.
-_TOKEN_RE = re.compile(
-    r"""
+# Raw-text elements (script/style/...) are consumed whole so their contents
+# never reach the text stream; comments and doctypes likewise.
+_RAW_TAGS = ("script", "style", "noscript", "svg", "template")
+
+# The whole tokenizer is ONE capturing group, so ``re.split`` returns
+# ``[text, token] * n_tokens + [tail_text]`` in a single C call: no
+# per-token Match objects and one string allocation per token.  Each raw
+# element is its own alternative with a literal close tag (instead of a
+# named group and a backreference, which would add a capture per token).
+_SPLIT_RE = re.compile(
+    r"""(
       <!--.*?(?:-->|$)                                   # comment
     | <!(?:[^>]*)>                                       # doctype / CDATA-ish
-    | <(?P<raw>script|style|noscript|svg|template)\b[^>]*?(?:/>|>.*?(?:</(?P=raw)\s*>|$))
-    | <(?P<tag>/?[a-zA-Z][a-zA-Z0-9:-]*)
+    """
+    + "".join(
+        rf"""| <{t}\b[^>]*?(?:/>|>.*?(?:</{t}\s*>|$))
+    """
+        for t in _RAW_TAGS
+    )
+    + r"""| </?[a-zA-Z][a-zA-Z0-9:-]*
         (?:"[^"]*"|'[^']*'|[^>"'])*
       >
-    """,
+    )""",
     re.DOTALL | re.IGNORECASE | re.VERBOSE,
 )
-
-# Split form of the tokenizer: the whole match wrapped in ONE capturing
-# group so ``re.split`` returns [text, whole, raw, tag] * n_tokens +
-# [tail_text] in a single C call — no per-token Match objects (the
-# round-2 per-token hot-loop ceiling, VERDICT r2 ask #2).  Offsets
-# reconstruct from cumulative len(text) + len(whole).  The close slash
-# is part of the tag group and the attrs are NOT captured (r7): re.split
-# allocates one string per capture group per token, so dropping the
-# close/attrs groups removes ~180 allocations per document — attrs are
-# recovered with one slice of the whole token, and only for the ~1-in-5
-# tokens (opening block tags) that consult them.
-_SPLIT_RE = re.compile(
-    "(" + _TOKEN_RE.pattern + ")", re.DOTALL | re.IGNORECASE | re.VERBOSE
-)
+# A token's head: ``<`` or ``</`` and its tag name.  Every token that does
+# not start with ``<!`` has one; a raw element's head names a raw tag
+# (``<svg:x`` too, as ``\b`` matches before ``:``), so it dispatches as an
+# inline tag, like every name outside the block set, ``br`` and ``a``.
+_TAG_HEAD_RE = re.compile(r"</?[a-zA-Z][a-zA-Z0-9:-]*")
 
 _CLASS_ID_RE = re.compile(
     r"""(?:class|id)\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))""", re.IGNORECASE
@@ -132,32 +141,74 @@ STATUS_TIMEOUT = "timeout"
 # cooperative deadline check cadence (tokens between clock reads)
 _DEADLINE_STRIDE = 2048
 
-# tag string (exact case, leading '/' for close tags) -> (lower_name,
-# is_block, is_void, is_hard, is_content, is_br, is_a, closing): one
-# dict probe replaces 4+ set-membership checks, a .lower() and the
-# close-slash compare per token.  Bounded so adversarial pages with
-# unbounded distinct tag names can't grow worker memory.
-_TAG_INFO: dict = {}
-_TAG_INFO_MAX = 4096
+# Per-token dispatch: what a token does to the segmenter.  The singletons
+# are compared by identity; a block tag's info is a tuple
+# (name, closing, drops, keeps): an opening tag drops its contents if it
+# is hard boilerplate or carries a negative class/id, and keeps them if it
+# is article/main or carries a positive class/id.
+_INERT = ("inert",)  # comment, doctype, raw element, inline tag, </br>
+_BR = ("br",)
+_A_OPEN = ("a",)
+_A_CLOSE = ("/a",)
+_VOID = ("void",)
+
+# Two bounded caches, each capped in entries and in key length so neither
+# many distinct tokens nor one huge token can grow worker memory:
+# - token string -> dispatch info, probed once per token by the segmenter.
+#   Hits need repeated tokens: ``<li>``, ``</a>``, template links such as
+#   ``<a href="/home">`` (97.8% of tokens on the html_extract corpus; 67% on
+#   the same pages with every href and id made unique).  Cleared when full.
+# - tag head (exact case) -> dispatch info from the name alone: a token
+#   missing from the first cache costs one head match and one probe here,
+#   plus the class/id scan for a block-open tag with attributes.  Tag names
+#   repeat on any input, so this one stops filling when full.
+_TOKEN_INFO: dict = {}
+_HEAD_INFO: dict = {}
+_TOKEN_INFO_MAX = 4096
+_TOKEN_KEY_MAX = 256
 
 
-def _tag_info(tag: str) -> tuple:
-    t = tag.lower()
-    closing = t.startswith("/")
-    if closing:
-        t = t[1:]
-    info = (
-        t,
-        t in _BLOCK_TAGS,
-        t in _VOID_TAGS,
-        t in _HARD_BOILERPLATE_TAGS,
-        t in _CONTENT_TAGS,
-        t == "br",
-        t == "a",
-        closing,
-    )
-    if len(_TAG_INFO) < _TAG_INFO_MAX:
-        _TAG_INFO[tag] = info
+def _head_info(head: str) -> tuple:
+    """Dispatch info of a tag head, cached in :data:`_HEAD_INFO`; for a
+    block-open tag, the drop/keep flags of its name alone."""
+    closing = head[1] == "/"
+    name = head[1 + closing :].lower()
+    if name == "br":
+        info = _INERT if closing else _BR
+    elif name == "a":
+        info = _A_CLOSE if closing else _A_OPEN
+    elif name not in _BLOCK_TAGS:
+        info = _INERT
+    elif name in _VOID_TAGS:
+        info = _VOID
+    else:
+        info = (name, closing, name in _HARD_BOILERPLATE_TAGS, name in _CONTENT_TAGS)
+    if len(_HEAD_INFO) < _TOKEN_INFO_MAX and len(head) <= _TOKEN_KEY_MAX:
+        _HEAD_INFO[head] = info
+    return info
+
+
+def _token_info(token: str) -> tuple:
+    """Dispatch info of one tokenizer token, cached in :data:`_TOKEN_INFO`."""
+    if token[1] == "!":
+        return _INERT  # comments are often unique per page: never cached
+    head = _TAG_HEAD_RE.match(token).group()
+    info = _HEAD_INFO.get(head) or _head_info(head)
+    if len(info) == 4 and not info[1]:  # block-open: add its class/id flags
+        attrs = token[len(head) : -1]
+        if attrs and ("class" in attrs or "id" in attrs or "Id" in attrs or "ID" in attrs or "Class" in attrs or "CLASS" in attrs):
+            name, _, drops, keeps = info
+            for am in _CLASS_ID_RE.finditer(attrs):
+                val = am.group(2) or am.group(3) or am.group(4) or ""
+                if _NEGATIVE_CLASS_RE.search(val):
+                    drops = True
+                elif _POSITIVE_CLASS_RE.search(val):
+                    keeps = True
+            info = (name, False, drops, keeps)
+    if len(token) <= _TOKEN_KEY_MAX:
+        if len(_TOKEN_INFO) >= _TOKEN_INFO_MAX:
+            _TOKEN_INFO.clear()
+        _TOKEN_INFO[token] = info
     return info
 
 
@@ -169,24 +220,25 @@ class PageTimeout(Exception):
 
 @dataclass(slots=True)
 class Block:
-    """One segmented block (RIL_BLOCK analog) before/after classification."""
+    """One segmented block (RIL_BLOCK analog) that holds words and is not
+    structurally dropped; classification sets ``kept``/``score``."""
 
     tag: str
     src_start: int
     src_end: int
-    parts: list = field(default_factory=list)  # str parts; "\x00" marks <br>
-    anchor_chars: int = 0
-    total_chars: int = 0
-    in_hard_boiler: bool = False
-    in_content: bool = False
-    in_negative: bool = False
-    in_positive: bool = False
-    # filled by finalize():
-    lines: list = field(default_factory=list)  # list[list[str]] words per line
-    n_words: int = 0
-    link_density: float = 0.0
+    lines: list  # str per line, words joined by ' '
+    n_words: int
+    link_density: float
+    hard_keep: bool  # article/main or positive-class ancestry
+    spaced: bool  # preserve_interword_spaces: each line is ONE word
     kept: bool = False
     score: float = CONF_DROPPED
+
+    def line_words(self) -> list:
+        """Words per line (RIL_WORD level)."""
+        if self.spaced:
+            return [[ln] for ln in self.lines]
+        return [ln.split(" ") for ln in self.lines]
 
 
 @dataclass(slots=True)
@@ -204,14 +256,12 @@ class DocResult:
     failure_spans: list  # [(start, end)] source-offset spans of dropped/bad regions
 
 
-def _finalize_block(block: Block, preserve_spaces: bool) -> None:
-    raw = "".join(block.parts)
-    lines = []
-    n_words = 0
-    content_chars = 0
+def _clean_lines(parts: list, preserve_spaces: bool) -> list:
+    """A block's non-empty lines, whitespace-normalized, not unescaped."""
+    raw = "".join(parts)
+    out = []
     # most blocks have no <br> marker — skip the split allocation
-    raw_lines = raw.split("\x00") if "\x00" in raw else (raw,)
-    for raw_line in raw_lines:
+    for raw_line in raw.split("\x00") if "\x00" in raw else (raw,):
         if preserve_spaces:
             # preserve_interword_spaces=1: keep space runs, normalize other ws
             line = _TAB_NL_RE.sub(" ", raw_line).strip(" ")
@@ -221,75 +271,80 @@ def _finalize_block(block: Block, preserve_spaces: bool) -> None:
         else:
             line = _WS_RE.sub(" ", raw_line).strip()
         if line:
-            line = _htmllib.unescape(line)
-            if preserve_spaces:
-                words = [line]
-                content_chars += len(line)
-            else:
-                words = line.split(" ")
-                # sum of word lengths == line length minus the separators
-                content_chars += len(line) - len(words) + 1
-            n_words += len(words)
-            lines.append(words)
-    block.lines = lines
-    block.n_words = n_words
-    block.link_density = (
-        min(1.0, block.anchor_chars / block.total_chars) if block.total_chars else 0.0
+            out.append(line)
+    return out
+
+
+def _live_block(
+    tag: str, start: int, end: int, parts: list, total: int, anchor: int,
+    hard_keep: bool, preserve_spaces: bool,
+) -> Block | None:
+    """Finalize a block that classification may keep; None if it has no words."""
+    lines = _clean_lines(parts, preserve_spaces)
+    if not lines:
+        return None
+    n_words = 0
+    for i, line in enumerate(lines):
+        if "&" in line:
+            lines[i] = line = _htmllib.unescape(line)
+        # a line's words are its ' '-separated parts (empty ones included)
+        n_words += 1 if preserve_spaces else line.count(" ") + 1
+    return Block(
+        tag, start, end, lines, n_words,
+        min(1.0, anchor / total) if total else 0.0,
+        hard_keep, preserve_spaces,
     )
-    block.total_chars = content_chars
 
 
-def _segment(doc: str, cfg: ExtractConfig, deadline: float | None = None) -> list:
-    """Single-pass tokenize + block segmentation.  Returns all non-empty
-    blocks in source order with ancestry flags captured at flush time
-    (flush always precedes the depth change, so flags are exact).
+def _segment(doc: str, cfg: ExtractConfig, deadline: float | None = None):
+    """Single-pass tokenize + block segmentation.  Returns
+    ``(n_blocks, recs)``: the count of all blocks (a block opens at its
+    first non-space text or ``<br>``) and, in source order, every block
+    that holds words — a finalized :class:`Block`, or a
+    ``(src_start, src_end)`` tuple for a block that hard-boilerplate or
+    negative-class ancestry drops (AUTO mode only).  Ancestry is fixed for
+    a block's lifetime: every block tag flushes the open block first.
 
-    Hot path (VERDICT r2 ask #2): ONE C-level ``re.split`` yields
-    ``[text, whole, raw, close, tag, attrs] * n + [tail]`` — no per-token
-    Match objects or ``.group()``/``.span()`` calls; source offsets
-    reconstruct from cumulative lengths, and per-tag classification is a
-    single dict probe (:data:`_TAG_INFO`).  Every ``_DEADLINE_STRIDE``
-    tokens the wall clock is checked against ``deadline`` (monotonic
-    seconds) so a pathological page aborts with :class:`PageTimeout`
-    instead of stalling the task."""
-    blocks: list = []
-    tag_stack: list = []  # (tag, hard, content, neg, pos)
-    pos = 0
+    Hot path: ONE C-level ``re.split`` yields ``[text, token] * n + [tail]``;
+    source offsets reconstruct from cumulative lengths, and each token's
+    dispatch is one probe of :data:`_TOKEN_INFO`.  Every
+    ``_DEADLINE_STRIDE`` tokens the wall clock is checked against
+    ``deadline`` (monotonic seconds) so a pathological page aborts with
+    :class:`PageTimeout` instead of stalling the task."""
+    closed: list = []  # (parts, start, end, total, anchor, tag, dead, keep)
     raw_mode = cfg.mode == MODE_RAW
-    single = cfg.mode == MODE_SINGLE_BLOCK
-    plain = not (single or raw_mode)
-    # ancestry depth counters as locals (faster than dict/attr access)
-    d_hard = d_content = d_neg = d_pos = d_a = 0
+    plain = not (raw_mode or cfg.mode == MODE_SINGLE_BLOCK)
+    auto = cfg.mode == MODE_AUTO
+    preserve = cfg.preserve_interword_spaces
+    has_nul = "\x00" in doc  # ONE scan per doc instead of one per token
+    # Ancestry state of blocks opened now: structurally dropped (hard
+    # boilerplate or negative-class ancestor, AUTO only), and kept
+    # (article/main or positive-class ancestor).  Each open-tag stack
+    # entry saves the state from before its push, so popping to an entry
+    # restores it without depth counters.
+    dead = keep = False
+    tag_stack: list = []  # (name, dead, keep) before the push
     cur_tag = "body"
-    cur: Block | None = None  # allocated lazily on first text
+    d_a = 0  # <a> depth
+    # the open block: its text parts ("\x00" marks <br>), None if none is
+    # open; start offset, text chars and anchor-text chars
+    parts: list | None = None
+    start = total = anchor = 0
 
-    def flush(end: int) -> None:
-        nonlocal cur
-        if cur is not None:
-            cur.src_end = end
-            cur.in_hard_boiler = d_hard > 0
-            cur.in_content = d_content > 0
-            cur.in_negative = d_neg > 0
-            cur.in_positive = d_pos > 0
-            blocks.append(cur)
-            cur = None
-
-    parts = _SPLIT_RE.split(doc)
-    texts = parts[0::4]
-    tags = parts[3::4]
-    # C-level passes resolve every tag's dispatch tuple (None for
-    # comments/doctypes and not-yet-cached tags — the loop backfills)
-    # and every part length (offsets reconstruct by accumulation)
-    infos = map(_TAG_INFO.get, tags)
-    tlens = map(len, texts)
-    wlens = map(len, parts[1::4])
+    split = _SPLIT_RE.split(doc)
+    texts = split[0::2]
+    tokens = split[1::2]
+    # source offsets in one C pass: offs[2k] / offs[2k + 1] are where
+    # token k starts / ends
+    offs = list(_accumulate(map(len, split)))
+    end = 0
     n_tokens = 0
     timed = deadline is not None  # hoisted: the common case pays no
     # counter arithmetic per token (page_timeout_ms defaults to None)
-    has_nul = "\x00" in doc  # ONE scan per doc instead of one per token
-    # zip stops at the token count; parts[-1] is the tail text
-    for text, whole, tlen, wlen, tag, info in zip(
-        texts, parts[1::4], tlens, wlens, tags, infos
+    # zip stops at the token count; split[-1] is the tail text.  The
+    # lazy ``map`` sees infos the loop caches for earlier tokens.
+    for text, token, info, tok_start, end in zip(
+        texts, tokens, map(_TOKEN_INFO.get, tokens), offs[0::2], offs[1::2]
     ):
         if timed:
             n_tokens += 1
@@ -297,158 +352,148 @@ def _segment(doc: str, cfg: ExtractConfig, deadline: float | None = None) -> lis
                 raise PageTimeout
         if text:
             if not text.isspace():
-                if cur is None:
-                    cur = Block(tag=cur_tag, src_start=pos, src_end=pos)
+                tlen = len(text)
+                if parts is None:
+                    parts = []
+                    start = tok_start - tlen
+                    total = anchor = 0
                 if has_nul and "\x00" in text:
                     text = text.replace("\x00", " ")
-                cur.parts.append(text)
-                cur.total_chars += tlen
+                parts.append(text)
+                total += tlen
                 if d_a > 0:
-                    cur.anchor_chars += tlen
+                    anchor += tlen
                 if raw_mode:
-                    cur.parts.append("\x00")
-            elif cur is not None:
-                cur.parts.append(" ")
-        start = pos + tlen
-        pos = start + wlen
-        if tag is None:
-            continue  # comment / doctype / raw-text element
+                    parts.append("\x00")
+            elif parts is not None:
+                parts.append(" ")
         if info is None:
-            info = _tag_info(tag)
-        closing = info[7]
-        if info[5] and not closing:  # <br>
-            if cur is None:
-                cur = Block(tag=cur_tag, src_start=pos, src_end=pos)
-            cur.parts.append("\x00")
+            info = _token_info(token)
+        if info is _INERT:
             continue
-        if info[6]:  # <a>: anchor depth (all modes)
-            if closing:
-                if d_a > 0:
-                    d_a -= 1
-            else:
-                d_a += 1
+        if info is _A_OPEN:  # anchor depth (all modes)
+            d_a += 1
             continue
-        if plain and info[1]:  # block tag
-            tag_name = info[0]
-            if cur is not None:
-                flush(start)
-            if info[2]:  # void
-                continue
-            if not closing:
-                hard = info[3]
-                content = info[4]
-                neg = pos_ = False
-                # attrs recovered by slicing the whole token: it is
-                # '<' + tag + attrs + '>' by construction for this branch
-                attrs = whole[1 + len(tag) : -1]
-                if attrs and ("class" in attrs or "id" in attrs or "Id" in attrs or "ID" in attrs or "Class" in attrs or "CLASS" in attrs):
-                    for am in _CLASS_ID_RE.finditer(attrs):
-                        val = am.group(2) or am.group(3) or am.group(4) or ""
-                        if _NEGATIVE_CLASS_RE.search(val):
-                            neg = True
-                        elif _POSITIVE_CLASS_RE.search(val):
-                            pos_ = True
-                tag_stack.append((tag_name, hard, content, neg, pos_))
-                d_hard += hard
-                d_content += content
-                d_neg += neg
-                d_pos += pos_
-                cur_tag = tag_name
-            else:
-                # pop to matching open tag (forgiving of misnesting)
-                for i in range(len(tag_stack) - 1, -1, -1):
-                    if tag_stack[i][0] == tag_name:
-                        for j in range(len(tag_stack) - 1, i - 1, -1):
-                            _, h, c, n_, p_ = tag_stack.pop(j)
-                            d_hard -= h
-                            d_content -= c
-                            d_neg -= n_
-                            d_pos -= p_
-                        break
-                cur_tag = tag_stack[-1][0] if tag_stack else "body"
-    text = parts[-1]
-    if text and not text.isspace():
-        if cur is None:
-            cur = Block(tag=cur_tag, src_start=pos, src_end=pos)
-        cur.parts.append(text)
-        cur.total_chars += len(text)
-    flush(len(doc))
-    return blocks
-
-
-def _classify(blocks: list, cfg: ExtractConfig) -> None:
-    """Boilerplate classification with one smoothing pass.  Sets
-    ``kept``/``score`` on every block in place."""
-    for b in blocks:
-        if b.n_words == 0:
-            b.kept, b.score = False, CONF_DROPPED
+        if info is _A_CLOSE:
+            if d_a > 0:
+                d_a -= 1
             continue
-        if b.in_hard_boiler or b.in_negative:
-            b.kept, b.score = False, CONF_DROPPED
+        if info is _BR:
+            if parts is None:
+                parts = []
+                start = end
+                total = anchor = 0
+            parts.append("\x00")
             continue
-        if b.in_content or b.in_positive:
-            b.kept, b.score = True, CONF_HARD_KEEP
+        if not plain:
             continue
-        is_heading = b.tag in _HEADING_TAGS
-        if is_heading:
-            # provisional: rescued by the smoothing pass if content follows
-            b.kept, b.score = False, CONF_HEADING
+        # block tag
+        if parts is not None:
+            closed.append((parts, start, tok_start, total, anchor, cur_tag, dead, keep))
+            parts = None
+        if info is _VOID:
             continue
-        if b.n_words >= cfg.min_content_words and b.link_density <= cfg.max_link_density:
-            b.kept = True
-            b.score = round(90.0 - 60.0 * b.link_density, 1)
+        name, closing, drops, keeps = info
+        if not closing:
+            tag_stack.append((name, dead, keep))
+            if drops and auto:
+                dead = True
+            if keeps:
+                keep = True
+            cur_tag = name
         else:
-            b.kept, b.score = False, CONF_DROPPED
+            # pop to matching open tag (forgiving of misnesting)
+            for i in range(len(tag_stack) - 1, -1, -1):
+                if tag_stack[i][0] == name:
+                    _, dead, keep = tag_stack[i]
+                    del tag_stack[i:]
+                    cur_tag = tag_stack[-1][0] if tag_stack else "body"
+                    break
+    text = split[-1]
+    if text and not text.isspace():
+        if parts is None:
+            parts = []
+            start = end
+            total = anchor = 0
+        parts.append(text)
+        total += len(text)
+    if parts is not None:
+        closed.append((parts, start, len(doc), total, anchor, cur_tag, dead, keep))
 
+    recs: list = []
+    for parts, start, end, total, anchor, tag, dead, keep in closed:
+        if not dead:
+            b = _live_block(tag, start, end, parts, total, anchor, keep, preserve)
+            if b is not None:
+                recs.append(b)
+        elif has_nul:
+            # a "\x00" text became " ": only the full normalization knows
+            if _clean_lines(parts, preserve):
+                recs.append((start, end))
+        elif len(parts) > parts.count(" ") + parts.count("\x00"):
+            # without NUL a text part is never " " or "\x00", and every
+            # text part holds a word once normalized
+            recs.append((start, end))
+    return len(closed), recs
+
+
+def _rescue(cluster: list, min_words: int) -> None:
+    """Keep a whole candidate cluster if any member is kept or together
+    they reach ``min_words``."""
+    if any(b.kept for b in cluster) or sum(b.n_words for b in cluster) >= min_words:
+        for b in cluster:
+            if not b.kept:
+                b.kept, b.score = True, CONF_RESCUE
+
+
+def _classify(recs: list, cfg: ExtractConfig) -> list:
+    """Boilerplate classification with one smoothing pass over the worded
+    blocks ``recs`` from :func:`_segment`.  Sets ``kept``/``score`` on
+    every :class:`Block` and returns the Blocks in order."""
+    min_words = cfg.min_content_words
+    max_ld = cfg.max_link_density
+    live: list = []
     # Cluster smoothing (Boilerpipe-style "surrounded" rule, re-derived):
     # contiguous runs of *clean candidate* blocks — not structurally
     # boilerplate, link density within bounds, not headings — are judged on
     # their AGGREGATE word count.  A run of short paragraphs that together
     # read like prose is content even though each block alone is short.
-    # Structurally-dropped blocks do not break candidate adjacency.
+    # A worded boilerplate/nav-like block separates page regions; empty
+    # blocks never reach ``recs``, so they never break adjacency.
     cluster: list = []
-
-    def _flush_cluster() -> None:
-        if not cluster:
-            return
-        total_words = sum(blocks[i].n_words for i in cluster)
-        any_kept = any(blocks[i].kept for i in cluster)
-        if any_kept or total_words >= cfg.min_content_words:
-            for i in cluster:
-                if not blocks[i].kept:
-                    blocks[i].kept, blocks[i].score = True, CONF_RESCUE
-        cluster.clear()
-
-    for i, b in enumerate(blocks):
-        if b.n_words == 0:
-            continue  # empty blocks never break adjacency
-        is_candidate = (
-            not (b.in_hard_boiler or b.in_negative)
-            and b.tag not in _HEADING_TAGS
-            and b.link_density <= cfg.max_link_density
-        )
-        if is_candidate:
-            cluster.append(i)
+    for b in recs:
+        if b.__class__ is tuple:  # structurally dropped
+            if cluster:
+                _rescue(cluster, min_words)
+                cluster = []
+            continue
+        live.append(b)
+        ld = b.link_density
+        heading = b.tag in _HEADING_TAGS
+        if b.hard_keep:
+            b.kept, b.score = True, CONF_HARD_KEEP
+        elif heading:
+            # provisional: rescued below if kept content follows
+            b.score = CONF_HEADING
+        elif b.n_words >= min_words and ld <= max_ld:
+            b.kept = True
+            b.score = round(90.0 - 60.0 * ld, 1)
+        if heading or ld > max_ld:
+            if cluster:
+                _rescue(cluster, min_words)
+                cluster = []
         else:
-            # a worded boilerplate/nav-like block separates page regions
-            _flush_cluster()
-    _flush_cluster()
+            cluster.append(b)
+    if cluster:
+        _rescue(cluster, min_words)
 
-    # headings directly before kept content are kept
+    # headings directly before kept content are kept; the look-ahead skips
+    # structurally dropped blocks, i.e. it is the next live block
     if cfg.keep_headings:
-        for i, b in enumerate(blocks):
-            if b.tag in _HEADING_TAGS and b.score == CONF_HEADING and b.link_density < 0.5:
-                nxt = next(
-                    (
-                        blocks[j]
-                        for j in range(i + 1, len(blocks))
-                        if blocks[j].n_words > 0
-                        and not (blocks[j].in_hard_boiler or blocks[j].in_negative)
-                    ),
-                    None,
-                )
-                if nxt is not None and nxt.kept:
-                    b.kept = True
+        for b, nxt in zip(live, live[1:]):
+            if nxt.kept and b.score == CONF_HEADING and b.tag in _HEADING_TAGS and b.link_density < 0.5:
+                b.kept = True
+    return live
 
 
 @_functools.lru_cache(maxsize=32)
@@ -467,7 +512,7 @@ def _apply_charset(blocks: list, cfg: ExtractConfig) -> None:
     """tessedit_char_whitelist / blacklist analog: restrict emitted chars
     (decode-mask semantics, tests/integration_test.rs:102-106).  The filter
     is a compiled character-class regex sub (C engine), not a per-character
-    Python comprehension."""
+    Python comprehension; words it empties are dropped."""
     wl = _whitelist_re(cfg.char_whitelist).sub if cfg.char_whitelist else None
     bl = _blacklist_re(cfg.char_blacklist).sub if cfg.char_blacklist else None
     if wl is None and bl is None:
@@ -476,30 +521,26 @@ def _apply_charset(blocks: list, cfg: ExtractConfig) -> None:
         if not b.kept:
             continue
         new_lines = []
-        for words in b.lines:
-            new_words = []
-            for w in words:
-                if wl is not None:
-                    w = wl("", w)
-                if bl is not None:
-                    w = bl("", w)
-                if w:
-                    new_words.append(w)
-            if new_words:
-                new_lines.append(new_words)
+        n_words = 0
+        for words in b.line_words():
+            if wl is not None:
+                words = [wl("", w) for w in words]
+            if bl is not None:
+                words = [bl("", w) for w in words]
+            words = [w for w in words if w]
+            if words:
+                new_lines.append(" ".join(words))
+                n_words += len(words)
         b.lines = new_lines
-        b.n_words = sum(len(ws) for ws in new_lines)
-        if b.n_words == 0:
+        b.n_words = n_words
+        if n_words == 0:
             b.kept = False
 
 
 def assemble(blocks: list) -> str:
     """The byte-identical assembly contract (SURVEY.md §2.4): words ' ',
     lines '\\n', blocks '\\n\\n', one trailing '\\n' when non-empty."""
-    parts = []
-    for b in blocks:
-        if b.kept and b.lines:
-            parts.append("\n".join(" ".join(ws) for ws in b.lines))
+    parts = ["\n".join(b.lines) for b in blocks if b.kept and b.lines]
     return "\n\n".join(parts) + "\n" if parts else ""
 
 
@@ -530,73 +571,47 @@ def extract_doc(payload, cfg: ExtractConfig) -> DocResult:
         else None
     )
     try:
-        blocks = _segment(doc, cfg, deadline)
+        n_blocks, recs = _segment(doc, cfg, deadline)
     except PageTimeout:
         # deadline expiry is a ROW, never a task failure (monitor.rs:18-50
         # cancellation surfaces as an error result in the reference)
         return DocResult(STATUS_TIMEOUT, "", [], 0, 0, 0, 0, 0, [(0, len(doc))])
-    for b in blocks:
-        _finalize_block(b, cfg.preserve_interword_spaces)
     if cfg.mode == MODE_AUTO:
-        _classify(blocks, cfg)
+        live = _classify(recs, cfg)
     else:
-        for b in blocks:
-            b.kept = b.n_words > 0
-            b.score = CONF_HARD_KEEP if b.kept else CONF_DROPPED
-    _apply_charset(blocks, cfg)
+        live = recs  # no structural drops outside AUTO
+        for b in live:
+            b.kept, b.score = True, CONF_HARD_KEEP
+    _apply_charset(live, cfg)
 
-    kept = [b for b in blocks if b.kept]
-    text = assemble(blocks)
+    kept = [b for b in live if b.kept]
+    text = assemble(kept)
     n_words = sum(b.n_words for b in kept)
     mean_conf = (
         int(round(sum(b.score * b.n_words for b in kept) / n_words)) if n_words else 0
     )
-    failure_spans = [
-        (b.src_start, b.src_end) for b in blocks if not b.kept and b.n_words > 0
-    ][:32]
+    failure_spans = []
+    if len(kept) < len(recs):
+        for b in recs:
+            if b.__class__ is tuple:
+                failure_spans.append(b)
+            elif b.kept or not b.n_words:
+                continue
+            else:
+                failure_spans.append((b.src_start, b.src_end))
+            if len(failure_spans) == 32:
+                break
     return DocResult(
         STATUS_OK,
         text,
         kept,
-        len(blocks),
+        n_blocks,
         len(kept),
         n_words,
         mean_conf,
         len(text),
         failure_spans,
     )
-
-
-def word_columns(result: DocResult):
-    """Columnar word explode — the vectorized twin of :func:`word_rows`:
-    returns (words, block_id, para_id, line_id, word_id, conf, span_start,
-    span_end) where everything except ``words`` is a numpy array.  Per-word
-    Python is limited to one C-speed ``list.extend`` per line; id columns
-    are built with ``np.repeat`` over per-line counts (the reading-order
-    ids of /root/reference/src/result_iterator.rs:41-71)."""
-    import numpy as np
-
-    words: list = []
-    meta: list = []  # (block_id, line_id, n_words, score, src_start, src_end)
-    for block_id, b in enumerate(result.blocks):
-        for line_id, ws in enumerate(b.lines):
-            words.extend(ws)
-            meta.append((block_id, line_id, len(ws), b.score, b.src_start, b.src_end))
-    if not meta:
-        z = np.empty(0, dtype=np.int64)
-        return words, z, z, z, z, np.empty(0, dtype=np.float64), z, z
-    m = np.asarray(meta, dtype=np.float64)
-    counts = m[:, 2].astype(np.int64)
-    block = np.repeat(m[:, 0].astype(np.int64), counts)
-    line = np.repeat(m[:, 1].astype(np.int64), counts)
-    conf = np.repeat(m[:, 3], counts)
-    start = np.repeat(m[:, 4].astype(np.int64), counts)
-    end = np.repeat(m[:, 5].astype(np.int64), counts)
-    total = int(counts.sum())
-    offsets = np.repeat(np.cumsum(counts) - counts, counts)
-    word_id = np.arange(total, dtype=np.int64) - offsets
-    para = np.zeros(total, dtype=np.int64)
-    return words, block, para, line, word_id, conf, start, end
 
 
 def word_rows(result: DocResult):
@@ -610,7 +625,7 @@ def word_rows(result: DocResult):
     our "page space" is the source character axis)."""
     out = []
     for block_id, b in enumerate(result.blocks):
-        for line_id, words in enumerate(b.lines):
+        for line_id, words in enumerate(b.line_words()):
             for word_id, w in enumerate(words):
                 out.append(
                     (block_id, 0, line_id, word_id, w, b.score, b.src_start, b.src_end)

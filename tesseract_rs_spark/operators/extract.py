@@ -67,26 +67,24 @@ def extract_words_arrow_batch(batch, cfg: ExtractConfig, n_ids: int):
     exploded word table is built as pyarrow arrays directly — id columns
     are one ``pc.take`` gather over the UNTOUCHED input Arrow arrays (no
     pandas object round-trip for 54 words/doc), numeric columns one
-    ``np.concatenate`` each, and only the word strings themselves pass
-    through a Python list (they are born as Python ``str`` in the
-    kernel).  Returns the output column arrays (schema order) or None
-    for an all-empty batch."""
+    ``np.repeat`` each over per-line word counts, and only the word
+    strings pass through a Python list (one ``split`` per line, in
+    ``Block.line_words``).  Returns the output column arrays (schema
+    order) or None for an all-empty batch."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     htmls = batch.column(n_ids).to_pylist()
     results = [extract_doc(h, cfg) for h in htmls]
-    # ONE meta table for the whole batch instead of word_columns' ~10
-    # small numpy calls per document: the line rows concatenate in doc
+    # ONE meta table for the whole batch: the line rows concatenate in doc
     # order, so every derived column equals the per-doc concatenation
-    # (r7 — the per-doc numpy overhead was ~half the explode cost)
     words: list = []
     meta: list = []  # (block_id, line_id, n_words, score, start, end)
     doc_words = np.zeros(len(results), dtype=np.int64)
     for di, r in enumerate(results):
         nw = 0
         for block_id, b in enumerate(r.blocks):
-            for line_id, ws in enumerate(b.lines):
+            for line_id, ws in enumerate(b.line_words()):
                 words.extend(ws)
                 meta.append(
                     (block_id, line_id, len(ws), b.score, b.src_start, b.src_end)

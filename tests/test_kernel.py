@@ -217,25 +217,85 @@ class TestHierarchy:
         assert 0 <= r.mean_conf <= 100
 
 
-def test_word_columns_matches_word_rows():
-    """The vectorized columnar explode must agree with the row explode."""
-    import numpy as np
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        ExtractConfig(),
+        ExtractConfig(preserve_interword_spaces=True),
+        ExtractConfig(char_whitelist="abcdefghijklmnopqrstuvwxyz"),
+    ],
+    ids=["default", "preserve_spaces", "whitelist"],
+)
+def test_word_explode_matches_word_rows(cfg):
+    """The batch-columnar word explode of the words operator must equal
+    each doc's ``word_rows`` with that doc's ids repeated, across a batch
+    that mixes worded pages, an empty doc and a utf8-error row."""
+    import pyarrow as pa
 
     from tesseract_rs_spark.corpus import render_html
-    from tesseract_rs_spark.kernels.html import word_columns
+    from tesseract_rs_spark.operators.extract import extract_words_arrow_batch
 
-    r = extract_doc(render_html("alpha beta gamma " * 30, 7, "en").encode(), ExtractConfig())
-    rows = word_rows(r)
-    words, block, para, line, wid, conf, s, e = word_columns(r)
-    assert words == [x[4] for x in rows]
-    assert block.tolist() == [x[0] for x in rows]
-    assert para.tolist() == [x[1] for x in rows]
-    assert line.tolist() == [x[2] for x in rows]
-    assert wid.tolist() == [x[3] for x in rows]
-    assert np.allclose(conf, [x[5] for x in rows])
-    assert s.tolist() == [x[6] for x in rows]
-    assert e.tolist() == [x[7] for x in rows]
-    # empty doc -> empty arrays, no crash
-    empty = extract_doc(b"<html><body></body></html>", ExtractConfig())
-    w2, *cols2 = word_columns(empty)
-    assert w2 == [] and all(len(c) == 0 for c in cols2)
+    docs = [
+        render_html("alpha beta gamma " * 30, 7, "en").encode(),
+        b"",
+        b"<p>ab\xc3\x28cd</p>",
+        wrap("<article><p>aa  bb&#32;&#32;cc<br>dd\tee</p><p>ONE two 3</p></article>"),
+        render_html("delta epsilon zeta " * 12, 8, "en", para_words=5).encode(),
+        b"<html><body></body></html>",
+    ]
+    urls = [f"u{i}" for i in range(len(docs))]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(urls), pa.array(list(range(len(docs))), pa.int64()), pa.array(docs, pa.binary())],
+        names=["url", "doc_id", "html"],
+    )
+    arrays = extract_words_arrow_batch(batch, cfg, 2)
+    got = list(zip(*(a.to_pylist() for a in arrays)))
+    want = [
+        (url, doc_id) + row
+        for doc_id, (url, html) in enumerate(zip(urls, docs))
+        for row in word_rows(extract_doc(html, cfg))
+    ]
+    assert got == want
+    assert {u for u, *_ in got} == {"u0", "u3", "u4"}
+    # an all-empty batch yields no arrays at all
+    empty = batch.slice(1, 2)
+    assert extract_words_arrow_batch(empty, cfg, 2) is None
+
+
+def test_token_cache_stays_bounded():
+    """Both dispatch caches (whole token, tag head) are capped in entries
+    and in key length; outputs do not depend on what they hold."""
+    from tesseract_rs_spark.corpus import render_html
+    from tesseract_rs_spark.kernels import html as kernel
+
+    page = render_html("alpha beta gamma " * 30, 7, "en").encode()
+    kernel._TOKEN_INFO.clear()
+    kernel._HEAD_INFO.clear()
+    cold = extract_doc(page, CFG)
+    # more distinct tokens and tag names than the caps, including
+    # negative-class block tags whose dispatch carries the class/id flags
+    n = kernel._TOKEN_INFO_MAX + 500
+    flood = "".join(
+        f'<div class="nav n{i}"><span id="s{i}">w{i}</span><x-{i}>t</x-{i}></div>'
+        for i in range(n)
+    )
+    huge = '<div class="menu" data-x="' + "x" * (2 * kernel._TOKEN_KEY_MAX) + '">'
+    huge_name = "y" * (2 * kernel._TOKEN_KEY_MAX)
+    doc = wrap(flood + huge + "menu words dropped here" + "</div>"
+               f"<{huge_name}>inline</{huge_name}>"
+               "<article><p>real content words survive the flood</p></article>")
+    for _ in range(2):
+        r = extract_doc(doc, CFG)
+        assert r.text == "inline\n\nreal content words survive the flood\n"
+        assert len(r.failure_spans) == 32
+        for cache in (kernel._TOKEN_INFO, kernel._HEAD_INFO):
+            assert len(cache) <= kernel._TOKEN_INFO_MAX
+            assert max(map(len, cache)) <= kernel._TOKEN_KEY_MAX
+    assert len(kernel._HEAD_INFO) == kernel._TOKEN_INFO_MAX
+    assert huge not in kernel._TOKEN_INFO
+    # full (and refilled) caches serve the same results as cold ones
+    for _ in range(2):
+        warm = extract_doc(page, CFG)
+        assert (warm.text, warm.n_blocks_total, warm.failure_spans, word_rows(warm)) == (
+            cold.text, cold.n_blocks_total, cold.failure_spans, word_rows(cold)
+        )
