@@ -15,9 +15,12 @@ pipeline over Common-Crawl-style page tables
 - never fail a job on one corrupt page: per-row status + failure spans
   (error model: /root/reference/src/error.rs:6-41).
 
-Every Python stage is Arrow-vectorized — zero per-row Python UDFs.  Most
-are ``mapInPandas``; ``extract_words``, ``simhash`` and the MinHash
-signature step are ``mapInArrow`` over the raw Arrow buffers.  Python
+Every Python stage is Arrow-vectorized — zero per-row Python UDFs.  The
+per-document stages (extraction, OCR, media, image-layer PDF rendering)
+cross the Arrow boundary through one helper, ``operators.arrow.map_docs``;
+``simhash`` and the MinHash signature step read the raw Arrow buffers
+with ``mapInArrow``, and the vector-matrix, grouped-render and
+page-generator stages use ``mapInPandas``/``applyInPandas``.  Python
 workers start through ``worker_daemon`` (see ``session.get_spark``).
 """
 

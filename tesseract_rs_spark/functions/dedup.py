@@ -30,6 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.functions.text import tokens, word_shingles
+from tesseract_rs_spark.operators.arrow import offsets
 
 _MERSENNE_P = (1 << 61) - 1
 
@@ -268,23 +269,6 @@ def _shingled(docs: DataFrame, id_col: str, n: int) -> DataFrame:
     return docs.select(F.col(id_col), word_shingles("text", n).alias("_s"))
 
 
-def _offsets(arr: pa.Array) -> np.ndarray:
-    """Slice-aware int64 offsets of a binary or list Arrow array.  The
-    offset width comes from the type (int32 for ``binary``/``list``, int64
-    for the ``large_`` variants that ``useLargeVarTypes`` produces); any
-    other type raises instead of reinterpreting the buffer."""
-    t = arr.type
-    if pa.types.is_binary(t) or pa.types.is_list(t):
-        width = np.int32
-    elif pa.types.is_large_binary(t) or pa.types.is_large_list(t):
-        width = np.int64
-    else:
-        raise TypeError(f"expected a binary or list Arrow array, got {t}")
-    return np.frombuffer(arr.buffers()[1], dtype=width)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-
-
 def _signatures(
     shingled: DataFrame, id_col: str, num_hashes: int, seed: int
 ) -> DataFrame:
@@ -301,7 +285,7 @@ def _signatures(
             if batch.num_rows == 0:
                 continue
             ids, hs = batch.column(0), batch.column(1)
-            off = _offsets(hs)
+            off = offsets(hs)
             if not pa.types.is_int64(hs.type.value_type):
                 raise TypeError(f"expected list<int64> shingle hashes, got {hs.type}")
             sig = np.zeros((len(hs), num_hashes), dtype=np.int64)
@@ -531,7 +515,7 @@ def simhash(
             ids = batch.column(0)
             hx = batch.column(1)
             # binary column = validity + offsets + data buffer
-            off = _offsets(hx)
+            off = offsets(hx)
             counts = (off[1:] - off[:-1]) // 8
             out = np.zeros(len(hx), dtype=np.int64)
             if off[-1] > off[0]:

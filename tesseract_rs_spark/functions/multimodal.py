@@ -24,12 +24,13 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from tesseract_rs_spark.operators.arrow import map_docs, per_doc
 
 MEDIA_MAGIC = b"MEDI"
 KINDS = ("image", "audio", "video")
@@ -203,35 +204,19 @@ def image_stats(media: DataFrame, id_col: str = "media_id", col: str = "payload"
     pixel sum."""
     from tesseract_rs_spark.kernels.raster import INK
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, status, ws, hs, ink, sums = [], [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[col]):
-                img, st = decode_image(payload)
-                ids.append(mid)
-                status.append(st)
-                if img is None:
-                    ws.append(0), hs.append(0), ink.append(0), sums.append(0)
-                else:
-                    ws.append(img.shape[1])
-                    hs.append(img.shape[0])
-                    ink.append(int((img == INK).sum()))
-                    sums.append(int(img.sum(dtype=np.int64)))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "status": status,
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "n_ink_px": pd.array(ink, dtype="int64"),
-                    "sum_px": pd.array(sums, dtype="int64"),
-                }
-            )
+    def row(payload) -> tuple:
+        img, st = decode_image(payload)
+        if img is None:
+            return st, 0, 0, 0, 0
+        return (
+            st, img.shape[1], img.shape[0], int((img == INK).sum()),
+            int(img.sum(dtype=np.int64)),
+        )
 
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} long, status string, width long, height long, "
-        "n_ink_px long, sum_px long",
+    return map_docs(
+        media, (id_col,), col,
+        "status string, width long, height long, n_ink_px long, sum_px long",
+        per_doc(row),
     )
 
 
@@ -240,34 +225,19 @@ def audio_stats(media: DataFrame, id_col: str = "media_id", col: str = "payload"
     (id, status, sample_rate, n_samples, sumsq, peak, zero_crossings) —
     all exact integers, so cross-engine comparison is byte-stable."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[col]):
-                s, sr, st = decode_audio(payload)
-                if s is None or len(s) == 0:
-                    rows.append((mid, st, sr, 0, 0, 0, 0))
-                else:
-                    s64 = s.astype(np.int64)
-                    zc = int(((s64[:-1] >= 0) != (s64[1:] >= 0)).sum())
-                    rows.append(
-                        (
-                            mid,
-                            st,
-                            sr,
-                            len(s),
-                            int((s64 * s64).sum()),
-                            int(np.abs(s64).max()),
-                            zc,
-                        )
-                    )
-            cols = [id_col, "status", "sample_rate", "n_samples", "sumsq", "peak", "zero_crossings"]
-            yield pd.DataFrame(rows, columns=cols)
+    def row(payload) -> tuple:
+        s, sr, st = decode_audio(payload)
+        if s is None or len(s) == 0:
+            return st, sr, 0, 0, 0, 0
+        s64 = s.astype(np.int64)
+        zc = int(((s64[:-1] >= 0) != (s64[1:] >= 0)).sum())
+        return st, sr, len(s), int((s64 * s64).sum()), int(np.abs(s64).max()), zc
 
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} long, status string, sample_rate long, "
-        "n_samples long, sumsq long, peak long, zero_crossings long",
+    return map_docs(
+        media, (id_col,), col,
+        "status string, sample_rate long, n_samples long, sumsq long, "
+        "peak long, zero_crossings long",
+        per_doc(row),
     )
 
 
@@ -312,36 +282,20 @@ def video_stats(
     the whole row is SQL-oracle-able."""
     from tesseract_rs_spark.kernels.raster import INK
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[col]):
-                buf = bytes(payload) if payload is not None else b""
-                if buf[:4] != b"VSEQ" or len(buf) < 8:
-                    rows.append((mid, "unsupported_codec", 0, 0, 0, 0))
-                    continue
-                (n,) = struct.unpack_from("<I", buf, 4)
-                img, st = decode_frame(buf, frame)
-                if img is None:
-                    rows.append((mid, st, n, 0, 0, 0))
-                    continue
-                rows.append(
-                    (
-                        mid,
-                        "ok",
-                        n,
-                        img.shape[1],
-                        img.shape[0],
-                        int((img == INK).sum()),
-                    )
-                )
-            cols = [id_col, "status", "n_frames", "width", "height", "n_ink_px"]
-            yield pd.DataFrame(rows, columns=cols)
+    def row(payload) -> tuple:
+        buf = bytes(payload) if payload is not None else b""
+        if buf[:4] != b"VSEQ" or len(buf) < 8:
+            return "unsupported_codec", 0, 0, 0, 0
+        (n,) = struct.unpack_from("<I", buf, 4)
+        img, st = decode_frame(buf, frame)
+        if img is None:
+            return st, n, 0, 0, 0
+        return "ok", n, img.shape[1], img.shape[0], int((img == INK).sum())
 
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} long, status string, n_frames long, width long, "
-        "height long, n_ink_px long",
+    return map_docs(
+        media, (id_col,), col,
+        "status string, n_frames long, width long, height long, n_ink_px long",
+        per_doc(row),
     )
 
 
@@ -350,30 +304,10 @@ def decode_media(media: DataFrame) -> DataFrame:
     status).  STUB: only the synthetic MEDI container is implemented; a
     real deployment would dispatch to PIL/ffmpeg here."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], "kind": pdf["kind"]}
-            ws, hs, fs, status = [], [], [], []
-            for payload in pdf["payload"]:
-                w, h, n, st = media_header(payload)
-                ws.append(w)
-                hs.append(h)
-                fs.append(n)
-                status.append(st)
-            out.update(
-                {
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "n_frames": pd.array(fs, dtype="int64"),
-                    "status": status,
-                }
-            )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        gen,
-        schema="media_id long, kind string, width long, height long, "
-        "n_frames long, status string",
+    return map_docs(
+        media, ("media_id", "kind"), "payload",
+        "width long, height long, n_frames long, status string",
+        per_doc(media_header),
     )
 
 
@@ -382,19 +316,15 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     for an embedding-model forward pass — the Arrow batch shape, schema,
     and normalization are the real contract."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                digest = hashlib.sha256(bytes(payload)).digest()
-                seed = int.from_bytes(digest[:4], "big")
-                vec = np.random.RandomState(seed).normal(size=dim)
-                vec /= np.linalg.norm(vec)
-                feats.append([float(x) for x in vec])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
+    def features(payload) -> np.ndarray:
+        digest = hashlib.sha256(bytes(payload)).digest()
+        seed = int.from_bytes(digest[:4], "big")
+        vec = np.random.RandomState(seed).normal(size=dim)
+        return vec / np.linalg.norm(vec)
 
-    return media.select("media_id", "payload").mapInPandas(
-        gen, schema="media_id long, features array<double>"
+    return map_docs(
+        media, ("media_id",), "payload", "features array<double>",
+        lambda ps: [[features(p) for p in ps]],
     )
 
 
@@ -484,48 +414,22 @@ def resize_images(
             "for area downscaling"
         )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, status, ws, hs = [], [], [], []
-            for payload in pdf[col]:
-                img, st = decode_image(payload)
-                if img is None:
-                    payloads.append(None)
-                    status.append(st)
-                    ws.append(0)
-                    hs.append(0)
-                    continue
-                tw, th = (
-                    (out_w, out_h)
-                    if fixed
-                    else (img.shape[1] * scale, img.shape[0] * scale)
-                )
-                try:
-                    payloads.append(pgm_encode(resize_gray(img, tw, th, method)))
-                    status.append("ok")
-                    ws.append(tw)
-                    hs.append(th)
-                except ValueError:
-                    payloads.append(None)
-                    status.append("bad_geometry")
-                    ws.append(0)
-                    hs.append(0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    col: payloads,
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "status": status,
-                }
-            )
+    def row(payload) -> tuple:
+        img, st = decode_image(payload)
+        if img is None:
+            return None, 0, 0, st
+        tw, th = (
+            (out_w, out_h)
+            if fixed
+            else (img.shape[1] * scale, img.shape[0] * scale)
+        )
+        try:
+            return pgm_encode(resize_gray(img, tw, th, method)), tw, th, "ok"
+        except ValueError:
+            return None, 0, 0, "bad_geometry"
 
-    # id keeps its INPUT type like imi_assign derives it — a hardcoded
-    # long would cast string media ids to BIGINT and break at runtime
-    # (ADVICE r6; same latent-bug class as the r5 minhash/lsh fix)
-    id_type = media.schema[id_col].dataType.simpleString()
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} {id_type}, {col} binary, width long, height long, "
-        "status string",
+    return map_docs(
+        media, (id_col,), col,
+        f"{col} binary, width long, height long, status string",
+        per_doc(row),
     )

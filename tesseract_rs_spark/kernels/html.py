@@ -196,7 +196,7 @@ def _token_info(token: str) -> tuple:
     info = _HEAD_INFO.get(head) or _head_info(head)
     if len(info) == 4 and not info[1]:  # block-open: add its class/id flags
         attrs = token[len(head) : -1]
-        if attrs and ("class" in attrs or "id" in attrs or "Id" in attrs or "ID" in attrs or "Class" in attrs or "CLASS" in attrs):
+        if attrs:
             name, _, drops, keeps = info
             for am in _CLASS_ID_RE.finditer(attrs):
                 val = am.group(2) or am.group(3) or am.group(4) or ""

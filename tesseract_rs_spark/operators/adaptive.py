@@ -178,34 +178,17 @@ def ocr_text_adapted(
     where they match better, the distributed stand-in for the
     reference's mutated classifier.  (ids, text, status, mean_conf,
     n_words)."""
-    from tesseract_rs_spark.operators.extract import _id_schema
+    from tesseract_rs_spark.operators.arrow import map_docs
+    from tesseract_rs_spark.operators.ocr import page_columns
 
     cfg = cfg or ExtractConfig()
-    schema = (
-        _id_schema(pages, id_cols)
-        + ", text string, status string, mean_conf long, n_words long"
-    )
-    id_cols = tuple(id_cols)
-    langs = (*cfg.langs, name)
+    fields = "text string, status string, mean_conf long, n_words long"
+    decode = page_columns(fields, cfg, (*cfg.langs, name))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(payloads: list) -> list:
         from tesseract_rs_spark.kernels.raster import register_atlas
-        from tesseract_rs_spark.operators.ocr import raster_batch_results
 
         register_atlas(name, atlas)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            results = raster_batch_results(pdf, cfg, payload_col, langs=langs)
-            out = {c: pdf[c].to_numpy() for c in id_cols}
-            out["text"] = [r.text for r in results]
-            out["status"] = [r.status for r in results]
-            out["mean_conf"] = pd.array(
-                [r.mean_conf for r in results], dtype="int64"
-            )
-            out["n_words"] = pd.array(
-                [len(r.words) for r in results], dtype="int64"
-            )
-            yield pd.DataFrame(out)
+        return decode(payloads)
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
+    return map_docs(pages, id_cols, payload_col, fields, fn)

@@ -1,10 +1,12 @@
-"""Distributed extraction operators — fused mapInPandas stages.
+"""Distributed extraction operators — one fused Arrow stage each.
 
 The reference runs decode -> threshold -> segment -> recognize -> assemble
 inside one ``recognize`` call (/root/reference/src/api.rs:287-298); we fuse
-decode -> segment -> classify -> assemble inside ONE ``mapInPandas``
-generator so intermediate page structures never cross the Arrow boundary
-or shuffle (SURVEY.md §4.2 "Pipelining").
+decode -> segment -> classify -> assemble inside ONE per-batch function
+run through :func:`operators.arrow.map_docs`, so intermediate page
+structures never cross the Arrow boundary or shuffle (SURVEY.md §4.2
+"Pipelining").  Each operator is its field list plus a function from a
+batch of payloads to those fields' columns.
 
 Error model: a corrupt page yields a ``status != 'ok'`` row with failure
 spans — the job never dies on one bad document
@@ -13,14 +15,17 @@ spans — the job never dies on one bad document
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from functools import partial
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.kernels.html import extract_doc
+from tesseract_rs_spark.operators.arrow import arrow_fields, map_batch, map_docs
 
 TEXT_RESULT_FIELDS = (
     "text string, status string, n_blocks long, n_words long, "
@@ -35,46 +40,42 @@ WORD_RESULT_FIELDS = (
 )
 
 
-def _id_schema(pages: DataFrame, id_cols: Sequence[str]) -> str:
-    by_name = {f.name: f for f in pages.schema.fields}
-    return ", ".join(f"{c} {by_name[c].dataType.simpleString()}" for c in id_cols)
+def text_columns(htmls: list, cfg: ExtractConfig, spans: bool = False) -> list:
+    """One batch of payloads -> the text fields' columns, one value per page."""
+    rs = [extract_doc(h, cfg) for h in htmls]
+    cols = [
+        [r.text for r in rs],
+        [r.status for r in rs],
+        [r.n_blocks_kept for r in rs],
+        [r.n_words for r in rs],
+        [r.mean_conf for r in rs],
+        [r.n_chars for r in rs],
+    ]
+    if spans:
+        cols.append([r.failure_spans for r in rs])
+    return cols
 
 
 def extract_text_batch(
     pdf: pd.DataFrame, cfg: ExtractConfig, id_cols: Sequence[str], spans: bool = False
 ) -> pd.DataFrame:
-    """Extract one Arrow batch -> one result row per page."""
-    results = [extract_doc(h, cfg) for h in pdf["html"].to_numpy()]
-    out = {c: pdf[c].to_numpy() for c in id_cols}
-    out["text"] = [r.text for r in results]
-    out["status"] = [r.status for r in results]
-    out["n_blocks"] = pd.array([r.n_blocks_kept for r in results], dtype="int64")
-    out["n_words"] = pd.array([r.n_words for r in results], dtype="int64")
-    out["mean_conf"] = pd.array([r.mean_conf for r in results], dtype="int64")
-    out["n_chars"] = pd.array([r.n_chars for r in results], dtype="int64")
-    if spans:
-        out["failure_spans"] = [
-            [{"start": s, "end": e} for (s, e) in r.failure_spans]
-            for r in results
-        ]
-    return pd.DataFrame(out)
+    """:func:`extract_text`'s per-batch body on a pandas frame, no Spark
+    needed: one result row per page."""
+    batch = pa.RecordBatch.from_pandas(
+        pdf[[*id_cols, "html"]], preserve_index=False
+    )
+    fields = arrow_fields(FULL_RESULT_FIELDS if spans else TEXT_RESULT_FIELDS)
+    fn = partial(text_columns, cfg=cfg, spans=spans)
+    return map_batch(batch, len(id_cols), fn, fields).to_pandas()
 
 
-def extract_words_arrow_batch(batch, cfg: ExtractConfig, n_ids: int):
-    """Extract one Arrow batch -> exploded word-level rows (ResultIterator
-    analog, /root/reference/src/result_iterator.rs:41-71), Arrow-native
-    (r7, guide §4.2): the
-    exploded word table is built as pyarrow arrays directly — id columns
-    are one ``pc.take`` gather over the UNTOUCHED input Arrow arrays (no
-    pandas object round-trip for 54 words/doc), numeric columns one
-    ``np.repeat`` each over per-line word counts, and only the word
-    strings pass through a Python list (one ``split`` per line, in
-    ``Block.line_words``).  Returns the output column arrays (schema
-    order) or None for an all-empty batch."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    htmls = batch.column(n_ids).to_pylist()
+def word_columns(htmls: list, cfg: ExtractConfig) -> tuple:
+    """One batch of payloads -> the exploded word fields (the reference's
+    ResultIterator analog, ``src/result_iterator.rs:41-71``) as
+    ``(words per page, flat columns)``.  Numeric columns are one
+    ``np.repeat`` each over per-line word counts; only the word strings
+    pass through a Python list (one ``split`` per line, in
+    ``Block.line_words``)."""
     results = [extract_doc(h, cfg) for h in htmls]
     # ONE meta table for the whole batch: the line rows concatenate in doc
     # order, so every derived column equals the per-doc concatenation
@@ -93,29 +94,20 @@ def extract_words_arrow_batch(batch, cfg: ExtractConfig, n_ids: int):
         doc_words[di] = nw
     total = len(words)
     if total == 0:
-        return None
+        return doc_words, []
     m = np.asarray(meta, dtype=np.float64)
     counts = m[:, 2].astype(np.int64)
-    block = np.repeat(m[:, 0].astype(np.int64), counts)
-    line = np.repeat(m[:, 1].astype(np.int64), counts)
-    conf = np.repeat(m[:, 3], counts)
-    span_start = np.repeat(m[:, 4].astype(np.int64), counts)
-    span_end = np.repeat(m[:, 5].astype(np.int64), counts)
     offsets = np.repeat(np.cumsum(counts) - counts, counts)
-    word_id = np.arange(total, dtype=np.int64) - offsets
-    idx = pa.array(np.repeat(np.arange(len(results), dtype=np.int64), doc_words))
-    arrays = [pc.take(batch.column(i), idx) for i in range(n_ids)]
-    arrays += [
-        pa.array(block),
-        pa.array(np.zeros(total, dtype=np.int64)),
-        pa.array(line),
-        pa.array(word_id),
-        pa.array(words, type=pa.string()),
-        pa.array(conf, type=pa.float64()),
-        pa.array(span_start),
-        pa.array(span_end),
+    return doc_words, [
+        np.repeat(m[:, 0].astype(np.int64), counts),
+        np.zeros(total, dtype=np.int64),
+        np.repeat(m[:, 1].astype(np.int64), counts),
+        np.arange(total, dtype=np.int64) - offsets,
+        words,
+        np.repeat(m[:, 3], counts),
+        np.repeat(m[:, 4].astype(np.int64), counts),
+        np.repeat(m[:, 5].astype(np.int64), counts),
     ]
-    return arrays
 
 
 def extract_text(
@@ -132,19 +124,9 @@ def extract_text(
     receives one accumulator add per Arrow batch — the TessMonitor
     progress channel; the deadline channel is ``cfg.page_timeout_ms``."""
     cfg = cfg or ExtractConfig()
-    schema = _id_schema(pages, id_cols) + ", " + (
-        FULL_RESULT_FIELDS if spans else TEXT_RESULT_FIELDS
-    )
-    id_cols = tuple(id_cols)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield extract_text_batch(pdf, cfg, id_cols, spans=spans)
-                if monitor is not None:
-                    monitor.add_batch(len(pdf))
-
-    return pages.select(*id_cols, "html").mapInPandas(gen, schema=schema)
+    fields = FULL_RESULT_FIELDS if spans else TEXT_RESULT_FIELDS
+    fn = partial(text_columns, cfg=cfg, spans=spans)
+    return map_docs(pages, id_cols, "html", fields, fn, monitor=monitor)
 
 
 def extract_words(
@@ -156,21 +138,5 @@ def extract_words(
     word_id, word, conf) in one vectorized stage.  Reading order is encoded
     in the id columns, not in row order (SURVEY.md §3.2)."""
     cfg = cfg or ExtractConfig()
-    schema = _id_schema(pages, id_cols) + ", " + WORD_RESULT_FIELDS
-    id_cols = tuple(id_cols)
-    out_names = list(id_cols) + [
-        "block_id", "para_id", "line_id", "word_id", "word", "conf",
-        "span_start", "span_end",
-    ]
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            arrays = extract_words_arrow_batch(batch, cfg, len(id_cols))
-            if arrays is not None:
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return pages.select(*id_cols, "html").mapInArrow(gen, schema=schema)
+    fn = partial(word_columns, cfg=cfg)
+    return map_docs(pages, id_cols, "html", WORD_RESULT_FIELDS, fn, explode=True)

@@ -17,6 +17,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from tesseract_rs_spark.operators.arrow import map_docs, per_doc
+
 
 # renderer metadata getters (get_extension / get_title / get_image_num,
 # /root/reference/src/result_renderer.rs:141-185)
@@ -621,7 +623,8 @@ def _image_layer(words: DataFrame, pages: DataFrame, key: str) -> DataFrame:
     (``array_sort(collect_list(struct))`` — reading order is the struct's
     leading id fields), and only then joins the one-row-per-doc page
     raster, so the image crosses the shuffle exactly once — never
-    duplicated per word row."""
+    duplicated per word row.  (key, _layer) with ``_layer`` the struct
+    (page_width, page_height, _ws, html) the Python stage reads."""
     return (
         words.groupBy(key, "page_width", "page_height")
         .agg(
@@ -635,19 +638,25 @@ def _image_layer(words: DataFrame, pages: DataFrame, key: str) -> DataFrame:
             ).alias("_ws")
         )
         .join(pages.select(key, "html"), key)
+        .select(
+            key,
+            F.struct("page_width", "page_height", "_ws", "html").alias("_layer"),
+        )
     )
 
 
-def _image_pdf(pw, ph, ws, payload, title: str):
-    """One joined layer row -> (pdf bytes, source gray image | None)."""
+def _image_pdf(layer: dict, title: str):
+    """One document's ``_layer`` struct -> (pdf bytes, source gray image |
+    None)."""
     from tesseract_rs_spark.kernels.raster import decode_page
 
-    img, _status = decode_page(payload)
+    img, _status = decode_page(layer["html"])
+    pw, ph = int(layer["page_width"]), int(layer["page_height"])
     rows = [
-        (int(w["left"]), int(ph) - int(w["bottom"]), str(w["word"]))
-        for w in ws
+        (int(w["left"]), ph - int(w["bottom"]), str(w["word"]))
+        for w in layer["_ws"]
     ]
-    return pdf_bytes(int(pw), int(ph), rows, title, image=img), img
+    return pdf_bytes(pw, ph, rows, title, image=img), img
 
 
 def render_pdf_with_image(
@@ -662,27 +671,11 @@ def render_pdf_with_image(
     words came from (``key`` + ``html`` PAGE-binary).
 
     (key, pdf binary).  Final byte assembly (decode raster -> grayscale
-    -> zlib -> xref arithmetic) is one ``mapInPandas`` over the
-    one-row-per-doc :func:`_image_layer` frame."""
-    import pandas as pd
-
-    key_type = words.schema[key].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = [
-                _image_pdf(pw, ph, ws, payload, title)[0]
-                for pw, ph, ws, payload in zip(
-                    pdf["page_width"], pdf["page_height"],
-                    pdf["_ws"], pdf["html"],
-                )
-            ]
-            yield pd.DataFrame({key: pdf[key], "pdf": outs})
-
-    return _image_layer(words, pages, key).mapInPandas(
-        gen, schema=f"{key} {key_type}, pdf binary"
+    -> zlib -> xref arithmetic) is one Arrow stage over the one-row-per-doc
+    :func:`_image_layer` frame."""
+    return map_docs(
+        _image_layer(words, pages, key), (key,), "_layer", "pdf binary",
+        per_doc(lambda layer: (_image_pdf(layer, title)[0],)),
     )
 
 
@@ -699,30 +692,20 @@ def pdf_image_roundtrip_text(
     for both halves and the textonly SQL oracle (the golden page
     assembly) stays the oracle for this mode too."""
     import numpy as np
-    import pandas as pd
 
-    key_type = words.schema[key].dataType.simpleString()
+    def row(layer: dict) -> tuple:
+        blob, src = _image_pdf(layer, title)
+        back = extract_pdf_image(blob)
+        ok = (
+            src is None and back is None
+        ) or (
+            src is not None
+            and back is not None
+            and np.array_equal(np.asarray(src, dtype=np.uint8), back)
+        )
+        return (parse_pdf_text(blob) if ok else "IMG_MISMATCH",)
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for pw, ph, ws, payload in zip(
-                pdf["page_width"], pdf["page_height"], pdf["_ws"], pdf["html"]
-            ):
-                blob, src = _image_pdf(pw, ph, ws, payload, title)
-                back = extract_pdf_image(blob)
-                ok = (
-                    src is None and back is None
-                ) or (
-                    src is not None
-                    and back is not None
-                    and np.array_equal(np.asarray(src, dtype=np.uint8), back)
-                )
-                outs.append(parse_pdf_text(blob) if ok else "IMG_MISMATCH")
-            yield pd.DataFrame({key: pdf[key], "pdf_text": outs})
-
-    return _image_layer(words, pages, key).mapInPandas(
-        gen, schema=f"{key} {key_type}, pdf_text string"
+    return map_docs(
+        _image_layer(words, pages, key), (key,), "_layer", "pdf_text string",
+        per_doc(row),
     )

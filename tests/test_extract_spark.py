@@ -162,7 +162,7 @@ def test_oversized_sidecar_isolates_stragglers(spark):
 
 
 def test_extract_text_hot_path_plan(spark, corpus_dirs):
-    """The 100 TB hot-path plan contract: scan -> fused MapInPandas with
+    """The 100 TB hot-path plan contract: scan -> fused MapInArrow with
     ZERO exchanges (the only shuffle in the whole job is whatever the
     caller aggregates afterwards), and column pruning must reach the
     parquet scan — a projection of (url, text, status) needs only
@@ -174,7 +174,7 @@ def test_extract_text_hot_path_plan(spark, corpus_dirs):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     # pruned scan: html+url only — text/lang/warc_ts never leave parquet
     import io
     from contextlib import redirect_stdout

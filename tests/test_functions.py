@@ -2136,11 +2136,8 @@ def test_simhash_large_var_types(spark):
     instead of being reinterpreted."""
     import pyarrow as pa
 
-    from tesseract_rs_spark.functions.dedup import (
-        _offsets,
-        minhash_signatures,
-        simhash,
-    )
+    from tesseract_rs_spark.functions.dedup import minhash_signatures, simhash
+    from tesseract_rs_spark.operators.arrow import offsets
 
     docs = spark.createDataFrame(
         [
@@ -2169,7 +2166,7 @@ def test_simhash_large_var_types(spark):
     assert out["true_sig"] == out["false_sig"]
     assert out["false"]["u1"] == 0 and out["false"]["u2"] != 0
     with pytest.raises(TypeError):
-        _offsets(pa.array(["x"]))
+        offsets(pa.array(["x"]))
 
 
 def test_dedup_keep_first_null_ids(spark):
@@ -2323,6 +2320,46 @@ def test_stratified_token_budget_empty_nonstring_stratum(spark):
     got = stratified_token_budget(nonempty, {1: 100}, strat_col="lang")
     assert dict(got.dtypes)["lang"] == "bigint"
     assert out.unionByName(got).count() == 2  # schemas actually union
+
+
+@pytest.mark.parametrize(
+    "stage",
+    ["image_stats", "audio_stats", "video_stats", "decode_media", "extract_features"],
+)
+def test_media_stages_keep_string_id(spark, stage):
+    """Every media stage passes its id column through with the input's
+    type: string media ids come back as the same strings, and every other
+    column equals the numeric-id run's."""
+    import numpy as np
+
+    from tesseract_rs_spark.functions import multimodal as mm
+
+    img = np.full((6, 5), 255, dtype=np.uint8)
+    img[1:3, 1:4] = 0
+    payloads = [
+        mm.pgm_encode(img),
+        mm.wav_encode(np.array([0, 300, -200, 50], dtype=np.int16)),
+        mm.video_encode([img, img[::-1]]),
+        b"JPEGnotreally",
+    ]
+    kinds = ["image", "audio", "video", "image"]
+    rows = list(zip(range(4), kinds, map(bytearray, payloads)))
+    fn = getattr(mm, stage)
+    by_long = fn(
+        spark.createDataFrame(rows, "media_id long, kind string, payload binary")
+    )
+    by_str = fn(
+        spark.createDataFrame(
+            [(f"m-{i}", k, p) for i, k, p in rows],
+            "media_id string, kind string, payload binary",
+        )
+    )
+    assert by_str.schema["media_id"].dataType.simpleString() == "string"
+    assert [f for f in by_str.schema if f.name != "media_id"] == [
+        f for f in by_long.schema if f.name != "media_id"
+    ]
+    want = {f"m-{r['media_id']}": r[1:] for r in by_long.collect()}
+    assert {r["media_id"]: r[1:] for r in by_str.collect()} == want
 
 
 def test_resize_images_string_id(spark):

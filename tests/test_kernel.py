@@ -108,6 +108,16 @@ class TestBoilerplate:
         html = wrap('<div class="post-body">short text</div>')
         assert extract_doc(html, CFG).text == "short text\n"
 
+    @pytest.mark.parametrize("attr", ["class", "cLass", "CLASS", "id", "iD", "ID"])
+    def test_class_id_attribute_name_any_case(self, attr):
+        """HTML attribute names are case-insensitive: every spelling of
+        ``class``/``id`` drops a negative block and keeps a positive one."""
+        article = "<article><p>real content words go here today</p></article>"
+        dropped = wrap(f'<div {attr}="nav">menu words one two three four</div>' + article)
+        assert extract_doc(dropped, CFG).text == "real content words go here today\n"
+        kept = wrap(f'<div {attr}="post-body">short text</div>')
+        assert extract_doc(kept, CFG).text == "short text\n"
+
     def test_link_density_drop(self):
         links = " ".join(f'<a href="/{i}">link number {i} here</a>' for i in range(8))
         html = wrap(f"<div>{links}</div><div>plain prose with many genuine words</div>")
@@ -230,10 +240,16 @@ def test_word_explode_matches_word_rows(cfg):
     """The batch-columnar word explode of the words operator must equal
     each doc's ``word_rows`` with that doc's ids repeated, across a batch
     that mixes worded pages, an empty doc and a utf8-error row."""
+    from functools import partial
+
     import pyarrow as pa
 
     from tesseract_rs_spark.corpus import render_html
-    from tesseract_rs_spark.operators.extract import extract_words_arrow_batch
+    from tesseract_rs_spark.operators.arrow import arrow_fields, map_batch
+    from tesseract_rs_spark.operators.extract import WORD_RESULT_FIELDS, word_columns
+
+    fields = arrow_fields(WORD_RESULT_FIELDS)
+    words = partial(word_columns, cfg=cfg)
 
     docs = [
         render_html("alpha beta gamma " * 30, 7, "en").encode(),
@@ -248,7 +264,7 @@ def test_word_explode_matches_word_rows(cfg):
         [pa.array(urls), pa.array(list(range(len(docs))), pa.int64()), pa.array(docs, pa.binary())],
         names=["url", "doc_id", "html"],
     )
-    arrays = extract_words_arrow_batch(batch, cfg, 2)
+    arrays = map_batch(batch, 2, words, fields, explode=True).columns
     got = list(zip(*(a.to_pylist() for a in arrays)))
     want = [
         (url, doc_id) + row
@@ -257,9 +273,9 @@ def test_word_explode_matches_word_rows(cfg):
     ]
     assert got == want
     assert {u for u, *_ in got} == {"u0", "u3", "u4"}
-    # an all-empty batch yields no arrays at all
+    # an all-empty batch yields no batch at all
     empty = batch.slice(1, 2)
-    assert extract_words_arrow_batch(empty, cfg, 2) is None
+    assert map_batch(empty, 2, words, fields, explode=True) is None
 
 
 def test_token_cache_stays_bounded():

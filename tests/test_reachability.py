@@ -75,3 +75,49 @@ def package_modules() -> set:
 def test_every_package_module_is_reached_from_a_product_path():
     unreached = package_modules() - reachable_modules()
     assert unreached == UNREACHED_BY_DESIGN
+
+
+# The JVM <-> Python Arrow boundary is written once, in BOUNDARY; these
+# stages are the only others that cross it themselves: vector-matrix
+# stages, grouped per-document renderers, page generators, a per-batch
+# aggregate and two readers of raw Arrow buffers.
+BOUNDARY = "tesseract_rs_spark/operators/arrow.py"
+OWN_BOUNDARY = {
+    ("tesseract_rs_spark/functions/similarity.py", "lsh_signatures"),
+    ("tesseract_rs_spark/functions/similarity.py", "ivf_centroids_kmeans_distributed"),
+    ("tesseract_rs_spark/functions/similarity.py", "ivf_assign"),
+    ("tesseract_rs_spark/functions/similarity.py", "imi_assign"),
+    ("tesseract_rs_spark/operators/renderers.py", "pdf_roundtrip_text"),
+    ("tesseract_rs_spark/operators/renderers.py", "render_pdf"),
+    ("tesseract_rs_spark/sources/pages.py", "pages_from_documents"),
+    ("tesseract_rs_spark/sources/pages.py", "raster_pages_from_documents"),
+    ("tesseract_rs_spark/operators/adaptive.py", "learn_glyphs"),
+    ("tesseract_rs_spark/functions/dedup.py", "_signatures"),
+    ("tesseract_rs_spark/functions/dedup.py", "simhash"),
+}
+BOUNDARY_CALLS = {"mapInPandas", "mapInArrow", "applyInPandas"}
+
+
+def boundary_call_sites() -> set:
+    """(file, top-level definition) of every mapInPandas / mapInArrow /
+    applyInPandas call in the package."""
+    sites = set()
+    for path in (ROOT / PACKAGE).rglob("*.py"):
+        rel = path.relative_to(ROOT).as_posix()
+        for top in ast.parse(path.read_text(), rel).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in BOUNDARY_CALLS
+                ):
+                    sites.add((rel, getattr(top, "name", None)))
+    return sites
+
+
+def test_python_stages_cross_arrow_through_one_helper():
+    sites = boundary_call_sites()
+    stray = {s for s in sites if s[0] != BOUNDARY} - OWN_BOUNDARY
+    assert not stray, f"use operators.arrow.map_docs instead: {sorted(stray)}"
+    # the list names live call sites only
+    assert OWN_BOUNDARY <= sites
