@@ -3,6 +3,8 @@ oracle_sql() through DuckDB at a given sf dir, with the driver's
 order-insensitive compare (sort columns by name, sort rows, hash values).
 
 Usage: python scripts/selfcheck.py [sf_dir] [query ...]
+The local session takes its slot count from SPARK_GRAFT_CPUS, as every
+other entry point does (``session.get_spark``).
 """
 
 from __future__ import annotations
@@ -51,7 +53,7 @@ def main() -> int:
     import __spark_entry__ as E
     from tesseract_rs_spark.session import get_spark
 
-    spark = get_spark("selfcheck", cores=16)
+    spark = get_spark("selfcheck")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -172,14 +172,6 @@ class ExtractConfig:
             raise KeyError(f"unknown variable: {name}")
         return self.variables[name]
 
-    def set_debug_variable(self, name: str, value: str) -> "ExtractConfig":
-        """set_debug_variable analog: recorded in the variables map (and
-        dumped by :meth:`print_variables`) but never consumed by a kernel
-        — debug knobs must not change extraction output."""
-        new_vars = dict(self.variables)
-        new_vars[name] = value
-        return replace(self, variables=new_vars)
-
     def print_variables(self) -> str:
         """print_variables_to_file analog: one ``name\\tvalue`` line per
         recorded variable, sorted — a deterministic debug dump the caller

@@ -35,18 +35,6 @@ from tesseract_rs_spark.operators.arrow import offsets
 _MERSENNE_P = (1 << 61) - 1
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", col: str = "text") -> DataFrame:
-    """Exact dedup: (id, keeper_id, group_size).  keeper = min id per
-    digest.  Join back on keeper_id != id to drop duplicates."""
-    digests = docs.select(
-        F.col(id_col), F.sha2(F.col(col).cast("binary"), 256).alias("_d")
-    )
-    groups = digests.groupBy("_d").agg(
-        F.min(id_col).alias("keeper_id"), F.count("*").alias("group_size")
-    )
-    return digests.join(groups, "_d").select(id_col, "keeper_id", "group_size")
-
-
 def dedup_summary(docs: DataFrame, col: str = "text") -> DataFrame:
     """(n_docs, n_unique, n_dupes) one-row corpus summary."""
     return docs.agg(
@@ -63,8 +51,7 @@ def dedup_keep_first(
     docs: DataFrame, id_col: str = "doc_id", col: str = "text"
 ) -> DataFrame:
     """Exact dedup RETURNING THE SURVIVING ROWS, smallest id per content
-    digest (the keep-first rule of web-corpus exact dedup;
-    :func:`dedup_exact` above returns the assignment table instead).
+    digest (the keep-first rule of web-corpus exact dedup).
     ONE shuffle via a ``min_by`` hash aggregation: each map partition
     PARTIALLY aggregates to at most one candidate row per digest before
     anything crosses the network (a duplicate-heavy partition collapses
@@ -538,12 +525,6 @@ def simhash(
     return hashed.mapInArrow(
         gen, schema=f"{id_col} {id_type}, simhash long"
     )
-
-
-def hamming64(col_a, col_b):
-    """Hamming distance between two long simhash columns — JVM-side
-    bit_count(xor)."""
-    return F.bit_count(col_a.bitwiseXOR(col_b))
 
 
 def guarded_pair_join(

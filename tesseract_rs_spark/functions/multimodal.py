@@ -12,9 +12,7 @@ structs.  Two grades of decode live here:
   these end-to-end against closed-form SQL oracles.
 - **Stubs, clearly marked**, for compressed codecs (JPEG/MP3/MP4...):
   ``decode_media`` returns ``status='unsupported_codec'`` rows for
-  anything it cannot parse, and ``extract_features`` derives a
-  deterministic sha-seeded vector standing in for a model forward pass
-  with the same shape contract.
+  anything it cannot parse.
 
 "Video" is a length-prefixed sequence of PGM frames (``video_encode``)
 — frame extraction and per-frame decode are real.
@@ -22,49 +20,15 @@ structs.  Two grades of decode live here:
 
 from __future__ import annotations
 
-import hashlib
 import struct
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.operators.arrow import map_docs, per_doc
 
 MEDIA_MAGIC = b"MEDI"
-KINDS = ("image", "audio", "video")
-
-
-def make_media_corpus(n: int = 64, seed: int = 42) -> pd.DataFrame:
-    """Deterministic synthetic media table: MEDI header + seeded bytes."""
-    rng = np.random.RandomState(seed)
-    rows = []
-    for i in range(n):
-        kind = KINDS[i % 3]
-        w, h = int(rng.randint(16, 256)), int(rng.randint(16, 256))
-        sr = int(rng.choice([8000, 16000, 44100]))
-        dur = int(rng.randint(100, 10_000))
-        frames = int(rng.randint(1, 300))
-        body = rng.bytes(int(rng.randint(64, 2048)))
-        payload = MEDIA_MAGIC + struct.pack("<iiiii", w, h, sr, dur, frames) + body
-        rows.append(
-            (
-                i,
-                kind,
-                payload,
-                {
-                    "width": w,
-                    "height": h,
-                    "sample_rate": sr,
-                    "duration_ms": dur,
-                    "n_frames": frames,
-                },
-            )
-        )
-    return pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-
-
 # ---------------------------------------------------------------------------
 # REAL decoders: PGM/PPM images, PCM WAV audio, PGM-sequence video
 # ---------------------------------------------------------------------------
@@ -308,23 +272,6 @@ def decode_media(media: DataFrame) -> DataFrame:
         media, ("media_id", "kind"), "payload",
         "width long, height long, n_frames long, status string",
         per_doc(media_header),
-    )
-
-
-def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
-    """(media_id, features array<float>): deterministic sha-seeded stand-in
-    for an embedding-model forward pass — the Arrow batch shape, schema,
-    and normalization are the real contract."""
-
-    def features(payload) -> np.ndarray:
-        digest = hashlib.sha256(bytes(payload)).digest()
-        seed = int.from_bytes(digest[:4], "big")
-        vec = np.random.RandomState(seed).normal(size=dim)
-        return vec / np.linalg.norm(vec)
-
-    return map_docs(
-        media, ("media_id",), "payload", "features array<double>",
-        lambda ps: [[features(p) for p in ps]],
     )
 
 

@@ -32,20 +32,6 @@ def sample_hash(id_col: str = "doc_id", salt: str = "s0") -> Column:
     ).cast("long")
 
 
-def deterministic_sample(
-    docs: DataFrame,
-    fraction: float,
-    id_col: str = "doc_id",
-    salt: str = "s0",
-) -> DataFrame:
-    """Keep a row iff its hash gate falls below ``fraction`` of the hash
-    space.  A pure filter: no shuffle, no state, pushes into the scan
-    stage; at 100 TB the sample costs exactly one read of the id
-    column."""
-    threshold = int(fraction * _HASH_SPACE)
-    return docs.filter(sample_hash(id_col, salt) < threshold)
-
-
 def stratified_sample(
     docs: DataFrame,
     fractions: dict,

@@ -69,33 +69,6 @@ def cosine_topk(
     )
 
 
-def embedding_dup_pairs_exact(
-    corpus: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact all-pairs embedding near-dup — the VERIFICATION primitive
-    only (O(n^2); never the corpus-scale path — use
-    :func:`embedding_dup_pairs`)."""
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_av"),
-        _norm(F.col(vec_col)).alias("_an"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_bv"),
-        _norm(F.col(vec_col)).alias("_bn"),
-    )
-    return (
-        a.join(broadcast(b), F.col("id_a") < F.col("id_b"))
-        .withColumn("_cos", _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn")))
-        .filter(F.col("_cos") >= threshold)
-        .select("id_a", "id_b")
-    )
-
-
 def _verify_candidate_pairs(
     corpus: DataFrame,
     cand: DataFrame,
@@ -466,7 +439,6 @@ def ivf_centroids_kmeans_distributed(
     n_iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_fraction: float | None = None,
 ):
     """Distributed spherical k-means codebook — the route past the
     ``MAX_AUTO_NLIST`` driver-Lloyd budget (VERDICT r5 #2).  Billion-
@@ -506,15 +478,6 @@ def ivf_centroids_kmeans_distributed(
     scale-extension surface; the quantizer itself is Abbas et al. 2023
     SemDeDup's k-means, public).
 
-    ``sample_fraction``: optionally train on a DISTRIBUTED deterministic
-    hash-gated subset (the md5/xxhash-gate idiom of
-    ``functions/sampling.py`` — reproducible across partitionings, and
-    still never a driver collect).  At 10^10 vectors, Lloyd over every
-    vector every iteration buys little once the subset holds hundreds of
-    members per cell — gate to ~(64 × nlist)/n and the ten iteration
-    scans shrink proportionally while assignment of the FULL corpus
-    (``ivf_assign``) is unchanged.
-
     nlist is bounded by ``MAX_DISTRIBUTED_NLIST`` (the flat-codebook
     budget — see the constant's derivation): there is no training-sample
     collect, but the codebook itself is driver-resident and broadcast by
@@ -537,16 +500,6 @@ def ivf_centroids_kmeans_distributed(
     import warnings
 
     vecs = corpus.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-    if sample_fraction is not None:
-        if not 0.0 < sample_fraction <= 1.0:
-            raise ValueError(
-                f"sample_fraction must be in (0, 1], got {sample_fraction}"
-            )
-        denom = max(1, int(round(1.0 / sample_fraction)))
-        if denom > 1:
-            vecs = vecs.filter(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(denom)) == 0
-            )
     # persist BEFORE the seed collect: the seed job materializes the
     # cache, so an expensive upstream lineage (extraction, joins) runs
     # once, not once for seeds plus once for iteration 1 (review r6)
@@ -641,22 +594,9 @@ def _train_codebook(
     train: str,
     id_col: str,
     vec_col: str,
-    kmeans_sample_fraction: float | None = None,
 ):
     """Shared ``train=`` dispatch for the IVF family (ann_ivf_topk /
-    embedding_dup_pairs_ivf): 'ids' | 'kmeans' | 'distributed'.
-    ``kmeans_sample_fraction`` reaches the distributed trainer's
-    hash-gated subset training; it has no meaning for the other modes
-    (which sample by row count), so passing it with them RAISES — a
-    silently-ignored knob convinces the user subset training took
-    effect (review r6)."""
-    if kmeans_sample_fraction is not None and train != "distributed":
-        raise ValueError(
-            f"kmeans_sample_fraction only applies to train='distributed' "
-            f"(hash-gated subset training); train={train!r} samples by "
-            "row count — use kmeans_sample_size via ivf_centroids_kmeans "
-            "directly, or drop the fraction"
-        )
+    embedding_dup_pairs_ivf): 'ids' | 'kmeans' | 'distributed'."""
     if train == "kmeans":
         return ivf_centroids_kmeans(
             corpus, n_centroids, sample_size=kmeans_sample_size(n_centroids),
@@ -664,8 +604,7 @@ def _train_codebook(
         )
     if train == "distributed":
         return ivf_centroids_kmeans_distributed(
-            corpus, n_centroids, id_col=id_col, vec_col=vec_col,
-            sample_fraction=kmeans_sample_fraction,
+            corpus, n_centroids, id_col=id_col, vec_col=vec_col
         )
     if train == "ids":
         return ivf_centroids(corpus, n_centroids, id_col, vec_col)
@@ -785,7 +724,6 @@ def ann_ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "ids",
-    kmeans_sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF approximate top-k (the coarse-quantizer scale path): corpus
     vectors bucket into their nearest centroid's cell (map-only GEMM);
@@ -808,11 +746,8 @@ def ann_ivf_topk(
     the driver-Lloyd budget; ``"distributed"`` = full-corpus distributed
     Lloyd (:func:`ivf_centroids_kmeans_distributed`) — nlist past the
     driver-Lloyd budget up to the flat-codebook bound
-    (``MAX_DISTRIBUTED_NLIST``), with optional hash-gated subset
-    training via ``kmeans_sample_fraction``."""
-    cents = _train_codebook(
-        corpus, n_centroids, train, id_col, vec_col, kmeans_sample_fraction
-    )
+    (``MAX_DISTRIBUTED_NLIST``)."""
+    cents = _train_codebook(corpus, n_centroids, train, id_col, vec_col)
     c_cells = ivf_assign(corpus, cents, 1, id_col, vec_col).withColumnRenamed(
         id_col, "neighbor_id"
     )
@@ -829,7 +764,6 @@ def embedding_dup_pairs_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "kmeans",
-    kmeans_sample_fraction: float | None = None,
 ) -> DataFrame:
     """SemDeDup-style near-dup pairs (Abbas et al. 2023, public): cluster
     the embedding space with the IVF coarse quantizer, mine candidate
@@ -862,8 +796,7 @@ def embedding_dup_pairs_ivf(
     driver-resident/broadcast — the auto path warns when it clamps
     there, ~16.7M vectors at the 256-member target; this is the
     corpus-scale production shape, ``train="ids"`` the no-training
-    fallback).  ``kmeans_sample_fraction`` threads to the distributed
-    trainer's hash-gated subset training."""
+    fallback)."""
     from tesseract_rs_spark.functions.dedup import guarded_pair_join
 
     if n_centroids is None:
@@ -885,9 +818,7 @@ def embedding_dup_pairs_ivf(
             n_centroids = min(want, MAX_DISTRIBUTED_NLIST)
         else:
             n_centroids = auto_nlist(corpus.count())
-    cents = _train_codebook(
-        corpus, n_centroids, train, id_col, vec_col, kmeans_sample_fraction
-    )
+    cents = _train_codebook(corpus, n_centroids, train, id_col, vec_col)
     cells = ivf_assign(corpus, cents, 1, id_col, vec_col)
     cand = guarded_pair_join(cells, ["cell"], id_col)
     return _verify_candidate_pairs(corpus, cand, threshold, id_col, vec_col)
@@ -899,7 +830,6 @@ def imi_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "distributed",
-    kmeans_sample_fraction: float | None = None,
 ):
     """Two-level product quantizer codebooks (inverted multi-index,
     Babenko & Lempitsky CVPR 2012 — public): train one sub-codebook per
@@ -940,12 +870,8 @@ def imi_codebooks(
     hi = corpus.select(
         id_col, F.slice(F.col(vec_col), half + 1, dim - half).alias(vec_col)
     )
-    cents_lo = _train_codebook(
-        lo, n_cells_per_half, train, id_col, vec_col, kmeans_sample_fraction
-    )
-    cents_hi = _train_codebook(
-        hi, n_cells_per_half, train, id_col, vec_col, kmeans_sample_fraction
-    )
+    cents_lo = _train_codebook(lo, n_cells_per_half, train, id_col, vec_col)
+    cents_hi = _train_codebook(hi, n_cells_per_half, train, id_col, vec_col)
     return cents_lo, cents_hi
 
 
@@ -1046,7 +972,6 @@ def ann_imi_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "distributed",
-    kmeans_sample_fraction: float | None = None,
 ) -> DataFrame:
     """IMI approximate top-k — :func:`ann_ivf_topk` over the product
     grid, for the regime where the wanted cell count exceeds any flat
@@ -1058,8 +983,7 @@ def ann_imi_topk(
     result equals the exact top-k for ANY codebook.  Returns
     (query_id, rank, neighbor_id)."""
     cents_lo, cents_hi = imi_codebooks(
-        corpus, n_cells_per_half, id_col, vec_col, train,
-        kmeans_sample_fraction,
+        corpus, n_cells_per_half, id_col, vec_col, train
     )
     c_cells = imi_assign(
         corpus, cents_lo, cents_hi, id_col, vec_col
@@ -1078,7 +1002,6 @@ def embedding_dup_pairs_imi(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "distributed",
-    kmeans_sample_fraction: float | None = None,
 ) -> DataFrame:
     """SemDeDup-style near-dup pairs over the IMI product grid — the
     quantizer shape PAST the flat-codebook bound.  Identical pipeline to
@@ -1124,7 +1047,7 @@ def embedding_dup_pairs_imi(
             )
             n_cells_per_half = limit
     cents_lo, cents_hi = imi_codebooks(
-        corpus, n_cells_per_half, id_col, vec_col, train, kmeans_sample_fraction
+        corpus, n_cells_per_half, id_col, vec_col, train
     )
     cells = imi_assign(corpus, cents_lo, cents_hi, id_col, vec_col)
     cand = guarded_pair_join(cells, ["cell"], id_col)
@@ -1139,8 +1062,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     train: str = "kmeans",
     pairs: DataFrame | None = None,
-    kmeans_sample_fraction: float | None = None,
-    quantizer: str = "ivf",
 ) -> DataFrame:
     """End-to-end SemDeDup: cell-bucketed near-dup pairs -> connected
     components over the pair graph (chains collapse into ONE cluster) ->
@@ -1165,36 +1086,20 @@ def semantic_dedup(
     ``pairs``: optionally pass an already-mined (id_a, id_b) pair frame
     (e.g. the :func:`embedding_dup_pairs_ivf` output a caller has
     materialized for its own reporting) so the mining stage — quantizer
-    training included — runs once, not twice.  When ``pairs`` is given,
-    ``threshold`` / ``n_centroids`` / ``train`` are IGNORED (they only
-    parameterize the mining this call now skips) — the caller owns the
-    guarantee that the frame was mined from this corpus at the intended
-    threshold.  The id columns are validated against ``corpus[id_col]``'s
+    training included — runs once, not twice; past the flat-codebook
+    bound, pass :func:`embedding_dup_pairs_imi`'s pairs.  When ``pairs``
+    is given, ``threshold`` / ``n_centroids`` / ``train`` are IGNORED
+    (they only parameterize the mining this call now skips) — the caller
+    owns the guarantee that the frame was mined from this corpus at the
+    intended threshold.  The id columns are validated against ``corpus[id_col]``'s
     type to catch the likeliest mix-up (a pair frame keyed on a different
-    id column).
-
-    ``quantizer``: ``"ivf"`` (flat coarse codebook — the default while
-    nlist fits its bounds) or ``"imi"`` (two-level product grid via
-    :func:`embedding_dup_pairs_imi` — the shape past the flat-codebook
-    bound; ``n_centroids`` is then the PER-HALF cell count, effective
-    cells its square)."""
+    id column)."""
     from tesseract_rs_spark.functions.dedup import dup_clusters
 
     if pairs is None:
-        if quantizer == "imi":
-            pairs = embedding_dup_pairs_imi(
-                corpus, threshold, n_centroids, id_col, vec_col, train,
-                kmeans_sample_fraction=kmeans_sample_fraction,
-            )
-        elif quantizer == "ivf":
-            pairs = embedding_dup_pairs_ivf(
-                corpus, threshold, n_centroids, id_col, vec_col, train,
-                kmeans_sample_fraction=kmeans_sample_fraction,
-            )
-        else:
-            raise ValueError(
-                f"quantizer must be 'ivf' or 'imi', got {quantizer!r}"
-            )
+        pairs = embedding_dup_pairs_ivf(
+            corpus, threshold, n_centroids, id_col, vec_col, train
+        )
     else:
         corpus_t = corpus.schema[id_col].dataType
         for c in ("id_a", "id_b"):

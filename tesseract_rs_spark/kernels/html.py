@@ -82,8 +82,9 @@ _SPLIT_RE = re.compile(
 # inline tag, like every name outside the block set, ``br`` and ``a``.
 _TAG_HEAD_RE = re.compile(r"</?[a-zA-Z][a-zA-Z0-9:-]*")
 
+# whole attribute names only: ``data-id`` or ``subclass`` is another attribute
 _CLASS_ID_RE = re.compile(
-    r"""(?:class|id)\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))""", re.IGNORECASE
+    r"""(?<![^\s"'/])(?:class|id)\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))""", re.IGNORECASE
 )
 
 # Block-level elements: opening/closing one flushes the current text block.
@@ -190,8 +191,10 @@ def _head_info(head: str) -> tuple:
 
 def _token_info(token: str) -> tuple:
     """Dispatch info of one tokenizer token, cached in :data:`_TOKEN_INFO`."""
-    if token[1] == "!":
-        return _INERT  # comments are often unique per page: never cached
+    if not token or token[1] == "!":
+        # the tail sentinel, and comments, which are often unique per
+        # page: never cached
+        return _INERT
     head = _TAG_HEAD_RE.match(token).group()
     info = _HEAD_INFO.get(head) or _head_info(head)
     if len(info) == 4 and not info[1]:  # block-open: add its class/id flags
@@ -306,8 +309,9 @@ def _segment(doc: str, cfg: ExtractConfig, deadline: float | None = None):
     a block's lifetime: every block tag flushes the open block first.
 
     Hot path: ONE C-level ``re.split`` yields ``[text, token] * n + [tail]``;
-    source offsets reconstruct from cumulative lengths, and each token's
-    dispatch is one probe of :data:`_TOKEN_INFO`.  Every
+    an empty sentinel token after the tail sends it through the loop like
+    every other text.  Source offsets reconstruct from cumulative lengths,
+    and each token's dispatch is one probe of :data:`_TOKEN_INFO`.  Every
     ``_DEADLINE_STRIDE`` tokens the wall clock is checked against
     ``deadline`` (monotonic seconds) so a pathological page aborts with
     :class:`PageTimeout` instead of stalling the task."""
@@ -332,24 +336,25 @@ def _segment(doc: str, cfg: ExtractConfig, deadline: float | None = None):
     start = total = anchor = 0
 
     split = _SPLIT_RE.split(doc)
+    split.append("")  # the tail's sentinel token: inert, zero-length
     texts = split[0::2]
     tokens = split[1::2]
     # source offsets in one C pass: offs[2k] / offs[2k + 1] are where
     # token k starts / ends
     offs = list(_accumulate(map(len, split)))
-    end = 0
     n_tokens = 0
     timed = deadline is not None  # hoisted: the common case pays no
     # counter arithmetic per token (page_timeout_ms defaults to None)
-    # zip stops at the token count; split[-1] is the tail text.  The
-    # lazy ``map`` sees infos the loop caches for earlier tokens.
+    # The lazy ``map`` sees infos the loop caches for earlier tokens.
     for text, token, info, tok_start, end in zip(
         texts, tokens, map(_TOKEN_INFO.get, tokens), offs[0::2], offs[1::2]
     ):
         if timed:
-            n_tokens += 1
-            if n_tokens % _DEADLINE_STRIDE == 0 and _time.monotonic() > deadline:
+            # checked before the count moves, so the sentinel never adds a
+            # check: one after every full stride of real tokens
+            if n_tokens % _DEADLINE_STRIDE == 0 and n_tokens and _time.monotonic() > deadline:
                 raise PageTimeout
+            n_tokens += 1
         if text:
             if not text.isspace():
                 tlen = len(text)
@@ -409,16 +414,8 @@ def _segment(doc: str, cfg: ExtractConfig, deadline: float | None = None):
                     del tag_stack[i:]
                     cur_tag = tag_stack[-1][0] if tag_stack else "body"
                     break
-    text = split[-1]
-    if text and not text.isspace():
-        if parts is None:
-            parts = []
-            start = end
-            total = anchor = 0
-        parts.append(text)
-        total += len(text)
     if parts is not None:
-        closed.append((parts, start, len(doc), total, anchor, cur_tag, dead, keep))
+        closed.append((parts, start, end, total, anchor, cur_tag, dead, keep))
 
     recs: list = []
     for parts, start, end, total, anchor, tag, dead, keep in closed:

@@ -509,55 +509,12 @@ def _word_glyph_dists(
     return LANG_SUMS[lang][allowed_idx][None, :] + flat.sum(axis=1)[:, None] - 2 * dots
 
 
-def _word_glyph_ncc(
-    binary: np.ndarray, box, allowed_idx, lang: str = "eng"
-) -> np.ndarray:
-    """(n_glyphs, n_allowed) normalized cross-correlation scores
-    a.c / sqrt(|a| |c|) — the OEM_NCC recognizer (engine-mode switch,
-    tessedit_ocr_engine_mode).  Same single matmul; different metric."""
-    flat = _word_cells(binary, box)
-    templates = LANG_ATLASES_F32[lang][allowed_idx]
-    dots = (flat.astype(np.float32) @ templates.T).astype(np.float64)  # exact ints
-    norms = np.sqrt(
-        np.maximum(1.0, flat.sum(axis=1).astype(np.float64))[:, None]
-        * LANG_SUMS[lang][allowed_idx].astype(np.float64)[None, :]
-    )
-    return dots / norms
-
-
 def _allowed_indices(whitelist: set | None):
     if whitelist is None:
         return np.arange(len(CHARSET))
     return np.array(
         [i for i, c in enumerate(CHARSET) if c in whitelist], dtype=np.int64
     )
-
-
-def decode_word(
-    binary: np.ndarray, box, whitelist: set | None, lang: str = "eng", oem: int = 0
-) -> tuple:
-    """Template decode of one word region -> (text, conf).  OEM selects
-    the recognizer (init_1 / tessedit_ocr_engine_mode): 0/3 = Hamming
-    matcher (exact mask match = conf 100), 1 = normalized correlation.
-    Both decode clean pages identically; confidences diverge on degraded
-    glyphs.  Whitelist restricts the template set (decode-mask semantics,
-    tests/integration_test.rs:102-106)."""
-    allowed = _allowed_indices(whitelist)
-    if len(allowed) == 0:
-        return "", 0.0
-    if oem == 1:  # OEM_NCC
-        scores = _word_glyph_ncc(binary, box, allowed, lang)
-        best = scores.argmax(axis=1)
-        chars = "".join(CHARSET[allowed[j]] for j in best)
-        conf = float((100.0 * scores[np.arange(len(best)), best]).mean())
-        return chars, conf
-    dists = _word_glyph_dists(binary, box, allowed, lang)
-    best = dists.argmin(axis=1)
-    cell_size = GLYPH_H * GLYPH_W
-    best_d = dists[np.arange(len(best)), best]
-    chars = "".join(CHARSET[allowed[j]] for j in best)
-    conf = float((100.0 * (1.0 - best_d / cell_size)).mean())
-    return chars, conf
 
 
 _CHARSET_ARR = np.array(list(CHARSET))
@@ -575,9 +532,8 @@ def _decode_layout(
     single (n_glyphs_total, cell) matrix, per-glyph best matches and
     confidences come out vectorized, per-word confidences via
     ``np.add.reduceat``, and the multi-language vote (first language wins
-    ties within 1e-9, same rule as :func:`decode_word_langs`) is an array
-    comparison.  Returns [(para_id, line_id, word_id, box, text, conf,
-    lang)] in reading order."""
+    ties within 1e-9) is an array comparison.  Returns [(para_id, line_id,
+    word_id, box, text, conf, lang)] in reading order."""
     allowed = _allowed_indices(whitelist)
     if len(allowed) == 0:
         return []
@@ -688,23 +644,6 @@ def _decode_layout(
             )
         )
     return out
-
-
-def decode_word_langs(
-    binary: np.ndarray, box, whitelist: set | None, langs: tuple, oem: int = 0
-) -> tuple:
-    """Joint multi-language decode (the "tur+eng" init,
-    /root/reference/tests/integration_test.rs:91-120): decode against each
-    language's atlas, keep the highest-confidence reading, and report the
-    winning model — the word_recognition_language channel
-    (/root/reference/src/result_iterator.rs:78-89).  Ties keep the first
-    listed language."""
-    best = None
-    for lang in langs:
-        chars, conf = decode_word(binary, box, whitelist, lang, oem)
-        if best is None or conf > best[1] + 1e-9:
-            best = (chars, conf, lang)
-    return best if best is not None else ("", 0.0, langs[0])
 
 
 def decode_word_choices(
@@ -838,7 +777,6 @@ def deskew(binary: np.ndarray, angle_deg: float) -> np.ndarray:
     return out
 
 
-WRITING_DIRECTION_LTR = "left_to_right"
 SCRIPT_LATIN = "Latin"
 
 # choose the non-default orientation only on a clear win (the
@@ -925,21 +863,6 @@ def detect_os(binary: np.ndarray, margin: float = _ORIENT_MARGIN) -> tuple:
     # match quality (one script family in the embedded model set)
     script_conf = round(score, 4)
     return deg, conf, SCRIPT_LATIN, script_conf
-
-
-def osd_orientation(binary: np.ndarray) -> int:
-    """Orientation in degrees ccw (0/90/180/270) — detect_os, orientation
-    channel only."""
-    return detect_os(binary)[0]
-
-
-def get_text_direction(binary: np.ndarray) -> tuple:
-    """(direction, confidence) — the get_text_direction surface
-    (/root/reference/src/api.rs:1017-1028): this engine's reading order is
-    left-to-right once the page is upright, so direction is LTR with the
-    orientation vote's confidence."""
-    _deg, conf, _script, _sconf = detect_os(binary)
-    return WRITING_DIRECTION_LTR, conf
 
 
 def _prepare(payload):

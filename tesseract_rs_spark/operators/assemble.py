@@ -1,64 +1,16 @@
-"""Level rollups over the exploded word table — the ResultIterator
-``get_utf8_text(level)`` analog (/root/reference/src/result_iterator.rs:41-54):
-text at line/block/document level is an ordered aggregation over word rows.
+"""Per-level views of the exploded word table — the ResultIterator
+``confidence(level)`` and begin/final predicates (the reference's
+``src/result_iterator.rs:56-66`` and ``src/page_iterator.rs``).
 
-Ordering is encoded in the id columns, never in row order, so every rollup
-sorts the collected structs explicitly (``array_sort`` on the leading id) —
-deterministic under any partitioning/shuffle (SURVEY.md §7b).
+Ordering is encoded in the id columns, never in row order, so every view
+reads positions from the ids — deterministic under any
+partitioning/shuffle (SURVEY.md §7b).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-
-def _ordered_concat(id_col: str, text_col: str, sep: str):
-    """collect (id, text) structs -> sort by id -> join texts with sep."""
-    return F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col(id_col), F.col(text_col)))),
-            lambda s: s[text_col],
-        ),
-        sep,
-    )
-
-
-def rollup_lines(words: DataFrame, key: str = "url") -> DataFrame:
-    """words -> (key, block_id, line_id, text, conf) — RIL_TEXTLINE level."""
-    return words.groupBy(key, "block_id", "line_id").agg(
-        _ordered_concat("word_id", "word", " ").alias("text"),
-        F.avg("conf").alias("conf"),
-        F.count("*").alias("n_words"),
-    )
-
-
-def rollup_blocks(words: DataFrame, key: str = "url") -> DataFrame:
-    """words -> (key, block_id, text, conf) — RIL_BLOCK level."""
-    lines = rollup_lines(words, key)
-    return lines.groupBy(key, "block_id").agg(
-        _ordered_concat("line_id", "text", "\n").alias("text"),
-        F.avg("conf").alias("conf"),
-        F.sum("n_words").alias("n_words"),
-    )
-
-
-def reassemble_text(words: DataFrame, key: str = "url") -> DataFrame:
-    """words -> (key, text): full assembly contract (words ' ', lines '\\n',
-    blocks '\\n\\n', trailing '\\n').  Must reproduce extract_text byte-for-
-    byte — asserted in tests."""
-    blocks = rollup_blocks(words, key)
-    return blocks.groupBy(key).agg(
-        F.concat(_ordered_concat("block_id", "text", "\n\n"), F.lit("\n")).alias("text")
-    )
-
-
-def mean_text_conf(words: DataFrame, key: str = "url") -> DataFrame:
-    """mean word confidence as int per document
-    (/root/reference/src/api.rs:114-120)."""
-    return words.groupBy(key).agg(
-        F.round(F.avg("conf")).cast("long").alias("mean_conf")
-    )
 
 
 def level_confidence(
@@ -70,21 +22,6 @@ def level_confidence(
     (key, level ids), no window and no second pass."""
     return words.groupBy(key, *level_cols).agg(
         F.avg("conf").alias("level_conf")
-    )
-
-
-def all_word_confidences(words: DataFrame, key: str = "url") -> DataFrame:
-    """ordered per-document confidence list
-    (/root/reference/src/api.rs:555-572)."""
-    return words.groupBy(key).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("block_id", "para_id", "line_id", "word_id", "conf")
-                )
-            ),
-            lambda s: s["conf"],
-        ).alias("confs")
     )
 
 

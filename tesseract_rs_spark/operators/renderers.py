@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from tesseract_rs_spark.operators.arrow import map_docs, per_doc
 
 
-# renderer metadata getters (get_extension / get_title / get_image_num,
+# renderer metadata (get_extension / get_image_num,
 # /root/reference/src/result_renderer.rs:141-185)
 RENDERER_EXTENSIONS = {
     "text": "txt",
@@ -33,22 +33,6 @@ RENDERER_EXTENSIONS = {
     "wordstr_box": "box",
     "pdf": "pdf",
 }
-
-
-def renderer_extension(kind: str) -> str:
-    """File extension for a renderer kind (get_extension analog); unknown
-    kinds are an error, mirroring the reference's typed renderer set."""
-    if kind not in RENDERER_EXTENSIONS:
-        raise KeyError(f"unknown renderer kind: {kind}")
-    return RENDERER_EXTENSIONS[kind]
-
-
-def renderer_title(output_name: str) -> str:
-    """get_title analog: the document title is the output name set at
-    begin_document (set_output_name / --output)."""
-    import os
-
-    return os.path.splitext(os.path.basename(output_name))[0]
 
 
 def with_image_num(pages: DataFrame, key: str = "url", page_col: str = "page_num"):
@@ -300,20 +284,6 @@ def render_hocr_bbox(words: DataFrame, key: str = "url") -> DataFrame:
     )
 
 
-def render_box(words: DataFrame, key: str = "url") -> DataFrame:
-    """Box-format renderer (get_box_text analog,
-    /root/reference/src/api.rs:467-480: per-symbol "char l b r t page";
-    here per-word "word start end block page")."""
-    line = F.format_string(
-        "%s %d %d %d 0",
-        F.col("word"),
-        F.col("span_start"),
-        F.col("span_end"),
-        F.col("block_id"),
-    )
-    return _ordered_doc_concat(words, key, line).withColumnRenamed("text", "box")
-
-
 def render_alto(words: DataFrame, key: str = "url") -> DataFrame:
     """ALTO-XML renderer (get_alto_text analog,
     /root/reference/src/api.rs:333-346), minimal String/TextLine markup."""
@@ -380,7 +350,7 @@ def pdf_bytes(
     page_w: int, page_h: int, rows, title: str = "", image=None
 ) -> bytes:
     """One deterministic, valid PDF 1.4 with a positioned text layer —
-    the byte-assembly half of :func:`render_pdf` (driver-free, unit
+    the byte-assembly half of the PDF renderers (driver-free, unit
     testable).  ``rows`` = [(x, y_baseline_from_bottom, word)] in reading
     order.  Every object offset in the xref is computed exactly, so the
     output parses in strict readers and is byte-reproducible (the same
@@ -537,19 +507,6 @@ def parse_pdf_text(pdf: bytes) -> str:
     return "\n\n".join("\n".join(p) for p in paras) + "\n"
 
 
-def _doc_pdf(pdf, title: str) -> bytes:
-    """One sorted word group -> its PDF bytes (shared by render_pdf and
-    pdf_roundtrip_text; ``pdf`` is one document's pandas group)."""
-    pdf = pdf.sort_values(["block_id", "para_id", "line_id", "word_id"])
-    page_w = int(pdf["page_width"].iloc[0])
-    page_h = int(pdf["page_height"].iloc[0])
-    rows = [
-        (int(x), page_h - int(b), str(w))
-        for x, b, w in zip(pdf["left"], pdf["bottom"], pdf["word"])
-    ]
-    return pdf_bytes(page_w, page_h, rows, title)
-
-
 def pdf_roundtrip_text(
     words: DataFrame, key: str = "url", title: str = ""
 ) -> DataFrame:
@@ -567,12 +524,16 @@ def pdf_roundtrip_text(
         "left", "bottom", "page_width", "page_height",
     )
 
-    def gen(pdf: pd.DataFrame) -> pd.DataFrame:
+    def gen(doc: pd.DataFrame) -> pd.DataFrame:
+        doc = doc.sort_values(["block_id", "para_id", "line_id", "word_id"])
+        page_h = int(doc["page_height"].iloc[0])
+        rows = [
+            (int(x), page_h - int(b), str(w))
+            for x, b, w in zip(doc["left"], doc["bottom"], doc["word"])
+        ]
+        blob = pdf_bytes(int(doc["page_width"].iloc[0]), page_h, rows, title)
         return pd.DataFrame(
-            {
-                key: [pdf[key].iloc[0]],
-                "pdf_text": [parse_pdf_text(_doc_pdf(pdf, title))],
-            }
+            {key: [doc[key].iloc[0]], "pdf_text": [parse_pdf_text(blob)]}
         )
 
     return sel.groupBy(key).applyInPandas(
@@ -580,45 +541,8 @@ def pdf_roundtrip_text(
     )
 
 
-def render_pdf(words: DataFrame, key: str = "url", title: str = "") -> DataFrame:
-    """PDF renderer — the ``textonly`` mode of the reference's
-    TessPDFRenderer (``new_pdf_renderer(outputbase, datadir, textonly)``,
-    /root/reference/src/result_renderer.rs:69-82): one searchable PDF per
-    document with every recognized word placed at its page coordinates
-    (PDF's bottom-left origin — the same y-flip as the box renderer),
-    begin_document's title in the Info dictionary.  For ``textonly=false``
-    (the page image embedded under an invisible text layer) see
-    :func:`render_pdf_with_image`.
-
-    (key, pdf binary).  Byte assembly needs imperative offset arithmetic
-    (the xref), so this is the one renderer that runs as grouped
-    ``applyInPandas`` instead of a string-template aggregation — one
-    Python call per DOCUMENT (not per word), emitting a single binary;
-    the group key is the document id, so the shuffle is the same
-    per-document exchange every ordered rollup renderer pays."""
-    import pandas as pd
-
-    key_type = words.schema[key].dataType.simpleString()
-    sel = words.select(
-        key, "block_id", "para_id", "line_id", "word_id", "word",
-        "left", "bottom", "page_width", "page_height",
-    )
-
-    def gen(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                key: [pdf[key].iloc[0]],
-                "pdf": [_doc_pdf(pdf, title)],
-            }
-        )
-
-    return sel.groupBy(key).applyInPandas(
-        gen, schema=f"{key} {key_type}, pdf binary"
-    )
-
-
 def _image_layer(words: DataFrame, pages: DataFrame, key: str) -> DataFrame:
-    """Shared scale shape of the image-under-text renderers: the word
+    """Scale shape of the image-under-text stage: the word
     layer collapses to ONE array-of-structs row per document JVM-side
     (``array_sort(collect_list(struct))`` — reading order is the struct's
     leading id fields), and only then joins the one-row-per-doc page
@@ -645,40 +569,6 @@ def _image_layer(words: DataFrame, pages: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _image_pdf(layer: dict, title: str):
-    """One document's ``_layer`` struct -> (pdf bytes, source gray image |
-    None)."""
-    from tesseract_rs_spark.kernels.raster import decode_page
-
-    img, _status = decode_page(layer["html"])
-    pw, ph = int(layer["page_width"]), int(layer["page_height"])
-    rows = [
-        (int(w["left"]), ph - int(w["bottom"]), str(w["word"]))
-        for w in layer["_ws"]
-    ]
-    return pdf_bytes(pw, ph, rows, title, image=img), img
-
-
-def render_pdf_with_image(
-    words: DataFrame, pages: DataFrame, key: str = "url", title: str = ""
-) -> DataFrame:
-    """``textonly=false`` PDF renderer — the reference's default
-    TessPDFRenderer mode (/root/reference/src/result_renderer.rs:69-82):
-    the source page raster is embedded as a FlateDecode /DeviceGray
-    XObject scaled to the MediaBox with the recognized words drawn OVER
-    it in render mode 3 (invisible), so the output displays the scanned
-    page and stays searchable.  ``pages`` is the raster pages frame the
-    words came from (``key`` + ``html`` PAGE-binary).
-
-    (key, pdf binary).  Final byte assembly (decode raster -> grayscale
-    -> zlib -> xref arithmetic) is one Arrow stage over the one-row-per-doc
-    :func:`_image_layer` frame."""
-    return map_docs(
-        _image_layer(words, pages, key), (key,), "_layer", "pdf binary",
-        per_doc(lambda layer: (_image_pdf(layer, title)[0],)),
-    )
-
-
 def pdf_image_roundtrip_text(
     words: DataFrame, pages: DataFrame, key: str = "url", title: str = ""
 ) -> DataFrame:
@@ -693,8 +583,16 @@ def pdf_image_roundtrip_text(
     assembly) stays the oracle for this mode too."""
     import numpy as np
 
+    from tesseract_rs_spark.kernels.raster import decode_page
+
     def row(layer: dict) -> tuple:
-        blob, src = _image_pdf(layer, title)
+        src, _status = decode_page(layer["html"])
+        pw, ph = int(layer["page_width"]), int(layer["page_height"])
+        rows = [
+            (int(w["left"]), ph - int(w["bottom"]), str(w["word"]))
+            for w in layer["_ws"]
+        ]
+        blob = pdf_bytes(pw, ph, rows, title, image=src)
         back = extract_pdf_image(blob)
         ok = (
             src is None and back is None

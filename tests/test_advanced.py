@@ -3,15 +3,11 @@ plumbing tests."""
 
 import pyspark.sql.functions as F
 import pytest
+from support import make_media_corpus
 
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.corpus import render_html
-from tesseract_rs_spark.functions.multimodal import (
-    decode_media,
-    extract_features,
-    make_media_corpus,
-    sample_frames,
-)
+from tesseract_rs_spark.functions.multimodal import decode_media, sample_frames
 from tesseract_rs_spark.kernels.raster import raster_symbols, render_page
 from tesseract_rs_spark.operators.multipage import process_pages
 from tesseract_rs_spark.operators.ocr import ocr_layout, ocr_symbols
@@ -194,16 +190,6 @@ class TestMultimodal:
         )
         r = decode_media(bad).collect()[0]
         assert r["status"] == "unsupported_codec"
-
-    def test_features_deterministic_unit_norm(self, spark, media):
-        import numpy as np
-
-        f1 = extract_features(media).toPandas().sort_values("media_id")
-        f2 = extract_features(media).toPandas().sort_values("media_id")
-        assert all(list(a) == list(b) for a, b in zip(f1["features"], f2["features"]))
-        for v in f1["features"]:
-            assert abs(np.linalg.norm(v) - 1.0) < 1e-9
-            assert len(v) == 16
 
     def test_frame_sampling(self, spark, media):
         frames = sample_frames(media, every_k=30)

@@ -7,13 +7,10 @@ The acceptance gate: per-url sha256(text) equality vs the golden table
 import pyspark.sql.functions as F
 import pytest
 
+from support import reassemble_text
+
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.corpus import make_corpus
-from tesseract_rs_spark.operators.assemble import (
-    all_word_confidences,
-    mean_text_conf,
-    reassemble_text,
-)
 from tesseract_rs_spark.operators.extract import extract_text, extract_words
 from tesseract_rs_spark.plans.partitioning import salted_repartition, split_oversized
 
@@ -76,12 +73,15 @@ def test_exploded_words_reassemble(spark, corpus_dirs):
 
 
 def test_confidence_rollups(spark, corpus_dirs):
-    """mean_text_conf / all_word_confidences consistency with extract_text
+    """extract_text's ``mean_conf`` (the mean_text_conf analog) agrees with
+    the word table's confidences, and every word confidence is in [0, 100]
     (/root/reference/src/api.rs:114-120, 555-572)."""
     pages_path, _ = corpus_dirs
     pages = spark.read.parquet(pages_path)
     words = extract_words(pages, ExtractConfig())
-    mtc = mean_text_conf(words).withColumnRenamed("mean_conf", "mean_conf_rollup")
+    mtc = words.groupBy("url").agg(
+        F.round(F.avg("conf")).cast("long").alias("mean_conf_rollup")
+    )
     full = extract_text(pages, ExtractConfig()).filter("n_words > 0")
     joined = full.join(mtc, "url")
     assert joined.count() == full.count()
@@ -90,9 +90,7 @@ def test_confidence_rollups(spark, corpus_dirs):
         F.abs(F.col("mean_conf") - F.col("mean_conf_rollup")) > 1
     ).count()
     assert mism == 0
-    confs = all_word_confidences(words)
-    row = confs.limit(1).collect()[0]
-    assert all(0.0 <= c <= 100.0 for c in row["confs"])
+    assert words.filter(~F.col("conf").between(0.0, 100.0)).count() == 0
 
 
 def test_determinism_two_runs(spark, corpus_dirs):

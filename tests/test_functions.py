@@ -5,10 +5,9 @@ the reference's confidence quality gates
 
 import pyspark.sql.functions as F
 import pytest
+from support import embedding_dup_pairs_exact
 
 from tesseract_rs_spark.functions.dedup import (
-    dedup_exact,
-    hamming64,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -50,17 +49,6 @@ def test_minhash_lsh_recall_equals_exact(docs):
     }
     assert exact, "corpus should contain planted near-duplicates"
     assert approx == exact
-
-
-def test_dedup_exact_with_injected_duplicates(spark, docs):
-    dup = docs.limit(5).withColumn("doc_id", F.col("doc_id") + 100000)
-    full = docs.unionByName(dup)
-    res = dedup_exact(full)
-    groups = res.filter(F.col("group_size") > 1)
-    assert groups.count() == 10  # 5 pairs, both members flagged
-    # keeper is always the minimum id (the original)
-    bad = groups.filter(F.col("keeper_id") >= 100000).count()
-    assert bad == 0
 
 
 def test_dedup_keep_first_survivors(spark, docs):
@@ -240,25 +228,10 @@ def test_otsu_non_uint8_fallback():
     assert otsu_threshold(img8.astype(np.int64)) == otsu_threshold(img8)
 
 
-def test_deterministic_sample_stable_and_sized(spark, docs):
-    from tesseract_rs_spark.functions.sampling import deterministic_sample
-
-    a = sorted(r["doc_id"] for r in deterministic_sample(docs, 0.4).collect())
-    b = sorted(
-        r["doc_id"]
-        for r in deterministic_sample(docs.repartition(13), 0.4).collect()
-    )
-    assert a == b  # partitioning-independent
-    n = docs.count()
-    assert 0.25 * n < len(a) < 0.55 * n  # gate actually near the fraction
-    c = sorted(
-        r["doc_id"]
-        for r in deterministic_sample(docs, 0.4, salt="other").collect()
-    )
-    assert a != c  # salt changes the draw
-
-
 def test_simhash_separates_near_dups(spark, docs):
+    def hamming64(col_a, col_b):
+        return F.bit_count(col_a.bitwiseXOR(col_b))
+
     sh = simhash(docs)
     pairs = ngram_jaccard_pairs(docs, threshold=0.8).select("id_a", "id_b")
     a = sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("simhash", "sh_a")
@@ -394,10 +367,7 @@ def test_embedding_dup_pairs_lsh_equals_exact(emb):
     """The LSH-bucketed scale path must return exactly the all-pairs
     answer (candidates recalled, exact-cosine verified) — and its plan
     must not contain a corpus x corpus nested-loop join."""
-    from tesseract_rs_spark.functions.similarity import (
-        embedding_dup_pairs,
-        embedding_dup_pairs_exact,
-    )
+    from tesseract_rs_spark.functions.similarity import embedding_dup_pairs
 
     lsh = embedding_dup_pairs(emb, threshold=0.45)
     plan = lsh._jdf.queryExecution().executedPlan().toString()
@@ -1527,35 +1497,6 @@ def test_semantic_dedup_pairs_frame_validated(spark, emb):
         semantic_dedup(base, pairs=bad_type)
 
 
-def test_ivf_kmeans_distributed_sample_gate(spark):
-    """sample_fraction trains on a deterministic hash-gated subset with
-    no driver collect: same codebook under different partitionings,
-    out-of-range fractions rejected."""
-    import numpy as np
-
-    from tesseract_rs_spark.functions.similarity import (
-        ivf_centroids_kmeans_distributed,
-    )
-
-    corpus = spark.createDataFrame(
-        _distinct_unit_vectors(600), "vec_id long, embedding array<float>"
-    )
-    a = ivf_centroids_kmeans_distributed(
-        corpus.repartition(2), 8, n_iters=3, sample_fraction=0.5
-    )
-    b = ivf_centroids_kmeans_distributed(
-        corpus.repartition(7), 8, n_iters=3, sample_fraction=0.5
-    )
-    assert len(a) == len(b) == 8
-    assert np.allclose(
-        np.stack([c for _, c in a]), np.stack([c for _, c in b]), atol=1e-9
-    )
-    with pytest.raises(ValueError, match="sample_fraction"):
-        ivf_centroids_kmeans_distributed(corpus, 4, sample_fraction=1.5)
-    with pytest.raises(ValueError, match="sample_fraction"):
-        ivf_centroids_kmeans_distributed(corpus, 4, sample_fraction=0.0)
-
-
 def test_ivf_kmeans_distributed_empty_and_degenerate(spark):
     """Empty corpus -> empty codebook (mirrors the other trainers); a
     corpus with fewer distinct directions than requested cells warns and
@@ -1612,60 +1553,10 @@ def test_ivf_distributed_flat_codebook_bound(spark, monkeypatch):
     mined = {tuple(r) for r in pairs.collect()}
     exact = {
         tuple(r)
-        for r in similarity.embedding_dup_pairs_exact(
-            corpus, threshold=0.999
-        ).collect()
+        for r in embedding_dup_pairs_exact(corpus, threshold=0.999).collect()
     }
     assert mined and mined <= exact
 
-
-def test_ivf_sample_fraction_threads_through_family(spark, emb):
-    """kmeans_sample_fraction reaches the distributed trainer from every
-    public entry point: full-recall identity still holds for ann_ivf_topk
-    (nprobe == nlist is exact for ANY codebook), and semantic_dedup's
-    survivor set matches the untrained-sample run."""
-    from tesseract_rs_spark.functions.similarity import (
-        ann_ivf_topk,
-        cosine_topk,
-        semantic_dedup,
-    )
-
-    q = emb.filter(F.col("vec_id") < 5)
-    exact = {tuple(r) for r in cosine_topk(emb, q, k=3).collect()}
-    approx = {
-        tuple(r)
-        for r in ann_ivf_topk(
-            emb, q, k=3, n_centroids=8, nprobe=8, train="distributed",
-            kmeans_sample_fraction=0.5,
-        ).collect()
-    }
-    assert approx == exact
-    base = emb.limit(20)
-    dup = base.filter(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.lit(100000).cast("long")
-    )
-    corpus = base.unionByName(dup)
-    full = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            corpus, threshold=0.999, n_centroids=4, train="distributed"
-        ).collect()
-    }
-    gated = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            corpus, threshold=0.999, n_centroids=4, train="distributed",
-            kmeans_sample_fraction=0.9,
-        ).collect()
-    }
-    assert gated == full
-    # the fraction is a distributed-trainer knob: passing it with the
-    # sampled or id trainers raises instead of silently no-opping
-    with pytest.raises(ValueError, match="only applies to"):
-        semantic_dedup(
-            corpus, threshold=0.999, n_centroids=4, train="kmeans",
-            kmeans_sample_fraction=0.5,
-        )
 
 def _imi_vectors(n):
     """n deterministic 4-d vectors varying in BOTH halves (the
@@ -1732,10 +1623,7 @@ def test_imi_full_recall_and_subset(spark):
     grid every emitted pair still passed the exact verify (IMI can miss
     cross-cell pairs but never invents one), and exact duplicates always
     share a cell."""
-    from tesseract_rs_spark.functions.similarity import (
-        embedding_dup_pairs_exact,
-        embedding_dup_pairs_imi,
-    )
+    from tesseract_rs_spark.functions.similarity import embedding_dup_pairs_imi
 
     base = spark.createDataFrame(
         _imi_vectors(60), "vec_id long, embedding array<float>"
@@ -1794,14 +1682,8 @@ def test_imi_grid_exceeds_codebook_rows(spark):
 
 def test_imi_degenerate_inputs(spark):
     """Empty corpus and sub-2-dim vectors raise with actionable
-    messages; a width-mismatched corpus fails fast in assignment;
-    semantic_dedup dispatches the quantizer= knob and rejects unknown
-    values."""
-    from tesseract_rs_spark.functions.similarity import (
-        imi_assign,
-        imi_codebooks,
-        semantic_dedup,
-    )
+    messages; a width-mismatched corpus fails fast in assignment."""
+    from tesseract_rs_spark.functions.similarity import imi_assign, imi_codebooks
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="non-empty"):
@@ -1821,15 +1703,16 @@ def test_imi_degenerate_inputs(spark):
     )
     with pytest.raises(Exception, match="codebook dim"):
         imi_assign(wide, lo_c, hi_c).collect()
-    with pytest.raises(ValueError, match="quantizer"):
-        semantic_dedup(ok, quantizer="pq")
 
 
 def test_semantic_dedup_imi_matches_ivf_survivors(spark, emb):
-    """quantizer="imi" plugs into the end-to-end SemDeDup unchanged: at
+    """IMI pairs plug into the end-to-end SemDeDup unchanged: at
     full-recall configs (1 effective cell each) the survivor sets of the
     two quantizers are identical."""
-    from tesseract_rs_spark.functions.similarity import semantic_dedup
+    from tesseract_rs_spark.functions.similarity import (
+        embedding_dup_pairs_imi,
+        semantic_dedup,
+    )
 
     base = emb.limit(20)
     dup = base.filter(F.col("vec_id") == 0).withColumn(
@@ -1842,13 +1725,10 @@ def test_semantic_dedup_imi_matches_ivf_survivors(spark, emb):
             corpus, threshold=0.999, n_centroids=1, train="distributed"
         ).collect()
     }
-    imi = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            corpus, threshold=0.999, n_centroids=1, train="distributed",
-            quantizer="imi",
-        ).collect()
-    }
+    imi_pairs = embedding_dup_pairs_imi(
+        corpus, 0.999, n_cells_per_half=1, train="distributed"
+    )
+    imi = {r["vec_id"] for r in semantic_dedup(corpus, pairs=imi_pairs).collect()}
     assert imi == ivf and 100000 not in imi
 
 
@@ -2324,7 +2204,7 @@ def test_stratified_token_budget_empty_nonstring_stratum(spark):
 
 @pytest.mark.parametrize(
     "stage",
-    ["image_stats", "audio_stats", "video_stats", "decode_media", "extract_features"],
+    ["image_stats", "audio_stats", "video_stats", "decode_media"],
 )
 def test_media_stages_keep_string_id(spark, stage):
     """Every media stage passes its id column through with the input's

@@ -118,6 +118,42 @@ class TestBoilerplate:
         kept = wrap(f'<div {attr}="post-body">short text</div>')
         assert extract_doc(kept, CFG).text == "short text\n"
 
+    @pytest.mark.parametrize("attr", ["data-id", "subclass", "grid", "data-class", "title"])
+    def test_other_attribute_names_do_not_classify(self, attr):
+        """Only the whole names ``class``/``id`` classify: a block under any
+        other attribute, ``data-id`` or ``subclass`` too, is judged like a
+        plain ``<div>``."""
+        article = "<article><p>real content words go here today</p></article>"
+        for val, body in (("nav", "menu words one two three four"), ("post-body", "short text")):
+            got = extract_doc(wrap(f'<div {attr}="{val}">{body}</div>' + article), CFG)
+            plain = extract_doc(wrap(f"<div>{body}</div>" + article), CFG)
+            assert got.text == plain.text
+
+    @pytest.mark.parametrize(
+        "body, mode",
+        [
+            ("<b>tail\x00text more words here</b>", MODE_AUTO),
+            ("<b>tail\x00text more words here</b>", MODE_RAW),
+            ("<b>tail\x00text more words here</b>", MODE_SINGLE_BLOCK),
+            ('<a href="/x">tail link words</a>', MODE_AUTO),
+        ],
+        ids=["nul", "nul_raw", "nul_single_block", "anchor"],
+    )
+    def test_tail_text_is_text_like_any_other(self, body, mode):
+        """Text after the last tag goes through the same path as every other
+        text: NUL becomes a space in every mode and anchor text counts
+        towards link density.  A page ending in an unclosed tag extracts as
+        if the tag were closed."""
+        cfg = ExtractConfig(mode=mode)
+        lead = "<div>lead prose words one two three four five six seven</div>"
+        closed = extract_doc(lead + body, cfg)
+        unclosed = extract_doc(lead + body[: body.rindex("<")], cfg)
+        assert unclosed.text == closed.text
+        assert [b.link_density for b in unclosed.blocks] == [
+            b.link_density for b in closed.blocks
+        ]
+        assert "\x00" not in closed.text
+
     def test_link_density_drop(self):
         links = " ".join(f'<a href="/{i}">link number {i} here</a>' for i in range(8))
         html = wrap(f"<div>{links}</div><div>plain prose with many genuine words</div>")

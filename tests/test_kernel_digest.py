@@ -4,9 +4,11 @@ The golden sha256 tests cover only the corpus templates, and the fuzz tests
 check only that the kernel neither raises nor wavers.  This test runs a
 seeded tag-soup set (plus rendered corpus pages) through ``extract_doc``
 under seven configurations and folds every ``DocResult`` field and every
-``word_rows`` row into one sha256.  The recorded digest was taken from the
-kernel before its one-group tokenizer rewrite; any change to what the kernel
-emits, for any input shape below, changes it.
+``word_rows`` row into one sha256.  The digest was first recorded before the
+kernel's one-group tokenizer rewrite, and re-recorded once when text after
+the last tag joined the token loop's text path (only docs ending in such
+text changed); any change to what the kernel emits, for any input shape
+below, changes it.
 
 To inspect a mismatch, call ``_doc_record`` on single documents of
 ``_tag_soup_docs()`` with the old and the new kernel and diff the tuples.
@@ -43,7 +45,7 @@ CONFIGS = {
     "timeout": ExtractConfig(page_timeout_ms=0),
 }
 
-EXPECTED_DIGEST = "d45a039f80cb3bd87f3b86157a3464f39c342aea4f891e8b4c814a6a00a514a2"
+EXPECTED_DIGEST = "5347a73d4a19515805728b1b9c8938fcd3b6218a5c226df15f41e7bf34efdce6"
 
 _WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "

@@ -13,9 +13,9 @@ from tesseract_rs_spark.kernels.raster import (
     MAGIC,
     connected_components,
     decode_page,
+    detect_os,
     extract_raster_doc,
     golden_raster_text,
-    osd_orientation,
     otsu_threshold,
     render_page,
 )
@@ -96,7 +96,7 @@ class TestKernels:
         # /root/reference/src/api.rs:599-629; expected values mirror
         # tests/test_iterators.rs:462-487 PAGE_UP defaults)
         for rot in (0, 90, 180, 270):
-            assert osd_orientation(np.rot90(binary, k=rot // 90)) == rot
+            assert detect_os(np.rot90(binary, k=rot // 90))[0] == rot
 
     def test_orientation_margin_pins_pair_default(self):
         """set_min_orientation_margin analog (api.rs:640-647): a margin
@@ -104,8 +104,6 @@ class TestKernels:
         default — 0 for upright/180, 90 for sideways — while the default
         margin recovers the true rotation (previous test)."""
         import numpy as np
-
-        from tesseract_rs_spark.kernels.raster import detect_os
 
         page = render_page(TEXT)
         img, _ = decode_page(page)

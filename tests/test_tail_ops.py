@@ -9,7 +9,6 @@ from tesseract_rs_spark.config import OEM_NCC, OEM_TEMPLATE, ExtractConfig
 from tesseract_rs_spark.kernels.raster import (
     decode_page,
     extract_raster_doc,
-    get_text_direction,
     golden_raster_text,
     otsu_threshold,
     render_page,
@@ -124,10 +123,10 @@ class TestRasterROI:
 
 class TestDirectionAndResolution:
     def test_text_direction(self):
-        img, _ = decode_page(render_page("direction check words"))
-        t = otsu_threshold(img)
-        direction, conf = get_text_direction(img <= t)
-        assert direction == "left_to_right" and conf > 0
+        """The get_text_direction analog is the OSD row's direction
+        channel, with the orientation vote's confidence."""
+        r = extract_raster_doc(render_page("direction check words"))
+        assert r.writing_direction == "left_to_right" and r.orientation_conf > 0
 
     def test_source_resolution_roundtrip(self):
         cfg = ExtractConfig().with_variable("source_resolution", "300")
@@ -136,17 +135,13 @@ class TestDirectionAndResolution:
 
 class TestRendererMetadata:
     def test_extensions(self):
-        from tesseract_rs_spark.operators.renderers import renderer_extension
+        """get_extension analog: the renderer registry the engine manifest
+        publishes; unknown kinds are absent."""
+        from tesseract_rs_spark.operators.renderers import RENDERER_EXTENSIONS
 
-        assert renderer_extension("hocr") == "hocr"
-        assert renderer_extension("lstm_box") == "box"
-        with pytest.raises(KeyError):
-            renderer_extension("pdfx")
-
-    def test_title(self):
-        from tesseract_rs_spark.operators.renderers import renderer_title
-
-        assert renderer_title("/out/run7/result.tsv") == "result"
+        assert RENDERER_EXTENSIONS["hocr"] == "hocr"
+        assert RENDERER_EXTENSIONS["lstm_box"] == "box"
+        assert "pdfx" not in RENDERER_EXTENSIONS
 
     def test_image_num(self, spark):
         from tesseract_rs_spark.operators.renderers import with_image_num
@@ -166,7 +161,7 @@ class TestDebugVariables:
         from tesseract_rs_spark.kernels.html import extract_doc
 
         base = ExtractConfig()
-        dbg = base.set_debug_variable("classify_debug_level", "3")
+        dbg = base.with_variable("classify_debug_level", "3")
         page = render_html("debug knob must not change output words", 1).encode()
         assert extract_doc(page, dbg).text == extract_doc(page, base).text
         assert dbg.get_variable("classify_debug_level") == "3"
@@ -177,7 +172,7 @@ class TestDebugVariables:
         cfg = (
             ExtractConfig()
             .with_variable("tessedit_char_whitelist", "abc")
-            .set_debug_variable("zz_debug", "1")
+            .with_variable("zz_debug", "1")
         )
         assert cfg.print_variables() == "tessedit_char_whitelist\tabc\nzz_debug\t1\n"
 
