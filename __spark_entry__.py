@@ -938,11 +938,14 @@ def _q_repeated_spans_m(spark, sf_dir):
 
 
 def _q_dedup_clusters(spark, sf_dir):
-    """Near-dup CLUSTERS from the MinHash pair graph: distributed
-    hash-min label propagation -> (doc_id, cluster_id = component-min id).
-    Real dedup keeps one survivor per component, not per pair — chains
-    (a~b, b~c) must land in ONE cluster.  Oracle: recursive-CTE
-    min-reachability over the same exact-Jaccard pairs."""
+    """Near-dup CLUSTERS from the MinHash pair graph -> (doc_id,
+    cluster_id = component-min id).  ``dup_clusters`` pins the pair edges
+    once, then labels a graph of at most ``dedup.CAP`` edges (this one) on
+    the driver with one numpy min-label propagation, and a larger one
+    with distributed hash-min label propagation rounds.  Real dedup keeps
+    one survivor per component, not per pair — chains (a~b, b~c) must
+    land in ONE cluster.  Oracle: recursive-CTE min-reachability over the
+    same exact-Jaccard pairs."""
     from tesseract_rs_spark.functions.dedup import dup_clusters
 
     pairs = minhash_dedup_pairs(_docs(spark, sf_dir), threshold=0.8).select(

@@ -227,7 +227,10 @@ def main(argv=None) -> int:
             curated = curated.localCheckpoint()
         # near-dup stage: bucketed MinHash-LSH pairs (never all-pairs),
         # components collapse chains, minimum url survives per component
-        # — string ids order lexicographically, deterministic
+        # — string ids order by UTF-8 bytes, deterministic.  dup_clusters
+        # pins the pairs once, labels a graph of at most dedup.CAP edges
+        # on the driver in numpy and a larger one by distributed label
+        # propagation rounds
         import pyspark.sql.functions as F
 
         from tesseract_rs_spark.functions.dedup import (

@@ -26,10 +26,12 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.functions.text import tokens, word_shingles
+from tesseract_rs_spark.kernels.graph import component_min_labels
 from tesseract_rs_spark.operators.arrow import offsets
 
 _MERSENNE_P = (1 << 61) - 1
@@ -79,51 +81,108 @@ def dedup_keep_first(
     )
 
 
+# Largest pair graph, in edges, that dup_clusters labels on the driver.
+# A full probe holds CAP + 1 edges twice: as the collected task result on
+# the JVM driver and as an Arrow table in Python.  With ids of 200 B (a
+# long url) plus 4 B of Arrow offset each, that is 2^18 x 2 x 204 B =
+# 107 MB per copy, a tenth of the default 1 GB spark.driver.maxResultSize
+# and of a 1 GB driver heap; long ids take 2^18 x 16 B = 4 MB.  Labelling
+# adds 8 B of numpy per edge end.
+CAP = 1 << 18
+# Rounds of the distributed loop before it gives up; with pointer jumping
+# they cover a chain of 2^MAX_ROUNDS nodes.
+MAX_ROUNDS = 20
+
+
 def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 20,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over the duplicate-pair graph -> (doc_id,
-    cluster_id) with cluster_id = the component's minimum doc id.  Real
-    dedup keeps ONE survivor per CLUSTER, not per pair — pairwise
-    drop-the-larger-id breaks on chains (a~b, b~c: b and c both dropped,
-    or kept, depending on order).
+    cluster_id) with cluster_id = the component's minimum doc id in
+    Spark's ordering.  Real dedup keeps ONE survivor per CLUSTER, not per
+    pair — pairwise drop-the-larger-id breaks on chains (a~b, b~c: b and c
+    both dropped, or kept, depending on order).  A pair with a NULL id
+    names no document and is dropped.
 
-    Distributed hash-min label propagation WITH pointer jumping: every
-    node starts labeled with its own id; each round takes the minimum
-    label over the neighborhood, then compresses label -> label(label)
-    (a label is always a node id, so it has a label of its own).  The
-    neighborhood step alone needs diameter rounds — fine for the
-    near-clique components LSH emits, but a gradual-drift CHAIN of
-    near-dups (a~b~c~...) has diameter O(n); the jumping step halves
-    chain depth every round, so convergence is O(log diameter) for any
-    graph.  Each round is two joins + one groupBy on the EDGE list —
-    the corpus itself never enters the loop, and dup edges are a tiny
-    fraction of corpus size.  The driver-side loop is control flow only
-    (a convergence counter, constant rows); each round's labels are
-    localCheckpoint'ed — an iterative plan that merely caches keeps its
-    whole join lineage and the optimizer blows up around round ~10 (on a
-    cluster with dynamic allocation, swap in reliable checkpoint() to
-    survive executor loss)."""
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
-    # non-eager: round 1's action materializes it (one fewer job)
-    edges = edges.localCheckpoint(eager=False)
+    The undirected edge list, each pair as (least, greatest), is pinned
+    once with ``localCheckpoint``: the only pass over the (lazy) pair
+    miner.  It is not deduplicated, since a repeated edge changes no
+    component and the miners emit each pair once; a distinct would cost
+    a shuffle.  Then the plan shape follows the graph's size:
+
+    - **At most ``CAP`` edges** (``limit(CAP + 1)`` probes it): the edges
+      come to the driver as Arrow and are labelled there by one numpy
+      min-label propagation with pointer jumping
+      (``kernels.graph.component_min_labels``) over their dense ranks —
+      Arrow sorts like Spark (strings by UTF-8 bytes), so the smallest
+      rank is the smallest id.  The result is a local DataFrame with the
+      input id type.  Near-dup graphs are a tiny fraction of the corpus,
+      so this is the common case: past the pair miner's own stages it
+      runs two Spark jobs (pin, probe) where the loop below runs about
+      ten.
+    - **Larger graphs** (a pair graph from 10^12 documents cannot fit on
+      a driver): distributed hash-min label propagation WITH pointer
+      jumping on the pinned edges.  Every node starts labeled with the
+      minimum of itself and its neighbors; each round takes the minimum
+      label over the neighborhood, then compresses label -> label(label)
+      (a label is always a node id, so it has a label of its own).  The
+      neighborhood step alone needs diameter rounds, and a gradual-drift
+      CHAIN of near-dups has diameter O(n); the jumping step halves chain
+      depth every round, so convergence is O(log diameter) for any graph.
+      Each round is two joins + one groupBy on the EDGE list and one
+      action; its labels are localCheckpoint'ed, because an iterative
+      plan that merely caches keeps its whole join lineage and the
+      optimizer blows up around round ~10 (on a cluster with dynamic
+      allocation, swap in reliable checkpoint() to survive executor
+      loss).  ``MAX_ROUNDS`` rounds without convergence raise."""
+    a, b = F.col(id_a), F.col(id_b)
+    edges = (
+        pairs.filter(a.isNotNull() & b.isNotNull())
+        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .localCheckpoint()
+    )
+    probe = edges.limit(CAP + 1).toArrow()
+    if probe.num_rows <= CAP:
+        id_type = edges.schema["u"].dataType.simpleString()
+        return _driver_clusters(edges.sparkSession, probe, id_type)
+    return _distributed_clusters(edges)
+
+
+def _driver_clusters(spark, edges: pa.Table, id_type: str) -> DataFrame:
+    """:func:`dup_clusters` of an ``(u, v)`` edge table held on the driver."""
+    n = edges.num_rows
+    ids = pa.chunked_array(
+        edges.column("u").chunks + edges.column("v").chunks,
+        edges.schema.field("u").type,
+    ).combine_chunks()  # pc.rank fails on a chunked array with no chunks
+    # dense ranks: node k is the k-th smallest distinct id
+    node = np.asarray(pc.rank(ids, tiebreaker="dense")).astype(np.int64) - 1
+    n_nodes = int(node.max()) + 1 if n else 0
+    roots = component_min_labels(n_nodes, node[:n], node[n:])
+    first = np.empty(n_nodes, dtype=np.int64)
+    first[node] = np.arange(2 * n)
+    doc_id = ids.take(first)
+    return spark.createDataFrame(
+        pa.table({"doc_id": doc_id, "cluster_id": doc_id.take(roots)}),
+        schema=f"doc_id {id_type}, cluster_id {id_type}",
+    )
+
+
+def _distributed_clusters(edges: DataFrame) -> DataFrame:
+    """:func:`dup_clusters` of a pinned ``(u, v)`` edge frame, by label
+    propagation rounds of joins on the cluster."""
+    edges = edges.unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
     # seed with the FIRST propagation instead of the identity labeling:
-    # label_0 = min(self, min neighbor) comes out of the same groupBy that
-    # the old identity seeding paid for its distinct(), and near-clique
-    # components (the LSH-pair common case) then converge in ONE loop
-    # round instead of two (r7, guide §2.4 — one fewer join round trip)
+    # label_0 = min(self, min neighbor), so near-clique components (the
+    # LSH-pair common case) converge in ONE loop round instead of two
     labels = (
         edges.groupBy("u")
         .agg(F.min("v").alias("_nbr"))
         .select("u", F.least(F.col("u"), F.col("_nbr")).alias("label"))
     )
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         prop = (
             edges.join(
                 labels.select(
@@ -135,9 +194,7 @@ def dup_clusters(
             .agg(F.min("nbr").alias("nbr"))
         )
         # carry the OLD label through the round so convergence is a flag
-        # column on the materialized frame — the r6 shape re-joined
-        # new_labels against labels every round just to count changes,
-        # paying an extra join + exchange per iteration (guide §2.4)
+        # column on the materialized frame, not a second join per round
         new_labels = (
             labels.join(prop, "u", "left")
             .select(
@@ -162,8 +219,7 @@ def dup_clusters(
             )
         ).localCheckpoint(eager=False)
         # ONE action materializes the round AND reads the change count
-        # (non-eager checkpoint: the agg below triggers it) — no second
-        # join, no second job
+        # (non-eager checkpoint: the agg below triggers it)
         changed = (
             new_labels.agg(
                 F.sum((F.col("label") != F.col("_old")).cast("int")).alias("n")
@@ -176,9 +232,9 @@ def dup_clusters(
     else:
         # silently returning partially-propagated labels would report one
         # component as several clusters; with pointer jumping the cap
-        # covers depth 2^max_rounds, so hitting it means something is off
+        # covers depth 2^MAX_ROUNDS, so hitting it means something is off
         raise RuntimeError(
-            f"dup_clusters did not converge within {max_rounds} rounds"
+            f"dup_clusters did not converge within {MAX_ROUNDS} rounds"
         )
     return labels.select(
         F.col("u").alias("doc_id"), F.col("label").alias("cluster_id")

@@ -1069,8 +1069,9 @@ def semantic_dedup(
     rows of ``corpus`` unchanged.
 
     Scale shape: inherits :func:`embedding_dup_pairs_ivf`'s bounded
-    candidate volume; the component pass is the edge-list-only pointer
-    jumping of ``dedup.dup_clusters``; the final filter is an id
+    candidate volume; the component pass is ``dedup.dup_clusters`` (numpy
+    on the driver up to ``dedup.CAP`` pair edges, edge-list-only pointer
+    jumping rounds on the cluster past it); the final filter is an id
     anti-join (8-byte keys).
 
     ``n_centroids`` governs the cost: candidate pairs scale as

@@ -38,6 +38,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from tesseract_rs_spark.kernels.graph import component_min_labels
+
 MAGIC = 0x50414745  # "PAGE"
 
 GLYPH_W = 16
@@ -264,19 +266,8 @@ def connected_components(binary: np.ndarray) -> tuple:
     else:
         u = v = np.empty(0, dtype=np.int64)
 
-    # min-label propagation with pointer jumping: monotone decreasing ->
-    # fixpoint = per-component minimum run id (first-encounter root)
-    roots = np.arange(n_runs, dtype=np.int64)
-    while True:
-        old = roots
-        if total:
-            m = np.minimum(roots[u], roots[v])
-            roots = roots.copy()
-            np.minimum.at(roots, u, m)
-            np.minimum.at(roots, v, m)
-        roots = np.minimum(roots, roots[roots])
-        if np.array_equal(roots, old):
-            break
+    # per-component minimum run id = first-encounter root
+    roots = component_min_labels(n_runs, u, v)
     uniq, inv = np.unique(roots, return_inverse=True)
     n = len(uniq)
     run_len = (run_end - run_start).astype(np.int64)

@@ -99,38 +99,133 @@ def test_repeated_ngram_spans_merge(spark):
     assert out == {(1, 0, 5), (2, 0, 5), (2, 8, 13)}
 
 
-def test_dup_clusters_chains_and_components(spark):
+def _both_paths(pairs, monkeypatch):
+    """``dup_clusters(pairs)`` as ``{doc_id: cluster_id}``, after checking
+    that the driver path and the distributed one give the same schema and
+    rows.  ``CAP = -1`` sends even an empty graph to the distributed
+    path."""
+    from tesseract_rs_spark.functions import dedup
+
+    small = dedup.dup_clusters(pairs)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CAP", -1)
+        large = dedup.dup_clusters(pairs)
+        assert large.schema == small.schema
+        rows = sorted(small.collect())
+        assert sorted(large.collect()) == rows
+    out = {r["doc_id"]: r["cluster_id"] for r in rows}
+    assert len(out) == len(rows), "one row per doc"
+    return out
+
+
+def test_dup_clusters_chains_and_components(spark, monkeypatch):
     """Chains must collapse to ONE cluster (the pairwise-drop failure
     mode), disjoint components must stay apart; the 4-chain has diameter
-    3, so convergence needs multiple propagation rounds."""
-    from tesseract_rs_spark.functions.dedup import dup_clusters
-
+    3, so convergence needs multiple propagation rounds.  A reversed or
+    repeated pair is the same edge, and a self-loop is a one-doc
+    cluster."""
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22),
+         (2, 1), (4, 3), (3, 4), (30, 30), (10, 10)],
         "id_a long, id_b long",
     )
-    out = {
-        r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()
-    }
-    assert out == {
+    assert _both_paths(pairs, monkeypatch) == {
         1: 1, 2: 1, 3: 1, 4: 1,
         10: 10, 11: 10,
         20: 20, 21: 20, 22: 20,
+        30: 30,
     }
 
 
-def test_dup_clusters_long_chain(spark):
+def test_dup_clusters_long_chain(spark, monkeypatch):
     """A 200-node path (gradual-drift near-dups) has diameter 199 —
     pointer jumping must converge within the round cap where plain
     neighborhood propagation would not."""
-    from tesseract_rs_spark.functions.dedup import dup_clusters
-
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long"
     )
-    out = dup_clusters(pairs)
-    assert out.filter(F.col("cluster_id") != 0).count() == 0
-    assert out.count() == 201
+    assert _both_paths(pairs, monkeypatch) == {i: 0 for i in range(201)}
+
+
+def test_dup_clusters_round_cap_raises(spark, monkeypatch):
+    """Unconverged labels would split one component into several
+    clusters, so the distributed loop raises at its round cap instead."""
+    from tesseract_rs_spark.functions import dedup
+
+    monkeypatch.setattr(dedup, "CAP", -1)
+    monkeypatch.setattr(dedup, "MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="within 1 rounds"):
+        dedup.dup_clusters(pairs)
+
+
+def test_dup_clusters_null_ids(spark, monkeypatch):
+    """A NULL id names no document: its pair joins nothing and yields no
+    row (not a NULL doc_id, and not a link between 1 and 2)."""
+    pairs = spark.createDataFrame(
+        [(1, None), (None, 2), (3, 4)], "id_a long, id_b long"
+    )
+    assert _both_paths(pairs, monkeypatch) == {3: 3, 4: 3}
+
+
+def test_dup_clusters_string_ids_follow_spark_order(spark, monkeypatch):
+    """String ids (urls): cluster_id is the component's ``min`` in Spark's
+    ordering, UTF-8 bytes — upper case before lower, and U+FFFF before an
+    astral character, which UTF-16 order would reverse."""
+    comps = [
+        ["b", "B", "a", "A"],
+        ["ő", "é", "e", "z"],
+        ["\U0001F600", "\uffff", "\U00010000"],
+        ["x\uffff", "x\U0001F600"],
+    ]
+    pairs = spark.createDataFrame(
+        [(c[i], c[i + 1]) for c in comps for i in range(len(c) - 1)],
+        "id_a string, id_b string",
+    )
+    spark_min = {
+        r["k"]: r["m"]
+        for r in spark.createDataFrame(
+            [(k, d) for k, c in enumerate(comps) for d in c], "k int, d string"
+        )
+        .groupBy("k")
+        .agg(F.min("d").alias("m"))
+        .collect()
+    }
+    assert _both_paths(pairs, monkeypatch) == {
+        d: spark_min[k] for k, c in enumerate(comps) for d in c
+    }
+
+
+def test_dup_clusters_job_count_and_one_pair_pass(spark, monkeypatch):
+    """A small graph costs at most three Spark jobs (the pin and the
+    probe), not a loop of them; on either path the pair frame's plan runs
+    once."""
+    from tesseract_rs_spark.functions import dedup
+
+    sc = spark.sparkContext
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
+    seen = sc.accumulator(0)
+
+    def count_rows(batches):
+        for batch in batches:
+            seen.add(batch.num_rows)
+            yield batch
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").mapInArrow(
+        count_rows, "id_a long, id_b long"
+    )
+    sc.setJobGroup("dup_clusters_small", "dup_clusters_small")
+    try:
+        dedup.dup_clusters(pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("dup_clusters_small")) <= 3
+    assert seen.value == len(edges)
+    monkeypatch.setattr(dedup, "CAP", -1)
+    dedup.dup_clusters(pairs).collect()
+    assert seen.value == 2 * len(edges)
 
 
 def test_pack_stream_shard_invariant(spark, docs):
@@ -1969,14 +2064,12 @@ def test_stratified_token_budget_plan_no_global_window(spark):
     out.count()
 
 
-def test_dup_clusters_empty_pairs(spark):
-    """Empty pair input converges in round 1 with zero changes — the r7
-    flag-sum convergence check must read SUM(flag) over an empty frame
-    as 0, not NULL (which would loop to the round cap and raise)."""
-    from tesseract_rs_spark.functions.dedup import dup_clusters
-
+def test_dup_clusters_empty_pairs(spark, monkeypatch):
+    """Empty pair input yields no rows on either path — the distributed
+    loop's flag-sum convergence check must read SUM(flag) over an empty
+    frame as 0, not NULL (which would loop to the round cap and raise)."""
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert dup_clusters(pairs).count() == 0
+    assert _both_paths(pairs, monkeypatch) == {}
 
 
 def test_simhash_arrow_edges(spark):
