@@ -143,13 +143,23 @@ def main(argv=None) -> int:
             file=sys.stderr,
         )
         return 2
-    if args.curate and (args.payload == "raster" or args.output_format != "text"):
-        # validate BEFORE building a session: a silent no-op would ship
-        # uncurated data the user believes is filtered and deduped, and
-        # spinning up (then leaking) a session just to refuse is waste
+    # validate BEFORE building a session: the job would otherwise run
+    # something other than what was asked (the text table for --output-
+    # format words, html extraction for --payload raster, uncurated data
+    # the user believes is filtered and deduped) and exit 0, and spinning
+    # up (then leaking) a session just to refuse is waste
+    if args.output_format != "text" and (
+        args.curate or args.checkpoint_dir or args.payload == "raster"
+    ):
         print(
-            "error: --curate supports --payload html with "
-            "--output-format text only",
+            "error: --curate, --checkpoint-dir and --payload raster "
+            "support --output-format text only",
+            file=sys.stderr,
+        )
+        return 2
+    if args.payload == "raster" and (args.curate or args.checkpoint_dir):
+        print(
+            "error: --curate and --checkpoint-dir support --payload html only",
             file=sys.stderr,
         )
         return 2

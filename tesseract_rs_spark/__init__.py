@@ -16,12 +16,14 @@ pipeline over Common-Crawl-style page tables
   (error model: /root/reference/src/error.rs:6-41).
 
 Every Python stage is Arrow-vectorized — zero per-row Python UDFs.  The
-per-document stages (extraction, OCR, media, image-layer PDF rendering)
-cross the Arrow boundary through one helper, ``operators.arrow.map_docs``;
-``simhash`` and the MinHash signature step read the raw Arrow buffers
-with ``mapInArrow``, and the vector-matrix, grouped-render and
-page-generator stages use ``mapInPandas``/``applyInPandas``.  Python
-workers start through ``worker_daemon`` (see ``session.get_spark``).
+per-document stages (extraction, OCR, media, image-layer PDF rendering,
+MinHash and SimHash signatures, LSH/IVF/IMI embedding assignment) cross
+the Arrow boundary through one helper, ``operators.arrow.map_docs``,
+which hands each batch body its Arrow payload column.  Only the grouped
+PDF round-trip (``applyInPandas``), the two page generators and two
+per-batch partial aggregates (glyph learning, distributed k-means) use
+``mapInPandas``/``mapInArrow`` themselves.  Python workers start through
+``worker_daemon`` (see ``session.get_spark``).
 """
 
 __version__ = "0.1.0"

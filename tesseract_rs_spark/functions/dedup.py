@@ -9,7 +9,7 @@ Three tiers, each with the scale path spelled out:
   candidate pairs, not the full corpus.
 - **MinHash + LSH banding**: the scale path — each doc is shingled ONCE
   into a shingle array that both later steps read; signatures are one
-  vectorized numpy pass per Arrow batch (``mapInArrow`` over the flattened
+  vectorized numpy pass per Arrow batch (``map_docs`` over the flattened
   shingle hashes), band buckets shuffle (band_id, band slice) keys only,
   and candidate pairs are verified with exact Jaccard by intersecting the
   two docs' shingle arrays.  This is the standard
@@ -22,8 +22,6 @@ dependence (JVM ``xxhash64`` shingle hashing, not Python ``hash``).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -32,7 +30,7 @@ from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.functions.text import tokens, word_shingles
 from tesseract_rs_spark.kernels.graph import component_min_labels
-from tesseract_rs_spark.operators.arrow import offsets
+from tesseract_rs_spark.operators.arrow import map_docs, offsets
 
 _MERSENNE_P = (1 << 61) - 1
 
@@ -318,48 +316,37 @@ def _signatures(
     """MinHash signatures of a ``(id, _s)`` shingle-array frame — see
     :func:`minhash_signatures`."""
     a_params, b_params = _hash_params(num_hashes, seed)
-    id_type = shingled.schema[id_col].dataType.simpleString()
     hashed = shingled.select(
         F.col(id_col), F.transform("_s", lambda s: F.xxhash64(s)).alias("_h")
     )
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids, hs = batch.column(0), batch.column(1)
-            off = offsets(hs)
-            if not pa.types.is_int64(hs.type.value_type):
-                raise TypeError(f"expected list<int64> shingle hashes, got {hs.type}")
-            sig = np.zeros((len(hs), num_hashes), dtype=np.int64)
-            if off[-1] > off[0]:
-                h64 = np.asarray(hs.values)[off[0] : off[-1]].view(np.uint64)
-                h32 = (h64 ^ (h64 >> np.uint64(32))) & np.uint64(0xFFFFFFFF)
-                # zero-shingle docs own no values, so segmenting at the
-                # non-empty docs' starts gives exactly one segment per doc;
-                # they keep the all-zero signature
-                nz = off[1:] > off[:-1]
-                starts = off[:-1][nz] - off[0]
-                # one vector pass per hash function keeps the working set at
-                # one batch of shingles; a (hashes x shingles) broadcast is
-                # 64x the memory and measured ~3x slower
-                for k in range(num_hashes):
-                    m = _mersenne_mod(a_params[k] * h32 + b_params[k])
-                    sig[nz, k] = np.minimum.reduceat(m, starts).view(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.ListArray.from_arrays(
-                        pa.array(
-                            np.arange(0, sig.size + 1, num_hashes, dtype=np.int32)
-                        ),
-                        pa.array(sig.ravel(), type=pa.int64()),
-                    ),
-                ],
-                names=[id_col, "sig"],
+    def fn(hs: pa.Array) -> list:
+        off = offsets(hs)
+        if not pa.types.is_int64(hs.type.value_type):
+            raise TypeError(f"expected list<int64> shingle hashes, got {hs.type}")
+        sig = np.zeros((len(hs), num_hashes), dtype=np.int64)
+        if off[-1] > off[0]:
+            h64 = np.asarray(hs.values)[off[0] : off[-1]].view(np.uint64)
+            h32 = (h64 ^ (h64 >> np.uint64(32))) & np.uint64(0xFFFFFFFF)
+            # zero-shingle docs own no values, so segmenting at the
+            # non-empty docs' starts gives exactly one segment per doc;
+            # they keep the all-zero signature
+            nz = off[1:] > off[:-1]
+            starts = off[:-1][nz] - off[0]
+            # one vector pass per hash function keeps the working set at
+            # one batch of shingles; a (hashes x shingles) broadcast is
+            # 64x the memory and measured ~3x slower
+            for k in range(num_hashes):
+                m = _mersenne_mod(a_params[k] * h32 + b_params[k])
+                sig[nz, k] = np.minimum.reduceat(m, starts).view(np.int64)
+        return [
+            pa.ListArray.from_arrays(
+                pa.array(np.arange(0, sig.size + 1, num_hashes, dtype=np.int32)),
+                pa.array(sig.ravel(), type=pa.int64()),
             )
+        ]
 
-    return hashed.mapInArrow(gen, schema=f"{id_col} {id_type}, sig array<long>")
+    return map_docs(hashed, (id_col,), "_h", "sig array<long>", fn)
 
 
 def minhash_signatures(
@@ -372,7 +359,7 @@ def minhash_signatures(
     """(id, sig array<long>) MinHash signatures.
 
     Shingle hashing happens JVM-side (``xxhash64`` over the shingle array —
-    zero Python hashing); the Python stage is one ``mapInArrow`` pass per
+    zero Python hashing); the Python stage is one ``map_docs`` pass per
     batch over the FLATTENED ``list<long>`` hash values, read zero-copy
     through the list offsets: per hash function one uint64 numpy
     ``(a*h32 + b) mod (2^61-1)`` over every shingle of the batch, then
@@ -397,17 +384,12 @@ def lsh_candidate_pairs(
     signature), so key equality is exactly band equality — no string
     rendering or digest of the band.  Only (band_id, band, id) rows
     shuffle — constant bytes per doc."""
-    rows_per_band = (F.size("sig") / bands).cast("int")
+    # band i is the i-th run of r signature values; one SQL expression
+    # for all bands, since a Column per slice costs ~30 py4j calls to build
+    r = f"cast(size(sig) div {bands} as int)"
+    slices = f"transform(sequence(0, {bands - 1}), i -> slice(sig, i * {r} + 1, {r}))"
     banded = signatures.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice("sig", i * rows_per_band + 1, rows_per_band)
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band_id", "band"),
+        F.col(id_col), F.posexplode(F.expr(slices)).alias("band_id", "band")
     )
     return guarded_pair_join(banded, ["band_id", "band"], id_col, cap)
 
@@ -531,7 +513,7 @@ def simhash(
     shingle STRING across the boundary — 2x the bytes — and re-parsed it
     with ``bytes.fromhex`` in Python.  An Arrow binary column is one
     contiguous data buffer plus offsets, so the whole batch's digest
-    bytes are read ZERO-COPY with ``np.frombuffer`` inside ``mapInArrow``
+    bytes are read ZERO-COPY with ``np.frombuffer`` inside ``map_docs``
     (no pandas round-trip, no per-row join), and the id column passes
     through as the untouched Arrow array.  One ``np.unpackbits`` +
     ``np.add.reduceat`` vote per batch, as before.  The 8-byte feature
@@ -551,36 +533,24 @@ def simhash(
     )
     weights = (1 << np.arange(bits - 1, -1, -1, dtype=np.int64))
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0)
-            hx = batch.column(1)
-            # binary column = validity + offsets + data buffer
-            off = offsets(hx)
-            counts = (off[1:] - off[:-1]) // 8
-            out = np.zeros(len(hx), dtype=np.int64)
-            if off[-1] > off[0]:
-                raw = np.frombuffer(hx.buffers()[2], dtype=np.uint8)[off[0] : off[-1]]
-                bitmat = np.unpackbits(raw.reshape(-1, 8), axis=1)[:, :bits]
-                nz = counts > 0
-                # zero-shingle docs contribute no rows, so segmenting at the
-                # non-empty docs' starts gives exactly one segment per doc
-                starts = (off[:-1] - off[0]) // 8
-                sums = np.add.reduceat(
-                    bitmat.astype(np.int32), starts[nz], axis=0
-                )
-                votes = 2 * sums.astype(np.int64) - counts[nz][:, None]
-                out[nz] = ((votes > 0).astype(np.int64) * weights).sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=pa.int64())], names=[id_col, "simhash"]
-            )
+    def fn(hx: pa.Array) -> list:
+        # binary column = validity + offsets + data buffer
+        off = offsets(hx)
+        counts = (off[1:] - off[:-1]) // 8
+        out = np.zeros(len(hx), dtype=np.int64)
+        if off[-1] > off[0]:
+            raw = np.frombuffer(hx.buffers()[2], dtype=np.uint8)[off[0] : off[-1]]
+            bitmat = np.unpackbits(raw.reshape(-1, 8), axis=1)[:, :bits]
+            nz = counts > 0
+            # zero-shingle docs contribute no rows, so segmenting at the
+            # non-empty docs' starts gives exactly one segment per doc
+            starts = (off[:-1] - off[0]) // 8
+            sums = np.add.reduceat(bitmat.astype(np.int32), starts[nz], axis=0)
+            votes = 2 * sums.astype(np.int64) - counts[nz][:, None]
+            out[nz] = ((votes > 0).astype(np.int64) * weights).sum(axis=1)
+        return [out]
 
-    id_type = docs.schema[id_col].dataType.simpleString()
-    return hashed.mapInArrow(
-        gen, schema=f"{id_col} {id_type}, simhash long"
-    )
+    return map_docs(hashed, (id_col,), "_hx", "simhash long", fn)
 
 
 def guarded_pair_join(

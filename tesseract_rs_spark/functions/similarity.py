@@ -18,9 +18,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
+
+from tesseract_rs_spark.operators.arrow import map_docs
 
 
 def _norm(col):
@@ -199,6 +203,22 @@ def embedding_dup_pairs(
     return _verify_candidate_pairs(corpus, cand, threshold, id_col, vec_col)
 
 
+def _embeddings(vecs: pa.Array, dim: int) -> tuple:
+    """``(valid, mat)``: the mask of an embedding column's non-NULL rows
+    and those rows as one float64 matrix, read through the list offsets.
+    A NULL embedding has no bucket or cell, so the stages emit no row for
+    it (mirroring the exact path, where a NULL cosine ranks out).  The
+    rows must share one width; a batch without rows gives ``(0, dim)``."""
+    valid = vecs.is_valid()
+    kept = vecs.filter(valid)
+    widths = np.unique(pc.list_value_length(kept).to_numpy(zero_copy_only=False))
+    if len(widths) > 1:
+        raise ValueError(f"embeddings of widths {widths.tolist()} in one batch")
+    flat = kept.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    width = int(widths[0]) if len(widths) else dim
+    return valid.to_numpy(zero_copy_only=False), flat.reshape(len(kept), width)
+
+
 def lsh_signatures(
     df: DataFrame,
     n_planes: int = 4,
@@ -215,28 +235,19 @@ def lsh_signatures(
     Arrow batch; the planes are a broadcast-sized seeded constant."""
     rng = np.random.RandomState(seed)
     planes = rng.normal(size=(dim, n_tables * n_planes))
-    id_type = df.schema[id_col].dataType.simpleString()
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            signs = (mat @ planes) > 0  # (rows, tables*planes)
-            signs = signs.reshape(len(pdf), n_tables, n_planes)
-            buckets = signs @ weights  # (rows, tables)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), n_tables),
-                    "table": np.tile(np.arange(n_tables, dtype=np.int64), n),
-                    "bucket": buckets.reshape(-1).astype(np.int64),
-                }
-            )
+    def fn(vecs: pa.Array) -> tuple:
+        valid, mat = _embeddings(vecs, dim)
+        signs = (mat @ planes) > 0  # (rows, tables*planes)
+        buckets = signs.reshape(len(mat), n_tables, n_planes) @ weights
+        return valid * n_tables, [
+            np.tile(np.arange(n_tables, dtype=np.int64), len(mat)),
+            buckets.reshape(-1),
+        ]
 
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, table long, bucket long"
+    return map_docs(
+        df, (id_col,), vec_col, "table long, bucket long", fn, explode=True
     )
 
 
@@ -635,32 +646,17 @@ def ivf_assign(
     cn[cn == 0.0] = 1.0
     cids = np.array([i for i, _ in centroids], dtype=np.int64)
     nprobe = min(nprobe, len(cids))
-    id_type = df.schema[id_col].dataType.simpleString()
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # a NULL embedding has no cell: skip the row (mirrors the
-            # exact path, where a NULL cosine ranks out) instead of an
-            # opaque np.asarray(None) TypeError killing the job
-            pdf = pdf[pdf[vec_col].notna()]
-            if not len(pdf):
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            vn = np.linalg.norm(mat, axis=1)
-            vn[vn == 0.0] = 1.0
-            cos = (mat @ cmat.T) / vn[:, None] / cn[None, :]
-            # argsort desc with index tiebreak: negate, stable sort
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), nprobe),
-                    "cell": cids[order].reshape(-1),
-                }
-            )
+    def fn(vecs: pa.Array) -> tuple:
+        valid, mat = _embeddings(vecs, cmat.shape[1])
+        vn = np.linalg.norm(mat, axis=1)
+        vn[vn == 0.0] = 1.0
+        cos = (mat @ cmat.T) / vn[:, None] / cn[None, :]
+        # argsort desc with index tiebreak: negate, stable sort
+        order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
+        return valid * nprobe, [cids[order].reshape(-1)]
 
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, cell long"
-    )
+    return map_docs(df, (id_col,), vec_col, "cell long", fn, explode=True)
 
 
 def _ann_score_topk(
@@ -920,7 +916,6 @@ def imi_assign(
     grid_w = int(hi_ids.max()) + 1
     npl = min(nprobe_per_half, len(lo_ids))
     nph = min(nprobe_per_half, len(hi_ids))
-    id_type = df.schema[id_col].dataType.simpleString()
 
     def _nearest(mat, cmat, cn, cids, np_):
         vn = np.linalg.norm(mat, axis=1)
@@ -929,38 +924,21 @@ def imi_assign(
         # top-np_ with index tiebreak: stable argsort on the negation
         return cids[np.argsort(-cos, axis=1, kind="stable")[:, :np_]]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if not len(pdf):
-                continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+    def fn(vecs: pa.Array) -> tuple:
+        valid, mat = _embeddings(vecs, dim)
+        if mat.shape[1] != dim:
+            raise ValueError(
+                f"vector dim {mat.shape[1]} != codebook dim {dim}: "
+                "the IMI sub-codebooks were trained on a different "
+                "embedding width"
             )
-            if mat.shape[1] != dim:
-                raise ValueError(
-                    f"vector dim {mat.shape[1]} != codebook dim {dim}: "
-                    "the IMI sub-codebooks were trained on a different "
-                    "embedding width"
-                )
-            ca = _nearest(mat[:, :half], lo_mat, lo_n, lo_ids, npl)
-            cb = _nearest(mat[:, half:], hi_mat, hi_n, hi_ids, nph)
-            # cross-combine the per-half probes: (n, npl, 1) x (n, 1, nph)
-            cells = (
-                ca[:, :, None] * grid_w + cb[:, None, :]
-            ).reshape(len(pdf), -1)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(
-                        pdf[id_col].to_numpy(), cells.shape[1]
-                    ),
-                    "cell": cells.reshape(-1),
-                }
-            )
+        ca = _nearest(mat[:, :half], lo_mat, lo_n, lo_ids, npl)
+        cb = _nearest(mat[:, half:], hi_mat, hi_n, hi_ids, nph)
+        # cross-combine the per-half probes: (n, npl, 1) x (n, 1, nph)
+        cells = ca[:, :, None] * grid_w + cb[:, None, :]
+        return valid * npl * nph, [cells.reshape(-1)]
 
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, cell long"
-    )
+    return map_docs(df, (id_col,), vec_col, "cell long", fn, explode=True)
 
 
 def ann_imi_topk(

@@ -185,7 +185,7 @@ def ocr_text_adapted(
     fields = "text string, status string, mean_conf long, n_words long"
     decode = page_columns(fields, cfg, (*cfg.langs, name))
 
-    def fn(payloads: list) -> list:
+    def fn(payloads) -> list:
         from tesseract_rs_spark.kernels.raster import register_atlas
 
         register_atlas(name, atlas)

@@ -2,13 +2,14 @@
 
 :func:`map_docs` runs one Python function over a frame's payload column,
 one ``mapInArrow`` pass per Arrow batch: ``fn`` receives the batch's
-payloads as a Python list and returns one column per declared output
-field.  The id columns pass through as the untouched Arrow arrays, so they
-keep their input type (``string`` or ``large_string``, ``long``, ...);
-every other column is built with the Arrow type of its declared field, so
-a value of the wrong type raises in Python with the column's name instead
-of failing (or being misread) on the JVM side, which checks neither names
-nor types.
+payload column as its Arrow array (list-based bodies call ``to_pylist()``,
+buffer readers read it zero-copy) and returns one column per declared
+output field.  The id columns pass through as the untouched Arrow arrays,
+so they keep their input type (``string`` or ``large_string``, ``long``,
+...); every other column is built with, or checked against, the Arrow type
+of its declared field, so a value of the wrong type raises in Python with
+the column's name instead of failing (or being misread) on the JVM side,
+which checks neither names nor types.
 
 :func:`offsets` is the one reader of Arrow offset buffers, for the stages
 that read binary and list payloads zero-copy.
@@ -77,15 +78,25 @@ def arrow_fields(ddl: str) -> pa.Schema:
 
 
 def _typed(values, field: pa.Field, n: int) -> pa.Array:
-    """``values`` as an Arrow array of the field's type and length ``n``."""
-    try:
-        if pa.types.is_integer(field.type) and not isinstance(values, np.ndarray):
-            # pyarrow truncates Python floats into integer columns; through
-            # numpy a float makes a float array, which the cast refuses
-            values = np.asarray(values)
-        arr = pa.array(values, type=field.type)
-    except pa.ArrowException as e:
-        raise TypeError(f"column {field.name!r} ({field.type}): {e}") from e
+    """``values`` as an Arrow array of the field's type and length ``n``.
+    An Arrow array of the field's type passes through uncopied; an Arrow
+    array of any other type raises."""
+    if isinstance(values, pa.Array):
+        if values.type != field.type:
+            raise TypeError(
+                f"column {field.name!r} ({field.type}): got {values.type}"
+            )
+        arr = values
+    else:
+        try:
+            if pa.types.is_integer(field.type) and not isinstance(values, np.ndarray):
+                # pyarrow truncates Python floats into integer columns;
+                # through numpy a float makes a float array, which the
+                # cast refuses
+                values = np.asarray(values)
+            arr = pa.array(values, type=field.type)
+        except pa.ArrowException as e:
+            raise TypeError(f"column {field.name!r} ({field.type}): {e}") from e
     if len(arr) != n:
         raise ValueError(f"column {field.name!r}: {len(arr)} values for {n} rows")
     return arr
@@ -100,12 +111,13 @@ def map_batch(
 ) -> pa.RecordBatch | None:
     """One ``(ids..., payload)`` batch -> ``(ids..., fields...)``.
 
-    ``fn(payloads)`` returns one column per field, in field order: one
-    value per doc, or with ``explode`` a ``(counts, columns)`` pair, where
-    doc ``i`` owns ``counts[i]`` consecutive rows of the flat columns.
-    Columns may be lists or numpy arrays.  Returns None when an exploded
-    batch has no rows."""
-    out = fn(batch.column(n_ids).to_pylist())
+    ``fn(payloads)`` gets the payload column as its Arrow array and
+    returns one column per field, in field order: one value per doc, or
+    with ``explode`` a ``(counts, columns)`` pair, where doc ``i`` owns
+    ``counts[i]`` consecutive rows of the flat columns.  Columns may be
+    lists, numpy arrays or Arrow arrays of the field's type.  Returns None
+    when an exploded batch has no rows."""
+    out = fn(batch.column(n_ids))
     ids = batch.columns[:n_ids]
     n = batch.num_rows
     if explode:
@@ -158,9 +170,9 @@ def map_docs(
 
 
 def per_doc(row_fn: Callable) -> Callable:
-    """A :func:`map_docs` function from a per-doc one that returns the
-    doc's field values as one tuple."""
-    return lambda payloads: list(zip(*map(row_fn, payloads)))
+    """A :func:`map_docs` function from a per-doc one that takes a Python
+    payload and returns the doc's field values as one tuple."""
+    return lambda payloads: list(zip(*map(row_fn, payloads.to_pylist())))
 
 
 def explode_rows(docs: list) -> tuple:

@@ -40,9 +40,9 @@ WORD_RESULT_FIELDS = (
 )
 
 
-def text_columns(htmls: list, cfg: ExtractConfig, spans: bool = False) -> list:
+def text_columns(htmls: pa.Array, cfg: ExtractConfig, spans: bool = False) -> list:
     """One batch of payloads -> the text fields' columns, one value per page."""
-    rs = [extract_doc(h, cfg) for h in htmls]
+    rs = [extract_doc(h, cfg) for h in htmls.to_pylist()]
     cols = [
         [r.text for r in rs],
         [r.status for r in rs],
@@ -69,14 +69,14 @@ def extract_text_batch(
     return map_batch(batch, len(id_cols), fn, fields).to_pandas()
 
 
-def word_columns(htmls: list, cfg: ExtractConfig) -> tuple:
+def word_columns(htmls: pa.Array, cfg: ExtractConfig) -> tuple:
     """One batch of payloads -> the exploded word fields (the reference's
     ResultIterator analog, ``src/result_iterator.rs:41-71``) as
     ``(words per page, flat columns)``.  Numeric columns are one
     ``np.repeat`` each over per-line word counts; only the word strings
     pass through a Python list (one ``split`` per line, in
     ``Block.line_words``)."""
-    results = [extract_doc(h, cfg) for h in htmls]
+    results = [extract_doc(h, cfg) for h in htmls.to_pylist()]
     # ONE meta table for the whole batch: the line rows concatenate in doc
     # order, so every derived column equals the per-doc concatenation
     words: list = []

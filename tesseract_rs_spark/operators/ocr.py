@@ -12,6 +12,7 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -41,7 +42,7 @@ OCR_WORD_FIELDS = (
 
 
 def raster_results(
-    payloads: list, cfg: ExtractConfig, langs: tuple | None = None
+    payloads: pa.Array, cfg: ExtractConfig, langs: tuple | None = None
 ) -> list:
     """THE per-batch decode loop, shared by every raster operator and the
     adaptive twin (one definition — a fix to the decode call signature
@@ -57,7 +58,7 @@ def raster_results(
             oem=cfg.oem, roi=cfg.roi_rect,
             orient_margin=cfg.min_orientation_margin,
         )
-        for p in payloads
+        for p in payloads.to_pylist()
     ]
 
 
@@ -67,7 +68,7 @@ def page_columns(fields: str, cfg: ExtractConfig, langs: tuple | None = None):
     page's words)."""
     names = arrow_fields(fields).names
 
-    def fn(payloads: list) -> list:
+    def fn(payloads: pa.Array) -> list:
         rs = raster_results(payloads, cfg, langs)
         return [
             [len(r.words) for r in rs] if a == "n_words"
@@ -138,7 +139,9 @@ def ocr_symbols(
     wl = (cfg or ExtractConfig()).char_whitelist
     return map_docs(
         pages, id_cols, payload_col, OCR_SYMBOL_FIELDS,
-        lambda ps: explode_rows([raster_symbols(p, wl, k)[1] for p in ps]),
+        lambda ps: explode_rows(
+            [raster_symbols(p, wl, k)[1] for p in ps.to_pylist()]
+        ),
         explode=True,
     )
 
@@ -163,7 +166,9 @@ def ocr_symbol_attrs(
     wl = (cfg or ExtractConfig()).char_whitelist
     return map_docs(
         pages, id_cols, payload_col, OCR_SYMBOL_ATTR_FIELDS,
-        lambda ps: explode_rows([raster_symbol_attrs(p, wl)[1] for p in ps]),
+        lambda ps: explode_rows(
+            [raster_symbol_attrs(p, wl)[1] for p in ps.to_pylist()]
+        ),
         explode=True,
     )
 
@@ -200,7 +205,9 @@ def ocr_layout(
     (/root/reference/src/api.rs:1353-1364, 774-781)."""
     return map_docs(
         pages, id_cols, payload_col, OCR_LAYOUT_FIELDS,
-        lambda ps: explode_rows([raster_layout_blocks(p)[1] for p in ps]),
+        lambda ps: explode_rows(
+            [raster_layout_blocks(p)[1] for p in ps.to_pylist()]
+        ),
         explode=True,
     )
 
@@ -235,7 +242,7 @@ def ocr_words(
     fields = OCR_WORD_FIELDS + (", word_lang string" if include_lang else "")
     n_word_cols = len(arrow_fields(fields))
 
-    def fn(payloads: list) -> tuple:
+    def fn(payloads: pa.Array) -> tuple:
         docs = raster_results(payloads, cfg)
         counts, cols = explode_rows([r.words for r in docs])
         # page dims: per-doc values repeated per word (the coordinate

@@ -21,7 +21,6 @@ import json
 import os
 import time
 from collections import defaultdict
-from typing import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -73,11 +72,11 @@ def run_checkpointed(
     cfg: ExtractConfig | None = None,
     n_buckets: int = 32,
     group_size: int = 8,
-    id_cols: Sequence[str] = ("url",),
     fail_buckets: set | None = None,
 ) -> DataFrame:
     """Process ``pages`` with per-bucket checkpointing; returns the full
-    result DataFrame read back from ``out_dir/data``.
+    result DataFrame, keyed by ``(url, bucket)``, read back from
+    ``out_dir/data``.
 
     ``fail_buckets`` injects a simulated crash after the group containing
     those buckets commits everything before them — used by the resume test
@@ -152,7 +151,7 @@ def run_checkpointed(
         t0 = time.time()
         part = bucketed.filter(F.col("bucket").isin(group))
         result = extract_text(
-            part, cfg, id_cols=tuple(id_cols) + ("bucket",), spans=True
+            part, cfg, id_cols=("url", "bucket"), spans=True
         )
         (
             result.repartition(len(group), "bucket")

@@ -21,7 +21,7 @@ def _batch(id_type=pa.string()):
 
 def test_float_for_long_field_names_the_column():
     fields = arrow_fields("status string, n long")
-    fn = lambda ps: [["ok"] * len(ps), [len(p) / 2 for p in ps]]  # noqa: E731
+    fn = lambda ps: [["ok"] * len(ps), [len(p) / 2 for p in ps.to_pylist()]]  # noqa: E731
     with pytest.raises(TypeError, match=r"column 'n' \(int64\)"):
         map_batch(_batch(), 1, fn, fields)
     # a length mismatch names the column too
@@ -34,7 +34,10 @@ def test_float_for_long_field_names_the_column():
 
 def test_ids_pass_through_with_their_input_type():
     fields = arrow_fields("n long, spans array<struct<start: long, end: long>>")
-    fn = lambda ps: [[len(p) for p in ps], [[(0, len(p))] for p in ps]]  # noqa: E731
+    fn = lambda ps: [  # noqa: E731
+        [len(p) for p in ps.to_pylist()],
+        [[(0, len(p))] for p in ps.to_pylist()],
+    ]
     for id_type in (pa.string(), pa.large_string()):
         out = map_batch(_batch(id_type), 1, fn, fields)
         assert out.schema.field("url").type == id_type
@@ -46,13 +49,72 @@ def test_ids_pass_through_with_their_input_type():
 
 def test_explode_repeats_ids_per_row():
     fields = arrow_fields("i long, ch string")
-    fn = lambda ps: explode_rows([list(enumerate(p.decode())) for p in ps])  # noqa: E731
+    fn = lambda ps: explode_rows([list(enumerate(p.decode())) for p in ps.to_pylist()])  # noqa: E731
     out = map_batch(_batch(pa.large_string()), 1, fn, fields, explode=True)
     assert out.schema.field("url").type == pa.large_string()
     assert [tuple(r.values()) for r in out.to_pylist()] == [
         ("a", 0, "x"), ("b", 0, "y"), ("b", 1, "y"),
     ]
     assert map_batch(_batch().slice(2), 1, fn, fields, explode=True) is None
+
+
+def test_arrow_column_of_the_field_type_passes_uncopied():
+    fields = arrow_fields("sig array<long>")
+    sig = pa.array([[1, 2], [], [3]], pa.list_(pa.int64()))
+    out = map_batch(_batch(), 1, lambda ps: [sig], fields)
+    assert out.column(1).buffers()[1].address == sig.buffers()[1].address
+    assert out.to_pylist()[0] == {"url": "a", "sig": [1, 2]}
+
+
+def test_arrow_column_of_another_type_names_the_column():
+    fields = arrow_fields("n long, sig array<long>")
+    narrow = pa.array([[1], [2], [3]], pa.list_(pa.int32()))
+    fn = lambda ps: [[1, 2, 3], narrow]  # noqa: E731
+    with pytest.raises(TypeError, match=r"column 'sig' \(list<item: int64>\)"):
+        map_batch(_batch(), 1, fn, fields)
+    # no silent cast for a wider type either
+    fn = lambda ps: [pa.array([1, 2, 3], pa.int32()), narrow]  # noqa: E731
+    with pytest.raises(TypeError, match="column 'n'"):
+        map_batch(_batch(), 1, fn, fields)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_null_embedding_emits_no_rows(spark, id_type):
+    """A NULL embedding has no LSH bucket or IVF/IMI cell: every
+    assignment stage skips its row, in a mixed batch and in an all-NULL
+    one, and passes the other ids through with their type."""
+    from tesseract_rs_spark.functions.similarity import (
+        imi_assign,
+        ivf_assign,
+        lsh_signatures,
+    )
+
+    cast = int if id_type == "long" else str
+    rows = [
+        (cast(1), [1.0, 0.0, 0.5, 0.2]),
+        (cast(2), None),
+        (cast(3), [0.0, 1.0, -0.5, 0.1]),
+    ]
+    schema = f"vec_id {id_type}, embedding array<double>"
+    mixed = spark.createDataFrame(rows, schema).coalesce(1)
+    nulls = spark.createDataFrame([rows[1]], schema)
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
+    halves = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    stages = {
+        "lsh_signatures": (lambda df: lsh_signatures(df, n_tables=3, dim=4), 3),
+        "ivf_assign": (lambda df: ivf_assign(df, cents, nprobe=2), 2),
+        "imi_assign": (
+            lambda df: imi_assign(df, halves, halves, nprobe_per_half=2), 4
+        ),
+    }
+    for name, (stage, per_vec) in stages.items():
+        out = stage(mixed)
+        assert out.schema["vec_id"].dataType.simpleString() == (
+            "bigint" if id_type == "long" else "string"
+        ), name
+        ids = [r["vec_id"] for r in out.collect()]
+        assert sorted(ids) == sorted([cast(1), cast(3)] * per_vec), name
+        assert stage(nulls).collect() == [], name
 
 
 def test_unsupported_field_list_raises():

@@ -233,6 +233,29 @@ def test_cli_curate_rejects_unsupported_combination(tmp_path):
     assert rc2 == 2
 
 
+@pytest.mark.parametrize(
+    "flags",
+    [
+        ["--checkpoint-dir", "c", "--output-format", "words"],
+        ["--checkpoint-dir", "c", "--payload", "raster"],
+        ["--payload", "raster", "--output-format", "hocr"],
+    ],
+    ids=["checkpoint-words", "checkpoint-raster", "raster-hocr"],
+)
+def test_cli_rejects_combination_it_does_not_run(tmp_path, flags):
+    """The checkpointed job extracts html text only and the raster job
+    writes OCR text only: any other combination refuses before reading
+    the input (exit 2) instead of writing a different table and exiting
+    0."""
+    sys.path.insert(0, REPO)
+    import importlib
+
+    extract_job = importlib.import_module("jobs.extract_job")
+    argv = ["--input", str(tmp_path / "missing"), "--output", str(tmp_path / "out")]
+    assert extract_job.main(argv + flags + ["--master", "2"]) == 2
+    assert not (tmp_path / "out").exists()
+
+
 def test_cli_fuzzy_dedup_checkpoint_modes(tmp_path, spark):
     """--fuzzy-dedup pins the curated survivor set with a RELIABLE
     checkpoint when --checkpoint-dir is given (preemption-safe: the pin

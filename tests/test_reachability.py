@@ -183,21 +183,18 @@ def test_every_definition_is_reached_from_a_product_path():
 
 
 # The JVM <-> Python Arrow boundary is written once, in BOUNDARY; these
-# stages are the only others that cross it themselves: vector-matrix
-# stages, grouped per-document renderers, page generators, a per-batch
-# aggregate and two readers of raw Arrow buffers.
+# stages are the only others that cross it themselves, because none is a
+# per-row stage over one payload column: a grouped renderer
+# (applyInPandas), two page generators (several input columns and a
+# timestamp output, which arrow_fields has no type for) and two per-batch
+# partial aggregates.
 BOUNDARY = "tesseract_rs_spark/operators/arrow.py"
 OWN_BOUNDARY = {
-    ("tesseract_rs_spark/functions/similarity.py", "lsh_signatures"),
     ("tesseract_rs_spark/functions/similarity.py", "ivf_centroids_kmeans_distributed"),
-    ("tesseract_rs_spark/functions/similarity.py", "ivf_assign"),
-    ("tesseract_rs_spark/functions/similarity.py", "imi_assign"),
     ("tesseract_rs_spark/operators/renderers.py", "pdf_roundtrip_text"),
     ("tesseract_rs_spark/sources/pages.py", "pages_from_documents"),
     ("tesseract_rs_spark/sources/pages.py", "raster_pages_from_documents"),
     ("tesseract_rs_spark/operators/adaptive.py", "learn_glyphs"),
-    ("tesseract_rs_spark/functions/dedup.py", "_signatures"),
-    ("tesseract_rs_spark/functions/dedup.py", "simhash"),
 }
 BOUNDARY_CALLS = {"mapInPandas", "mapInArrow", "applyInPandas"}
 
