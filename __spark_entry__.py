@@ -1072,8 +1072,7 @@ def _q_dedup_embedding_m(spark, sf_dir):
     )
     # mine the IVF pairs ONCE (localCheckpoint materializes quantizer
     # training + the within-cell verify) and feed both the pair branch
-    # and semantic_dedup — without this the survivor branch re-trains
-    # and re-verifies the identical pair set (review r5)
+    # and semantic_dedup, which takes its pairs from its caller
     ivf_pairs = embedding_dup_pairs_ivf(
         emb, threshold=0.45, n_centroids=1, train="kmeans"
     ).localCheckpoint()
@@ -1081,9 +1080,7 @@ def _q_dedup_embedding_m(spark, sf_dir):
     imi = embedding_dup_pairs_imi(
         emb, threshold=0.45, n_cells_per_half=1, train="kmeans"
     ).select(F.lit("imi_pair").alias("method"), "id_a", "id_b")
-    surv = semantic_dedup(
-        emb, threshold=0.45, n_centroids=1, train="kmeans", pairs=ivf_pairs
-    ).select(
+    surv = semantic_dedup(emb, ivf_pairs).select(
         F.lit("semantic_survivor").alias("method"),
         F.col("vec_id").alias("id_a"),
         F.lit(None).cast("long").alias("id_b"),

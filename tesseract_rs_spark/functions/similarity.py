@@ -1,19 +1,36 @@
-"""Similarity search over embedding columns.
+"""Similarity search and near-duplicate mining over embedding columns.
 
-- ``cosine_topk``: brute-force exact top-k — the baseline.  The small query
-  side is **broadcast** (no shuffle of the corpus), the dot product is a
-  JVM-side ``zip_with``/``aggregate`` fold (no Python), and per-vector norms
-  are precomputed once per side.  At 100 TB corpus scale this is one
-  broadcast-map stage: cost = corpus bytes / executors.
-- ``ann_lsh_topk``: the approximate scale path — seeded random-hyperplane
-  signatures (sign-of-projection, Charikar 2002) bucket the corpus; top-k
-  runs within buckets only.  Recall vs the exact baseline is asserted in
-  tests, mirroring how the reference pins decode quality with confidence
-  gates (/root/reference/tests/integration_test.rs:53-58).
+Every path here is one exact-cosine join, with or without a bucketing
+step in front of it that prunes the candidate pairs:
+
+- top-k search, ``(query_id, rank, neighbor_id)``: :func:`cosine_topk`
+  (brute force against a broadcast query side — the baseline),
+  :func:`ann_lsh_topk` (seeded random-hyperplane LSH tables, Charikar
+  2002), :func:`ann_ivf_topk` (a flat IVF coarse quantizer) and
+  :func:`ann_imi_topk` (the inverted multi-index product grid);
+- near-duplicate pairs, ``(id_a, id_b)`` with ``id_a < id_b``:
+  :func:`embedding_dup_pairs` (LSH tables planned from the threshold by
+  :func:`lsh_params_for_threshold`), :func:`embedding_dup_pairs_ivf` and
+  :func:`embedding_dup_pairs_imi` (within-cell, SemDeDup-style), and
+  :func:`semantic_dedup`, which turns mined pairs into survivors;
+- the stages those are built from: :func:`lsh_signatures`, the two
+  spherical k-means trainers (:func:`ivf_centroids_kmeans` on the driver,
+  :func:`ivf_centroids_kmeans_distributed` on the cluster),
+  :func:`ivf_assign`, :func:`imi_codebooks` and :func:`imi_assign`.
+
+Whatever the bucketing, candidates are scored JVM-side (a
+``zip_with``/``aggregate`` dot product, no Python) through one side
+projection and one cosine: a NULL embedding takes no part, and an
+all-zero one has norm 1, so its cosine with anything is 0.  With every
+bucket probed the answer is the exact one for any codebook — the regime
+the entry queries check against their SQL oracles; the approximate
+regimes are recall-gated in tests.
 """
 
 from __future__ import annotations
 
+import math
+import warnings
 from typing import Iterator
 
 import numpy as np
@@ -24,13 +41,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
 
+from tesseract_rs_spark.functions.dedup import dup_clusters, guarded_pair_join
 from tesseract_rs_spark.operators.arrow import map_docs
 
 
 def _norm(col):
-    return F.sqrt(
+    """L2 norm of an array column, an all-zero vector's read as 1 (the
+    rule the numpy stages use): its cosine is then 0, not a division by
+    zero."""
+    n = F.sqrt(
         F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
     )
+    return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
 
 def _dot(a, b):
@@ -38,6 +60,34 @@ def _dot(a, b):
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+def _side(df: DataFrame, name: str, id_col: str, vec_col: str) -> DataFrame:
+    """One side of a cosine join: ``name`` (the id), ``name_v`` (the
+    vector) and ``name_n`` (its norm, computed once per vector).  NULL
+    vectors are dropped: they have no neighbours and are no one's."""
+    v = F.col(vec_col)
+    return df.filter(v.isNotNull()).select(
+        F.col(id_col).alias(name), v.alias(f"{name}_v"), _norm(v).alias(f"{name}_n")
+    )
+
+
+def _cosine(a: str, b: str):
+    """Exact cosine between the vectors of two :func:`_side` frames."""
+    return _dot(F.col(f"{a}_v"), F.col(f"{b}_v")) / (F.col(f"{a}_n") * F.col(f"{b}_n"))
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id): the ``k`` best-cosine neighbours of
+    each query among ``pairs``, which carry both sides' :func:`_side`
+    columns.  Ties break on neighbor id for cross-engine determinism."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
+    return (
+        pairs.withColumn("_cos", _cosine("query_id", "neighbor_id"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id")
     )
 
 
@@ -49,71 +99,83 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, rank, neighbor_id): exact cosine top-k of each query
-    vector against the corpus (self-match excluded).  Ties break on
-    neighbor id for cross-engine determinism."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = (
-        c.join(broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
+    vector against the corpus (self-match excluded).  The small query
+    side is broadcast, so the corpus never shuffles: at corpus scale this
+    is one broadcast-map stage, cost = corpus bytes / executors."""
+    c = _side(corpus, "neighbor_id", id_col, vec_col)
+    q = _side(queries, "query_id", id_col, vec_col)
+    return _topk(c.join(broadcast(q), F.col("neighbor_id") != F.col("query_id")), k)
+
+
+def _bucket_pairs(c_keys: DataFrame, q_keys: DataFrame, keys: list, id_col: str) -> DataFrame:
+    """(query_id, neighbor_id): the corpus and query rows that share a
+    bucket key (LSH table+bucket, or quantizer cell), self-matches out.
+    The query side is broadcast, so the only corpus-sized exchange is
+    the key-bucketed frame itself — never an all-pairs product."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id")
+        c_keys.withColumnRenamed(id_col, "neighbor_id")
+        .join(broadcast(q_keys.withColumnRenamed(id_col, "query_id")), keys)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
     )
 
 
-def _verify_candidate_pairs(
-    corpus: DataFrame,
+def _rescore_topk(
     cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Shared tail of the bucketed ANN family: the (query_id,
+    neighbor_id) candidates pull their vectors back in, score with the
+    exact cosine and rank to top-k.  ``cand`` must hold each pair once."""
+    c = _side(corpus, "neighbor_id", id_col, vec_col)
+    q = _side(queries, "query_id", id_col, vec_col)
+    return _topk(cand.join(c, "neighbor_id").join(broadcast(q), "query_id"), k)
+
+
+def _mine_pairs(
+    corpus: DataFrame,
+    keyed: DataFrame,
+    keys: list,
     threshold: float,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Exact-cosine verification of a candidate (id_a, id_b) frame — the
-    shared tail of every bucketed miner (LSH / IVF / IMI): two equi-joins
-    pull the vectors back in, the cosine computes JVM-side
-    (``F.aggregate`` dot + norms, whole-stage codegen), survivors keep
-    only the id pair.  Candidate volume is the scale knob upstream; this
-    stage is exact by construction."""
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_av"),
-        _norm(F.col(vec_col)).alias("_an"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_bv"),
-        _norm(F.col(vec_col)).alias("_bn"),
-    )
+    """Shared tail of every bucketed near-dup miner (LSH tables, IVF or
+    IMI cells): candidate pairs within each bucket of ``keyed`` (an
+    ``(id_col, *keys)`` frame), then exact-cosine verification — two
+    equi-joins pull the vectors back in, survivors keep only the id pair.
+    All-zero or duplicate-heavy embeddings pile into one bucket, so the
+    candidates come from ``guarded_pair_join``, whose chunked triangle
+    join bounds per-task work.  Candidate volume is the scale knob
+    upstream; this stage is exact by construction."""
+    cand = guarded_pair_join(keyed, keys, id_col)
+    a = _side(corpus, "id_a", id_col, vec_col)
+    b = _side(corpus, "id_b", id_col, vec_col)
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("_cos", _dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn")))
-        .filter(F.col("_cos") >= threshold)
+        .filter(_cosine("id_a", "id_b") >= threshold)
         .select("id_a", "id_b")
     )
 
 
-def lsh_params_for_threshold(
-    threshold: float,
-    miss_target: float = 1e-6,
-    max_tables: int = 32,
-    max_planes: int = 32,
-) -> tuple:
+# The LSH plan: per-pair miss probability at the threshold, and the caps
+# that keep the signature volume bounded (every vector emits one row per
+# table).  The hyperplanes are a seeded constant.
+LSH_MISS_TARGET = 1e-6
+LSH_MAX_TABLES = 32
+LSH_MAX_PLANES = 32
+LSH_SEED = 7
+
+
+def lsh_params_for_threshold(threshold: float) -> tuple:
     """(n_planes, n_tables) such that a pair AT the cosine threshold is
-    missed by every table with probability <= ``miss_target``, with the
-    table count BOUNDED at ``max_tables`` (VERDICT r3 #4: the old
+    missed by every table with probability <= ``LSH_MISS_TARGET``, with
+    the table count BOUNDED at ``LSH_MAX_TABLES`` (VERDICT r3 #4: the old
     derivation silently returned ~177 tables at t=0.45 — a scale-killer,
     since every vector emits one signature row per table).
 
@@ -121,41 +183,38 @@ def lsh_params_for_threshold(
     p = 1 - arccos(t)/pi (Charikar 2002); a table of k planes collides
     with p^k, and L independent tables miss with (1-p^k)^L.  We pick the
     DEEPEST k (strongest pruning: a random pair collides with ~2^-k per
-    table) whose guaranteed-recall table count still fits ``max_tables``
-    — L(k) grows monotonically with k, so the search is a single upward
-    scan.  Low thresholds force shallow tables (weak pruning is intrinsic
+    table) whose guaranteed-recall table count still fits the cap — L(k)
+    grows monotonically with k, so the search is a single upward scan.
+    Low thresholds force shallow tables (weak pruning is intrinsic
     there: threshold pairs are barely more collision-prone than random
     ones); below ~16 buckets/table the candidate set is effectively
     quadratic, so a ``UserWarning`` routes corpus-scale callers to the
     IVF path (:func:`ann_ivf_topk` / ``nlist``-bucketed candidate joins)
     instead.  Raises ``ValueError`` when no bounded plan exists at all
     (threshold <= ~0: nothing separates pairs from noise)."""
-    import math
-    import warnings
-
     p = 1.0 - math.acos(min(1.0, max(-1.0, threshold))) / math.pi
     # clamp into an open interval: t=1.0 gives p=1.0 (log 0 division) and
     # t<=-1 gives p=0.0 (log(0)) — both legal caller inputs (ADVICE r2)
     p = min(max(p, 1e-9), 1.0 - 1e-9)
     best = None
-    for k in range(1, max_planes + 1):
+    for k in range(1, LSH_MAX_PLANES + 1):
         p_table = min(p**k, 1.0 - 1e-12)
         # log1p: for tiny p_table, 1.0 - p_table rounds to 1.0 and a plain
         # log returns 0 (division by zero at t <= -1)
         n_tables = max(
-            1, math.ceil(math.log(miss_target) / math.log1p(-p_table))
+            1, math.ceil(math.log(LSH_MISS_TARGET) / math.log1p(-p_table))
         )
-        if n_tables <= max_tables:
+        if n_tables <= LSH_MAX_TABLES:
             best = (k, n_tables)
         elif best is not None:
             break  # deeper tables only ever need MORE tables
     if best is None:
         raise ValueError(
-            f"no LSH plan with <= {max_tables} tables reaches miss <= "
-            f"{miss_target} at cosine threshold {threshold}: the per-plane "
+            f"no LSH plan with <= {LSH_MAX_TABLES} tables reaches miss <= "
+            f"{LSH_MISS_TARGET} at cosine threshold {threshold}: the per-plane "
             f"collision probability ({p:.3g}) is too low to amplify. "
-            "Raise the threshold, pass explicit (n_planes, n_tables), or "
-            "use the IVF path (ann_ivf_topk) for low-similarity regimes."
+            "Raise the threshold, or use the IVF path "
+            "(embedding_dup_pairs_ivf / ann_ivf_topk) for low-similarity regimes."
         )
     if best[0] < 4:
         warnings.warn(
@@ -175,9 +234,6 @@ def embedding_dup_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-    seed: int = 7,
     dim: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b) with cosine >=
@@ -187,43 +243,38 @@ def embedding_dup_pairs(
     (table, bucket, id) rows shuffle — constant bytes per vector, no
     corpus x corpus nested loop); candidates are then verified with the
     EXACT cosine, so the output is identical to the all-pairs answer
-    whenever the tables recall every >=threshold pair (params from
-    :func:`lsh_params_for_threshold` put the per-pair miss at <=1e-6;
+    whenever the tables recall every >=threshold pair (the plan from
+    :func:`lsh_params_for_threshold` puts the per-pair miss at <=1e-6;
     recall == 100% vs exact is pinned in tests)."""
-    if n_planes is None or n_tables is None:
-        auto_k, auto_l = lsh_params_for_threshold(threshold)
-        n_planes = n_planes if n_planes is not None else auto_k
-        n_tables = n_tables if n_tables is not None else auto_l
-    from tesseract_rs_spark.functions.dedup import guarded_pair_join
-
-    sig = lsh_signatures(corpus, n_planes, n_tables, seed, id_col, vec_col, dim)
-    # degenerate-bucket guard: all-zero / duplicate-heavy embeddings pile
-    # into one bucket; the chunked triangle join bounds per-task work
-    cand = guarded_pair_join(sig, ["table", "bucket"], id_col)
-    return _verify_candidate_pairs(corpus, cand, threshold, id_col, vec_col)
+    n_planes, n_tables = lsh_params_for_threshold(threshold)
+    sig = lsh_signatures(corpus, n_planes, n_tables, id_col, vec_col, dim)
+    return _mine_pairs(corpus, sig, ["table", "bucket"], threshold, id_col, vec_col)
 
 
 def _embeddings(vecs: pa.Array, dim: int) -> tuple:
     """``(valid, mat)``: the mask of an embedding column's non-NULL rows
-    and those rows as one float64 matrix, read through the list offsets.
-    A NULL embedding has no bucket or cell, so the stages emit no row for
-    it (mirroring the exact path, where a NULL cosine ranks out).  The
-    rows must share one width; a batch without rows gives ``(0, dim)``."""
+    and those rows as one float64 ``dim``-column matrix, read through the
+    list offsets.  A NULL embedding has no bucket or cell, so the stages
+    emit no row for it (as the Spark-side cosine drops it from both
+    sides).  A row of any other width raises, naming both widths; a batch
+    without rows gives ``(0, dim)``."""
     valid = vecs.is_valid()
     kept = vecs.filter(valid)
     widths = np.unique(pc.list_value_length(kept).to_numpy(zero_copy_only=False))
-    if len(widths) > 1:
-        raise ValueError(f"embeddings of widths {widths.tolist()} in one batch")
+    if (widths != dim).any():
+        raise ValueError(
+            f"vector dim {int(widths[widths != dim][0])} != codebook dim "
+            f"{dim}: the stage's codebook or hyperplanes were built for a "
+            "different embedding width"
+        )
     flat = kept.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    width = int(widths[0]) if len(widths) else dim
-    return valid.to_numpy(zero_copy_only=False), flat.reshape(len(kept), width)
+    return valid.to_numpy(zero_copy_only=False), flat.reshape(len(kept), dim)
 
 
 def lsh_signatures(
     df: DataFrame,
     n_planes: int = 4,
     n_tables: int = 8,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
@@ -232,8 +283,9 @@ def lsh_signatures(
     ``n_tables`` tables hashes with its own ``n_planes`` hyperplanes; a
     neighbor is a candidate if it collides in ANY table (recall
     1-(1-p^b)^L, the standard LSH amplification).  One numpy matmul per
-    Arrow batch; the planes are a broadcast-sized seeded constant."""
-    rng = np.random.RandomState(seed)
+    Arrow batch; the planes are a broadcast-sized constant seeded by
+    ``LSH_SEED``."""
+    rng = np.random.RandomState(LSH_SEED)
     planes = rng.normal(size=(dim, n_tables * n_planes))
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
@@ -251,49 +303,16 @@ def lsh_signatures(
     )
 
 
-def ivf_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Deterministic IVF coarse-quantizer codebook: the ``n_centroids``
-    corpus vectors with the smallest ids.  A production IVF trains
-    k-means on a sample (:func:`ivf_centroids_kmeans`); a fixed
-    id-ordered sample is the simplest deterministic,
-    cross-engine-reproducible codebook (the cell structure it induces is
-    equally valid — recall/cost tradeoffs are governed by nprobe either
-    way).  Returns a tiny driver-side list[(centroid_id, np.ndarray)] —
-    nlist × dim floats, broadcast-sized by construction."""
-    rows = (
-        corpus.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull())
-        .orderBy(F.col(id_col).asc())
-        .limit(n_centroids)
-        .collect()
-    )
-    return [
-        (i, np.asarray(r[vec_col], dtype=np.float64)) for i, r in enumerate(rows)
-    ]
-
-
-# SemDeDup / IVF auto-sizing constants.  Cells target ~256 members (how
-# SemDeDup configures its k-means: nlist ~ n / 100..1000); the k-means
-# sample OVERSAMPLES the requested cell count 8x so Lloyd has real data
-# to refine (at 1x every sample vector seeds its own centroid and zero
-# refinement happens).  MAX_AUTO_NLIST is the driver-Lloyd budget, not a
-# statistical limit: each Lloyd iteration is a (sample x nlist x dim)
-# GEMM with sample = 8*nlist, so cost grows ~nlist^2 — at 8192 cells
-# (65,536-row sample, dim 64) training is ~10s of single-threaded BLAS;
-# at the old 65,536-cap it would be ~100x that plus a ~270 MB driver
-# sample.  Beyond the cap, use train="distributed"
+# Quantizer budgets.  The k-means sample OVERSAMPLES the requested cell
+# count 8x so Lloyd has real data to refine (at 1x every sample vector
+# seeds its own centroid and zero refinement happens).  MAX_AUTO_NLIST is
+# the driver-Lloyd budget, not a statistical limit: each Lloyd iteration
+# is a (sample x nlist x dim) GEMM with sample = 8*nlist, so cost grows
+# ~nlist^2 — at 8192 cells (65,536-row sample, dim 64) training is ~10s
+# of single-threaded BLAS; at 65,536 cells it would be ~100x that plus a
+# ~270 MB driver sample.  Beyond the cap, use train="distributed"
 # (ivf_centroids_kmeans_distributed — full-corpus Lloyd, no driver
-# training cost, any nlist) or train="ids" (no Lloyd — a bounded
-# limit-collect codebook); the sampled auto path warns when it caps,
-# because capped nlist means cells grow as n / MAX_AUTO_NLIST and
-# candidate volume grows with them (VERDICT r4: the previous silent
-# clamp at the 4,096-row sample was exactly this failure, hidden).
-SEMDEDUP_CELL_TARGET = 256
+# training cost).
 KMEANS_OVERSAMPLE = 8
 MAX_AUTO_NLIST = 8192
 # The distributed trainer has no TRAINING-sample collect, but the
@@ -306,50 +325,14 @@ MAX_AUTO_NLIST = 8192
 # quantizers need a hierarchical/multi-index codebook (IMI-style), a
 # different algorithm, so the guard RAISES rather than silently
 # degrading (review r6: the unguarded path OOMed the driver at exactly
-# the corpus scale the feature exists for).  At the 256-member cell
-# target this budget covers corpora to ~16.7M vectors; beyond, raise
-# the cell target (cells of n/65536 members) or shard the corpus.
+# the corpus scale the feature exists for).  At ~256-member cells this
+# budget covers corpora to ~16.7M vectors; beyond, use IMI.
 MAX_DISTRIBUTED_NLIST = 65536
-
-
-def auto_nlist(n: int) -> int:
-    """Corpus-size-driven IVF cell count: ~``SEMDEDUP_CELL_TARGET``
-    members per cell, floored at 4, capped at the driver-Lloyd budget
-    ``MAX_AUTO_NLIST`` (see the constant's derivation above).  Warns at
-    the cap — there the ~256-member guarantee no longer holds and cells
-    grow linearly with the corpus."""
-    import warnings
-
-    want = max(4, n // SEMDEDUP_CELL_TARGET)
-    if want > MAX_AUTO_NLIST:
-        warnings.warn(
-            f"auto-sized IVF cell count capped at {MAX_AUTO_NLIST} (corpus "
-            f"of {n} vectors wants {want} cells for ~{SEMDEDUP_CELL_TARGET}"
-            "-member cells): cells will average "
-            f"~{n // MAX_AUTO_NLIST} members and within-cell candidate "
-            "volume grows accordingly. Driver-side Lloyd cannot train "
-            "more cells (cost ~nlist^2); use train='distributed' "
-            "(full-corpus distributed Lloyd, uncapped auto-sizing) or "
-            "pass n_centroids explicitly with train='ids' "
-            "(limit-collect codebook, no Lloyd).",
-            UserWarning,
-            stacklevel=3,
-        )
-    return min(want, MAX_AUTO_NLIST)
-
-
-def kmeans_sample_size(n_centroids: int, floor: int = 4096) -> int:
-    """Sample size for :func:`ivf_centroids_kmeans` that can actually
-    seed ``n_centroids`` cells: ``max(floor, 8 * n_centroids)``.  Every
-    auto-sizing caller threads this — a fixed default sample with a
-    growing nlist is the silent-cap bug VERDICT r4 found."""
-    return max(floor, KMEANS_OVERSAMPLE * n_centroids)
 
 
 def ivf_centroids_kmeans(
     corpus: DataFrame,
     n_centroids: int = 16,
-    sample_size: int = 4096,
     n_iters: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -360,51 +343,39 @@ def ivf_centroids_kmeans(
     cluster sizes, unlike ``DataFrame.sample``).
 
     Scale shape: the sample is the only data that reaches the driver
-    (``sample_size`` rows, orderBy(hash) LIMIT — a TakeOrdered, no full
-    sort); Lloyd iterations run driver-side in numpy over
-    sample × nlist × dim, with the assignment GEMM chunked over sample
-    rows so peak memory stays bounded (~128 MB blocks) even at the
-    largest supported nlist.  ``n_centroids > sample_size`` RAISES
-    instead of silently clamping: a clamped codebook caps the effective
-    cell count at the sample size, which at corpus scale lets cells grow
-    unbounded (VERDICT r4) — callers must thread
-    :func:`kmeans_sample_size` (the auto paths do).  Training is
-    spherical (centroids L2-normalized each round, assignment by dot
-    product = cosine), matching the cosine metric ``ann_ivf_topk``
-    buckets by.  Empty clusters are re-seeded with the sample vector
-    FARTHEST from its centroid, so the codebook always has
-    ``n_centroids`` distinct cells (clamped only by the CORPUS size when
-    the corpus itself is smaller).  Fully deterministic: hash-ordered
-    sample + index-tie-broken argmax, no RNG."""
+    (``max(4096, KMEANS_OVERSAMPLE * n_centroids)`` rows, orderBy(hash)
+    LIMIT — a TakeOrdered, no full sort), so it always covers the
+    requested cell count (a fixed sample with a growing nlist capped the
+    effective cell count, VERDICT r4); Lloyd iterations run driver-side
+    in numpy over sample × nlist × dim, with the assignment GEMM chunked
+    over sample rows so peak memory stays bounded (~128 MB blocks) even
+    at the largest supported nlist.  Training is spherical (centroids
+    L2-normalized each round, assignment by dot product = cosine),
+    matching the cosine metric ``ann_ivf_topk`` buckets by.  Empty
+    clusters are re-seeded with the sample vector FARTHEST from its
+    centroid, so the codebook always has ``n_centroids`` distinct cells
+    (clamped only by the CORPUS size when the corpus itself is smaller).
+    Fully deterministic: hash-ordered sample + index-tie-broken argmax,
+    no RNG."""
     if n_centroids > MAX_AUTO_NLIST:
-        # the budget gates EXPLICIT nlist too, not just the auto path: at
-        # nlist=500k the threaded sample is a multi-GB driver collect and
-        # each Lloyd iteration a (4M x 500k x dim) GEMM on ONE BLAS
-        # thread (session pins OPENBLAS_NUM_THREADS=1) — a driver hang,
-        # not a job.  (The ~10s budget calibration is dim=64; high-dim
-        # embeddings scale it linearly — another reason not to exceed it.)
+        # the budget gates EXPLICIT nlist too: at nlist=500k the sample is
+        # a multi-GB driver collect and each Lloyd iteration a
+        # (4M x 500k x dim) GEMM on ONE BLAS thread (session pins
+        # OPENBLAS_NUM_THREADS=1) — a driver hang, not a job.  (The ~10s
+        # budget calibration is dim=64; high-dim embeddings scale it
+        # linearly — another reason not to exceed it.)
         raise ValueError(
             f"n_centroids={n_centroids} exceeds the driver-Lloyd budget "
             f"({MAX_AUTO_NLIST}): k-means training cost grows ~nlist^2 "
             "driver-side. Use train='distributed' "
             "(ivf_centroids_kmeans_distributed — full-corpus Lloyd, any "
-            "nlist) or train='ids' (limit-collect codebook, no Lloyd)."
-        )
-    if n_centroids > sample_size:
-        raise ValueError(
-            f"n_centroids={n_centroids} exceeds sample_size={sample_size}: "
-            "the k-means sample cannot seed that many cells, and silently "
-            "clamping would cap the effective cell count at the sample "
-            "size — at corpus scale that lets cells (and the IVF dedup "
-            "path's ~n^2/nlist candidate volume) grow unbounded. Pass "
-            f"sample_size >= n_centroids (kmeans_sample_size gives "
-            f"{kmeans_sample_size(n_centroids)})."
+            "nlist up to the flat-codebook bound)."
         )
     rows = (
         corpus.select(id_col, vec_col)
         .filter(F.col(vec_col).isNotNull())
         .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
-        .limit(sample_size)
+        .limit(max(4096, KMEANS_OVERSAMPLE * n_centroids))
         .collect()
     )
     if not rows:
@@ -508,8 +479,6 @@ def ivf_centroids_kmeans_distributed(
             f"n/{MAX_DISTRIBUTED_NLIST} members) or build a hierarchical "
             "(two-level) codebook instead"
         )
-    import warnings
-
     vecs = corpus.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     # persist BEFORE the seed collect: the seed job materializes the
     # cache, so an expensive upstream lineage (extraction, joins) runs
@@ -606,22 +575,36 @@ def _train_codebook(
     id_col: str,
     vec_col: str,
 ):
-    """Shared ``train=`` dispatch for the IVF family (ann_ivf_topk /
-    embedding_dup_pairs_ivf): 'ids' | 'kmeans' | 'distributed'."""
-    if train == "kmeans":
-        return ivf_centroids_kmeans(
-            corpus, n_centroids, sample_size=kmeans_sample_size(n_centroids),
-            id_col=id_col, vec_col=vec_col,
-        )
-    if train == "distributed":
-        return ivf_centroids_kmeans_distributed(
-            corpus, n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    if train == "ids":
-        return ivf_centroids(corpus, n_centroids, id_col, vec_col)
-    raise ValueError(
-        f"train must be 'ids', 'kmeans' or 'distributed', got {train!r}"
-    )
+    """Shared ``train=`` dispatch for the IVF and IMI families:
+    'kmeans' (:func:`ivf_centroids_kmeans`) | 'distributed'
+    (:func:`ivf_centroids_kmeans_distributed`)."""
+    trainers = {
+        "kmeans": ivf_centroids_kmeans,
+        "distributed": ivf_centroids_kmeans_distributed,
+    }
+    if train not in trainers:
+        raise ValueError(f"train must be 'kmeans' or 'distributed', got {train!r}")
+    return trainers[train](corpus, n_centroids, id_col=id_col, vec_col=vec_col)
+
+
+def _codebook(cents) -> tuple:
+    """``(mat, norms, ids)`` of a ``[(cell_id, centroid)]`` codebook; a
+    zero centroid's norm reads as 1."""
+    mat = np.stack([c for _, c in cents])
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = 1.0
+    return mat, norms, np.array([i for i, _ in cents], dtype=np.int64)
+
+
+def _nearest(mat: np.ndarray, book: tuple, nprobe: int) -> np.ndarray:
+    """(rows, nprobe) ids of each row's ``nprobe`` nearest cells of a
+    :func:`_codebook` by cosine, ties on the lower centroid index."""
+    cmat, cn, cids = book
+    vn = np.linalg.norm(mat, axis=1)
+    vn[vn == 0.0] = 1.0
+    cos = (mat @ cmat.T) / vn[:, None] / cn[None, :]
+    # argsort desc with index tiebreak: negate, stable sort
+    return cids[np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]]
 
 
 def ivf_assign(
@@ -638,77 +621,17 @@ def ivf_assign(
     the LSH cap routes to, VERDICT r3 #4)."""
     if not centroids:
         raise ValueError(
-            "empty IVF codebook: the corpus passed to ivf_centroids had "
-            "no rows — train the quantizer on a non-empty corpus"
+            "empty IVF codebook: the corpus its k-means trainer saw had no "
+            "non-NULL embeddings — train the quantizer on a non-empty corpus"
         )
-    cmat = np.stack([c for _, c in centroids])  # (nlist, dim)
-    cn = np.linalg.norm(cmat, axis=1)
-    cn[cn == 0.0] = 1.0
-    cids = np.array([i for i, _ in centroids], dtype=np.int64)
-    nprobe = min(nprobe, len(cids))
+    book = _codebook(centroids)
+    nprobe = min(nprobe, len(book[2]))
 
     def fn(vecs: pa.Array) -> tuple:
-        valid, mat = _embeddings(vecs, cmat.shape[1])
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0.0] = 1.0
-        cos = (mat @ cmat.T) / vn[:, None] / cn[None, :]
-        # argsort desc with index tiebreak: negate, stable sort
-        order = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
-        return valid * nprobe, [cids[order].reshape(-1)]
+        valid, mat = _embeddings(vecs, book[0].shape[1])
+        return valid * nprobe, [_nearest(mat, book, nprobe).reshape(-1)]
 
     return map_docs(df, (id_col,), vec_col, "cell long", fn, explode=True)
-
-
-def _ann_score_topk(
-    c_cells: DataFrame,
-    q_cells: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared tail of the quantized ANN family (flat IVF / IMI product
-    grid): candidates from the (corpus-cell, probed-query-cell)
-    equi-join, exact-cosine scoring, window rank to top-k.  No distinct
-    on the candidates: each corpus vector lives in exactly ONE cell and
-    a query's probed cells are distinct, so a (query, neighbor) pair can
-    only arise once — a distinct would add a corpus-sized exchange for
-    nothing (review r4).  ``c_cells``/``q_cells`` are (neighbor_id|
-    query_id, cell) frames; returns (query_id, rank, neighbor_id)."""
-    cand = (
-        c_cells.join(broadcast(q_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(broadcast(q), "query_id")
-        .withColumn(
-            "_cos",
-            _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id"
-        )
-    )
 
 
 def ann_ivf_topk(
@@ -719,7 +642,7 @@ def ann_ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train: str = "ids",
+    train: str = "kmeans",
 ) -> DataFrame:
     """IVF approximate top-k (the coarse-quantizer scale path): corpus
     vectors bucket into their nearest centroid's cell (map-only GEMM);
@@ -730,33 +653,34 @@ def ann_ivf_topk(
     equi-join keyed on (cell) — a handful of constant-size keys per
     vector, never an all-pairs product; cells are ~|corpus|/nlist so
     skew is bounded by the quantizer, and the per-query fanout is
-    nprobe/nlist of the corpus.  At ``nprobe == n_centroids`` every cell
-    is probed, so the result equals the exact :func:`cosine_topk` — the
-    full-recall regime that gives the driver query an exact SQL oracle
-    (the same trick ann_lsh_topk used in round 2); that identity holds
-    for ANY codebook, so ``train`` only affects the approximate regime.
+    nprobe/nlist of the corpus.  No distinct on the candidates: each
+    corpus vector lives in exactly ONE cell and a query's probed cells
+    are distinct, so a (query, neighbor) pair can only arise once.  At
+    ``nprobe == n_centroids`` every cell is probed, so the result equals
+    the exact :func:`cosine_topk` — the full-recall regime that gives the
+    driver query an exact SQL oracle; that identity holds for ANY
+    codebook, so ``train`` only affects the approximate regime.
 
-    ``train``: ``"ids"`` = id-ordered codebook (:func:`ivf_centroids`);
-    ``"kmeans"`` = deterministic spherical k-means on a hash-gated
-    sample (:func:`ivf_centroids_kmeans`) — the production shape within
-    the driver-Lloyd budget; ``"distributed"`` = full-corpus distributed
-    Lloyd (:func:`ivf_centroids_kmeans_distributed`) — nlist past the
-    driver-Lloyd budget up to the flat-codebook bound
+    ``train``: ``"kmeans"`` = deterministic spherical k-means on a
+    hash-gated sample (:func:`ivf_centroids_kmeans`) — the production
+    shape within the driver-Lloyd budget; ``"distributed"`` = full-corpus
+    distributed Lloyd (:func:`ivf_centroids_kmeans_distributed`) — nlist
+    past the driver-Lloyd budget up to the flat-codebook bound
     (``MAX_DISTRIBUTED_NLIST``)."""
     cents = _train_codebook(corpus, n_centroids, train, id_col, vec_col)
-    c_cells = ivf_assign(corpus, cents, 1, id_col, vec_col).withColumnRenamed(
-        id_col, "neighbor_id"
+    cand = _bucket_pairs(
+        ivf_assign(corpus, cents, 1, id_col, vec_col),
+        ivf_assign(queries, cents, nprobe, id_col, vec_col),
+        ["cell"],
+        id_col,
     )
-    q_cells = ivf_assign(queries, cents, nprobe, id_col, vec_col).withColumnRenamed(
-        id_col, "query_id"
-    )
-    return _ann_score_topk(c_cells, q_cells, corpus, queries, k, id_col, vec_col)
+    return _rescore_topk(cand, corpus, queries, k, id_col, vec_col)
 
 
 def embedding_dup_pairs_ivf(
     corpus: DataFrame,
-    threshold: float = 0.45,
-    n_centroids: int | None = None,
+    threshold: float,
+    n_centroids: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "kmeans",
@@ -776,48 +700,19 @@ def embedding_dup_pairs_ivf(
     Exact duplicates always share a cell.  For guaranteed recall at high
     thresholds use :func:`embedding_dup_pairs` (LSH + exact verify).
 
-    ``n_centroids=None`` (default) sizes the quantizer FROM the corpus
-    via :func:`auto_nlist` — nlist = clamp(n/256, 4, MAX_AUTO_NLIST),
-    keeping cells at ~256 members so the candidate volume (~n^2/nlist)
-    stays ~256·n (one count job when unset; pass nlist explicitly to
-    skip it).  The k-means sample is threaded as
-    :func:`kmeans_sample_size` (8× the cell count) so the effective cell
-    count always equals the requested one — the fixed 4,096-row default
-    silently capped nlist above ~1M vectors (VERDICT r4).  Past the
-    MAX_AUTO_NLIST driver-Lloyd budget (~2.1M vectors at the 256-member
-    target) the sampled-Lloyd auto path warns and caps; with
-    ``train="distributed"`` the auto-sizing runs to the flat-codebook
-    bound ``MAX_DISTRIBUTED_NLIST`` (the distributed Lloyd has no
-    driver-side TRAINING cost, but the codebook itself stays
-    driver-resident/broadcast — the auto path warns when it clamps
-    there, ~16.7M vectors at the 256-member target; this is the
-    corpus-scale production shape, ``train="ids"`` the no-training
-    fallback)."""
-    from tesseract_rs_spark.functions.dedup import guarded_pair_join
-
-    if n_centroids is None:
-        if train == "distributed":
-            import warnings
-
-            want = max(4, corpus.count() // SEMDEDUP_CELL_TARGET)
-            if want > MAX_DISTRIBUTED_NLIST:
-                warnings.warn(
-                    f"auto-sized IVF cell count clamped at "
-                    f"{MAX_DISTRIBUTED_NLIST} (corpus wants {want} for "
-                    f"~{SEMDEDUP_CELL_TARGET}-member cells): the flat "
-                    "codebook is driver-resident/broadcast — cells will "
-                    "hold ~n/65536 members, growing candidate volume "
-                    "proportionally",
-                    UserWarning,
-                    stacklevel=2,
-                )
-            n_centroids = min(want, MAX_DISTRIBUTED_NLIST)
-        else:
-            n_centroids = auto_nlist(corpus.count())
+    ``n_centroids`` governs the cost: candidate pairs scale as
+    ~n^2 / n_centroids (cells of n/nlist members each), so cells must
+    stay at the target semantic-cluster size — nlist ~ n / 100..1000,
+    exactly how SemDeDup configures its k-means.  Measured at 100k
+    vectors on a pathologically duplicate-heavy corpus (92.6% collapse):
+    nlist=64 -> 250 s, nlist=512 -> 61 s with near-identical survivors
+    (see BENCH.md).  ``train="kmeans"`` trains within the driver-Lloyd
+    budget (``MAX_AUTO_NLIST``); ``train="distributed"`` runs to the
+    flat-codebook bound (``MAX_DISTRIBUTED_NLIST``), past which
+    :func:`embedding_dup_pairs_imi` takes over."""
     cents = _train_codebook(corpus, n_centroids, train, id_col, vec_col)
     cells = ivf_assign(corpus, cents, 1, id_col, vec_col)
-    cand = guarded_pair_join(cells, ["cell"], id_col)
-    return _verify_candidate_pairs(corpus, cand, threshold, id_col, vec_col)
+    return _mine_pairs(corpus, cells, ["cell"], threshold, id_col, vec_col)
 
 
 def imi_codebooks(
@@ -881,13 +776,13 @@ def imi_assign(
 ) -> DataFrame:
     """(id, cell) over the IMI product grid: each vector's two halves
     assign independently to their nearest sub-centroid by cosine (ties
-    on centroid index, mirroring :func:`ivf_assign`), and the composite
-    cell is ``cell_lo * grid_width + cell_hi`` — a single long, so every
-    downstream consumer (``guarded_pair_join``, the cell equi-join) is
-    unchanged.  One numpy GEMM per half per Arrow batch against the two
-    broadcast sub-codebooks — map-only, no shuffle, constant bytes per
-    vector, exactly the flat :func:`ivf_assign` shape with half-width
-    matrices.
+    on centroid index, the same nearest-cell step as :func:`ivf_assign`),
+    and the composite cell is ``cell_lo * grid_width + cell_hi`` — a
+    single long, so every downstream consumer (``guarded_pair_join``,
+    the cell equi-join) is unchanged.  One numpy GEMM per half per Arrow
+    batch against the two broadcast sub-codebooks — map-only, no
+    shuffle, constant bytes per vector, exactly the flat
+    :func:`ivf_assign` shape with half-width matrices.
 
     ``nprobe_per_half > 1`` (the search side): the ``nprobe_per_half``
     nearest sub-cells per half cross-combine into
@@ -902,38 +797,17 @@ def imi_assign(
         )
     if nprobe_per_half < 1:
         raise ValueError(f"nprobe_per_half must be >= 1, got {nprobe_per_half}")
-
-    def _prep(cents):
-        mat = np.stack([c for _, c in cents])
-        n = np.linalg.norm(mat, axis=1)
-        n[n == 0.0] = 1.0
-        return mat, n, np.array([i for i, _ in cents], dtype=np.int64)
-
-    lo_mat, lo_n, lo_ids = _prep(cents_lo)
-    hi_mat, hi_n, hi_ids = _prep(cents_hi)
-    half = lo_mat.shape[1]
-    dim = half + hi_mat.shape[1]
-    grid_w = int(hi_ids.max()) + 1
-    npl = min(nprobe_per_half, len(lo_ids))
-    nph = min(nprobe_per_half, len(hi_ids))
-
-    def _nearest(mat, cmat, cn, cids, np_):
-        vn = np.linalg.norm(mat, axis=1)
-        vn[vn == 0.0] = 1.0
-        cos = (mat @ cmat.T) / vn[:, None] / cn[None, :]
-        # top-np_ with index tiebreak: stable argsort on the negation
-        return cids[np.argsort(-cos, axis=1, kind="stable")[:, :np_]]
+    lo, hi = _codebook(cents_lo), _codebook(cents_hi)
+    half = lo[0].shape[1]
+    dim = half + hi[0].shape[1]
+    grid_w = int(hi[2].max()) + 1
+    npl = min(nprobe_per_half, len(lo[2]))
+    nph = min(nprobe_per_half, len(hi[2]))
 
     def fn(vecs: pa.Array) -> tuple:
         valid, mat = _embeddings(vecs, dim)
-        if mat.shape[1] != dim:
-            raise ValueError(
-                f"vector dim {mat.shape[1]} != codebook dim {dim}: "
-                "the IMI sub-codebooks were trained on a different "
-                "embedding width"
-            )
-        ca = _nearest(mat[:, :half], lo_mat, lo_n, lo_ids, npl)
-        cb = _nearest(mat[:, half:], hi_mat, hi_n, hi_ids, nph)
+        ca = _nearest(mat[:, :half], lo, npl)
+        cb = _nearest(mat[:, half:], hi, nph)
         # cross-combine the per-half probes: (n, npl, 1) x (n, 1, nph)
         cells = ca[:, :, None] * grid_w + cb[:, None, :]
         return valid * npl * nph, [cells.reshape(-1)]
@@ -963,20 +837,19 @@ def ann_imi_topk(
     cents_lo, cents_hi = imi_codebooks(
         corpus, n_cells_per_half, id_col, vec_col, train
     )
-    c_cells = imi_assign(
-        corpus, cents_lo, cents_hi, id_col, vec_col
-    ).withColumnRenamed(id_col, "neighbor_id")
-    q_cells = imi_assign(
-        queries, cents_lo, cents_hi, id_col, vec_col,
-        nprobe_per_half=nprobe_per_half,
-    ).withColumnRenamed(id_col, "query_id")
-    return _ann_score_topk(c_cells, q_cells, corpus, queries, k, id_col, vec_col)
+    cand = _bucket_pairs(
+        imi_assign(corpus, cents_lo, cents_hi, id_col, vec_col),
+        imi_assign(queries, cents_lo, cents_hi, id_col, vec_col, nprobe_per_half),
+        ["cell"],
+        id_col,
+    )
+    return _rescore_topk(cand, corpus, queries, k, id_col, vec_col)
 
 
 def embedding_dup_pairs_imi(
     corpus: DataFrame,
-    threshold: float = 0.45,
-    n_cells_per_half: int | None = None,
+    threshold: float,
+    n_cells_per_half: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train: str = "distributed",
@@ -995,106 +868,51 @@ def embedding_dup_pairs_imi(
     partition of the full space (the standard IMI tradeoff; exact
     duplicates still always share a cell, and every emitted pair is
     exact-verified).  Use flat IVF while nlist fits its bounds; IMI when
-    the corpus wants more cells than a flat codebook can hold.
-
-    ``n_cells_per_half=None`` auto-sizes from the corpus:
-    ``ceil(sqrt(n / SEMDEDUP_CELL_TARGET))`` per half keeps composite
-    cells at ~256 members, bounded by each trainer's own budget
-    (driver-Lloyd for 'kmeans', flat-codebook for 'distributed' — at the
-    distributed bound the GRID covers ~10^12 vectors, so the clamp warn
-    is practically unreachable)."""
-    from tesseract_rs_spark.functions.dedup import guarded_pair_join
-
-    if n_cells_per_half is None:
-        import math
-
-        want_eff = max(4, corpus.count() // SEMDEDUP_CELL_TARGET)
-        n_cells_per_half = max(2, math.isqrt(want_eff - 1) + 1)
-        limit = (
-            MAX_DISTRIBUTED_NLIST if train == "distributed" else MAX_AUTO_NLIST
-        )
-        if n_cells_per_half > limit:
-            import warnings
-
-            warnings.warn(
-                f"auto-sized IMI sub-codebook clamped at {limit} cells per "
-                f"half (corpus wants {n_cells_per_half}): composite cells "
-                f"will hold ~n/{limit * limit} members",
-                UserWarning,
-                stacklevel=2,
-            )
-            n_cells_per_half = limit
+    the corpus wants more cells than a flat codebook can hold."""
     cents_lo, cents_hi = imi_codebooks(
         corpus, n_cells_per_half, id_col, vec_col, train
     )
     cells = imi_assign(corpus, cents_lo, cents_hi, id_col, vec_col)
-    cand = guarded_pair_join(cells, ["cell"], id_col)
-    return _verify_candidate_pairs(corpus, cand, threshold, id_col, vec_col)
+    return _mine_pairs(corpus, cells, ["cell"], threshold, id_col, vec_col)
 
 
 def semantic_dedup(
     corpus: DataFrame,
-    threshold: float = 0.95,
-    n_centroids: int | None = None,
+    pairs: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train: str = "kmeans",
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """End-to-end SemDeDup: cell-bucketed near-dup pairs -> connected
+    """End-to-end SemDeDup over mined near-dup ``pairs``: connected
     components over the pair graph (chains collapse into ONE cluster) ->
     keep the minimum-id survivor per component.  Returns the surviving
     rows of ``corpus`` unchanged.
 
-    Scale shape: inherits :func:`embedding_dup_pairs_ivf`'s bounded
-    candidate volume; the component pass is ``dedup.dup_clusters`` (numpy
-    on the driver up to ``dedup.CAP`` pair edges, edge-list-only pointer
+    ``pairs`` is an (id_a, id_b) frame mined from this corpus —
+    :func:`embedding_dup_pairs_ivf`'s, or past the flat-codebook bound
+    :func:`embedding_dup_pairs_imi`'s — so a caller that also reports
+    the pairs mines them once.  The caller owns the guarantee that the
+    frame was mined at the intended threshold; the id columns are
+    validated against ``corpus[id_col]``'s type to catch the likeliest
+    mix-up (a pair frame keyed on a different id column).
+
+    Scale shape: the component pass is ``dedup.dup_clusters`` (numpy on
+    the driver up to ``dedup.CAP`` pair edges, edge-list-only pointer
     jumping rounds on the cluster past it); the final filter is an id
-    anti-join (8-byte keys).
-
-    ``n_centroids`` governs the cost: candidate pairs scale as
-    ~n^2 / n_centroids (cells of n/nlist members each), so cells must
-    stay at the target semantic-cluster size — nlist ~ n / 100..1000,
-    exactly how SemDeDup configures its k-means.  The default (None)
-    auto-sizes to ~256-member cells from one corpus count (see
-    :func:`embedding_dup_pairs_ivf`).  Measured at 100k vectors on a
-    pathologically duplicate-heavy corpus (92.6% collapse): nlist=64 ->
-    250 s, nlist=512 -> 61 s with near-identical survivors (see
-    BENCH.md).
-
-    ``pairs``: optionally pass an already-mined (id_a, id_b) pair frame
-    (e.g. the :func:`embedding_dup_pairs_ivf` output a caller has
-    materialized for its own reporting) so the mining stage — quantizer
-    training included — runs once, not twice; past the flat-codebook
-    bound, pass :func:`embedding_dup_pairs_imi`'s pairs.  When ``pairs``
-    is given, ``threshold`` / ``n_centroids`` / ``train`` are IGNORED
-    (they only parameterize the mining this call now skips) — the caller
-    owns the guarantee that the frame was mined from this corpus at the
-    intended threshold.  The id columns are validated against ``corpus[id_col]``'s
-    type to catch the likeliest mix-up (a pair frame keyed on a different
-    id column)."""
-    from tesseract_rs_spark.functions.dedup import dup_clusters
-
-    if pairs is None:
-        pairs = embedding_dup_pairs_ivf(
-            corpus, threshold, n_centroids, id_col, vec_col, train
-        )
-    else:
-        corpus_t = corpus.schema[id_col].dataType
-        for c in ("id_a", "id_b"):
-            if c not in pairs.columns:
-                raise ValueError(
-                    f"pairs= frame is missing column {c!r} (expected the "
-                    "(id_a, id_b) shape embedding_dup_pairs_ivf emits)"
-                )
-            if pairs.schema[c].dataType != corpus_t:
-                raise ValueError(
-                    f"pairs[{c!r}] has type "
-                    f"{pairs.schema[c].dataType.simpleString()} but "
-                    f"corpus[{id_col!r}] is {corpus_t.simpleString()} — "
-                    "the pair frame was likely mined on a different id "
-                    "column or corpus"
-                )
+    anti-join (8-byte keys)."""
+    corpus_t = corpus.schema[id_col].dataType
+    for c in ("id_a", "id_b"):
+        if c not in pairs.columns:
+            raise ValueError(
+                f"pairs frame is missing column {c!r} (expected the "
+                "(id_a, id_b) shape embedding_dup_pairs_ivf emits)"
+            )
+        if pairs.schema[c].dataType != corpus_t:
+            raise ValueError(
+                f"pairs[{c!r}] has type "
+                f"{pairs.schema[c].dataType.simpleString()} but "
+                f"corpus[{id_col!r}] is {corpus_t.simpleString()} — "
+                "the pair frame was likely mined on a different id "
+                "column or corpus"
+            )
     clusters = dup_clusters(pairs)
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias(id_col)
@@ -1108,44 +926,17 @@ def ann_lsh_topk(
     k: int = 5,
     n_planes: int = 4,
     n_tables: int = 8,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: candidates collide with the query in any LSH
-    table; exact cosine ranks the deduped candidates.
-    (query_id, rank, neighbor_id)."""
-    c_sig = lsh_signatures(corpus, n_planes, n_tables, seed, id_col, vec_col, dim)
-    q_sig = lsh_signatures(queries, n_planes, n_tables, seed, id_col, vec_col, dim)
-    cand = (
-        c_sig.withColumnRenamed(id_col, "neighbor_id")
-        .join(
-            broadcast(q_sig.withColumnRenamed(id_col, "query_id")),
-            ["table", "bucket"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    scored = (
-        cand.join(c, "neighbor_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id")
-    )
+    table; exact cosine ranks the deduped candidates (a pair colliding
+    in several tables is one candidate).  (query_id, rank, neighbor_id)."""
+    cand = _bucket_pairs(
+        lsh_signatures(corpus, n_planes, n_tables, id_col, vec_col, dim),
+        lsh_signatures(queries, n_planes, n_tables, id_col, vec_col, dim),
+        ["table", "bucket"],
+        id_col,
+    ).distinct()
+    return _rescore_topk(cand, corpus, queries, k, id_col, vec_col)

@@ -51,7 +51,8 @@ def embedding_dup_pairs_exact(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact all-pairs embedding near-dup pairs (id_a < id_b, cosine >=
-    threshold): the O(n^2) oracle of the LSH, IVF and IMI pair miners."""
+    threshold): the O(n^2) oracle of the LSH, IVF and IMI pair miners.
+    It shares their norm, so an all-zero vector has cosine 0 here too."""
     a = corpus.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("_av"),

@@ -117,6 +117,31 @@ def test_null_embedding_emits_no_rows(spark, id_type):
         assert stage(nulls).collect() == [], name
 
 
+def test_embedding_width_mismatch_names_both_widths(spark):
+    """Each assignment stage checks the embedding width against its
+    hyperplanes or codebook and raises naming both widths, instead of
+    numpy's raw matmul message."""
+    from tesseract_rs_spark.functions.similarity import (
+        imi_assign,
+        ivf_assign,
+        lsh_signatures,
+    )
+
+    wide = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0, 4.0, 5.0, 6.0])], "vec_id long, embedding array<double>"
+    )
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
+    halves = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    stages = {
+        "lsh_signatures": lambda df: lsh_signatures(df, dim=4),
+        "ivf_assign": lambda df: ivf_assign(df, cents),
+        "imi_assign": lambda df: imi_assign(df, halves, halves),
+    }
+    for name, stage in stages.items():
+        with pytest.raises(Exception, match="vector dim 6 != codebook dim 4"):
+            stage(wide).collect()
+
+
 def test_unsupported_field_list_raises():
     for ddl in ("m map<string, long>", "a array<long", "a long b"):
         with pytest.raises(ValueError, match="unsupported field list"):

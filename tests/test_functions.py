@@ -805,28 +805,38 @@ def test_ann_ivf_full_recall_equals_exact(emb):
     assert ivf == exact
 
 
-def test_ann_ivf_approximate_recall(emb):
-    """The honest approximate regime: nprobe=3 of 8 cells must still
-    recall most exact neighbors (near-random corpus => cells carve the
-    sphere; the query's own cell plus two neighbors cover the bulk of
-    its true top-k), and the candidate volume must actually shrink."""
+def test_ann_ivf_approximate_recall(spark, emb):
+    """The honest approximate regime: on a corpus with cluster structure
+    (eight planted clusters), the k-means cells follow the clusters, so
+    nprobe=3 of 8 cells must still recall most exact neighbors.  The
+    fixture corpus is near-random (no cluster structure: same-label and
+    cross-label mean cosines are both ~0), where no codebook beats
+    chance, ~nprobe/nlist.  The pruning is real: every corpus vector
+    lands in exactly ONE cell."""
+    import numpy as np
+
     from tesseract_rs_spark.functions.similarity import (
         ann_ivf_topk,
         cosine_topk,
         ivf_assign,
-        ivf_centroids,
+        ivf_centroids_kmeans,
     )
 
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = {tuple(r) for r in cosine_topk(emb, q, k=5).collect()}
+    rng = np.random.RandomState(0)
+    centers = rng.normal(size=(8, 16))
+    clustered = spark.createDataFrame(
+        [(i, (centers[i % 8] + 0.1 * rng.normal(size=16)).tolist()) for i in range(320)],
+        "vec_id long, embedding array<double>",
+    )
+    q = clustered.filter(F.col("vec_id") < 10)
+    exact = {tuple(r) for r in cosine_topk(clustered, q, k=5).collect()}
     approx = {
         tuple(r)
-        for r in ann_ivf_topk(emb, q, k=5, n_centroids=8, nprobe=3).collect()
+        for r in ann_ivf_topk(clustered, q, k=5, n_centroids=8, nprobe=3).collect()
     }
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.5, recall
-    # pruning is real: every corpus vector lands in exactly ONE cell
-    cents = ivf_centroids(emb, 8)
+    cents = ivf_centroids_kmeans(emb, 8)
     cells = ivf_assign(emb, cents, 1)
     n = emb.count()
     assert cells.count() == n
@@ -838,10 +848,13 @@ def test_ann_ivf_empty_corpus_raises(spark):
     descriptive ValueError, not a numpy stack crash."""
     import pytest as _pytest
 
-    from tesseract_rs_spark.functions.similarity import ivf_assign, ivf_centroids
+    from tesseract_rs_spark.functions.similarity import (
+        ivf_assign,
+        ivf_centroids_kmeans,
+    )
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    cents = ivf_centroids(empty, 4)
+    cents = ivf_centroids_kmeans(empty, 4)
     assert cents == []
     with _pytest.raises(ValueError, match="empty IVF codebook"):
         ivf_assign(empty, cents)
@@ -849,9 +862,9 @@ def test_ann_ivf_empty_corpus_raises(spark):
 
 def test_ann_ivf_kmeans_codebook(emb):
     """k-means-trained codebook: deterministic across calls, exactly k
-    distinct unit-norm centroids, better (or equal) cell balance than
-    the id-ordered codebook, and full-recall equality with the exact
-    top-k holds for it too (the oracle identity is codebook-independent)."""
+    distinct unit-norm centroids that all populate a cell, and
+    full-recall equality with the exact top-k holds for it too (the
+    oracle identity is codebook-independent)."""
     import numpy as np
 
     from tesseract_rs_spark.functions.similarity import (
@@ -861,8 +874,8 @@ def test_ann_ivf_kmeans_codebook(emb):
         ivf_centroids_kmeans,
     )
 
-    c1 = ivf_centroids_kmeans(emb, 8, sample_size=256, n_iters=5)
-    c2 = ivf_centroids_kmeans(emb, 8, sample_size=256, n_iters=5)
+    c1 = ivf_centroids_kmeans(emb, 8, n_iters=5)
+    c2 = ivf_centroids_kmeans(emb, 8, n_iters=5)
     assert len(c1) == 8
     for (i, a), (j, b) in zip(c1, c2):
         assert i == j and np.allclose(a, b)  # deterministic
@@ -895,70 +908,19 @@ def test_ann_ivf_no_nested_loop_plan(emb):
 
 
 def test_ivf_kmeans_sample_threading(emb):
-    """VERDICT r4 #1: the quantizer must never silently cap at the
-    k-means sample.  (a) requesting more cells than the sample RAISES;
-    (b) the auto path's threaded sample (kmeans_sample_size) always
-    covers the requested nlist, so the effective cell count equals the
-    requested one whenever the corpus can support it; (c) auto_nlist
-    targets ~256-member cells, caps at the driver-Lloyd budget with a
-    warning."""
+    """The driver-Lloyd trainer sizes its own sample from nlist, so its
+    one bound is the driver-Lloyd budget: an nlist above it is rejected
+    before any job runs (an uncapped request would be a driver hang,
+    review r5)."""
     import pytest as _pytest
 
     from tesseract_rs_spark.functions.similarity import (
-        KMEANS_OVERSAMPLE,
         MAX_AUTO_NLIST,
-        auto_nlist,
         ivf_centroids_kmeans,
-        kmeans_sample_size,
     )
 
-    # (a) explicit undersized sample is an error, not a silent clamp
-    with _pytest.raises(ValueError, match="exceeds sample_size"):
-        ivf_centroids_kmeans(emb, n_centroids=64, sample_size=32)
-    # (b) threaded sample: effective nlist == requested nlist even when
-    # the requested count exceeds the OLD fixed default's failure shape
-    # (n_centroids > sample it would have clamped to)
-    want = 24
-    cents = ivf_centroids_kmeans(
-        emb, n_centroids=want, sample_size=kmeans_sample_size(want, floor=32),
-        n_iters=3,
-    )
-    assert len(cents) == want
-    # (b2) pin that the AUTO paths actually PASS the threaded sample —
-    # this is the exact edit whose omission was the r4 bug: capture the
-    # sample_size each caller hands to the trainer at an nlist above the
-    # old fixed 4096 default
-    import tesseract_rs_spark.functions.similarity as sim
-
-    captured = []
-    real_trainer = sim.ivf_centroids_kmeans
-
-    def spy(corpus, n_centroids=16, sample_size=4096, **kw):
-        captured.append((n_centroids, sample_size))
-        return real_trainer(corpus, 2, sample_size=64, **kw)
-
-    old = sim.ivf_centroids_kmeans
-    sim.ivf_centroids_kmeans = spy
-    try:
-        sim.embedding_dup_pairs_ivf(emb, n_centroids=6000).count()
-        sim.ann_ivf_topk(
-            emb, emb.limit(2), k=1, n_centroids=6000, train="kmeans"
-        ).count()
-    finally:
-        sim.ivf_centroids_kmeans = old
-    assert captured == [(6000, 48000), (6000, 48000)], captured
-    # (c) auto_nlist: ~256-member cells, then the documented cap + warning
-    assert auto_nlist(1000) == 4 and auto_nlist(1_000_000) == 3906
-    assert kmeans_sample_size(3906) == KMEANS_OVERSAMPLE * 3906
-    with _pytest.warns(UserWarning, match="capped"):
-        assert auto_nlist(100_000_000) == MAX_AUTO_NLIST
-    # (d) explicit nlist above the driver-Lloyd budget is rejected too
-    # (an uncapped explicit request would be a driver hang, review r5)
     with _pytest.raises(ValueError, match="driver-Lloyd budget"):
-        ivf_centroids_kmeans(
-            emb, n_centroids=MAX_AUTO_NLIST + 1,
-            sample_size=kmeans_sample_size(MAX_AUTO_NLIST + 1),
-        )
+        ivf_centroids_kmeans(emb, n_centroids=MAX_AUTO_NLIST + 1)
 
 
 def test_corpus_fluency_signals(spark):
@@ -1184,7 +1146,7 @@ def test_dedup_family_string_ids(spark):
     from tesseract_rs_spark.functions.dedup import minhash_dedup_pairs
     from tesseract_rs_spark.functions.similarity import (
         ivf_assign,
-        ivf_centroids,
+        ivf_centroids_kmeans,
         lsh_signatures,
     )
 
@@ -1210,9 +1172,8 @@ def test_dedup_family_string_ids(spark):
     )
     sigs = lsh_signatures(emb, 2, 2, id_col="url", dim=2).collect()
     assert {r["url"] for r in sigs} == {"u-a", "u-b"}
-    cells = ivf_assign(
-        emb, ivf_centroids(emb, 2, "url", "embedding"), 1, "url", "embedding"
-    ).collect()
+    cents = ivf_centroids_kmeans(emb, 2, id_col="url", vec_col="embedding")
+    cells = ivf_assign(emb, cents, 1, "url", "embedding").collect()
     assert {r["url"] for r in cells} == {"u-a", "u-b"}
 
 
@@ -1302,21 +1263,18 @@ def test_semantic_dedup_end_to_end(spark, emb):
     corpus = base.unionByName(d1).unionByName(d2).unionByName(d3)
     n_base = base.count()
     # exact copies always share a cell -> all planted pairs recovered
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs_ivf(
-            corpus, threshold=0.999, n_centroids=4
-        ).collect()
-    }
+    mined = embedding_dup_pairs_ivf(corpus, threshold=0.999, n_centroids=4)
+    pairs = {(r["id_a"], r["id_b"]) for r in mined.collect()}
     assert {(0, 100000), (0, 100001), (100000, 100001), (3, 100002)} <= pairs
-    survivors = semantic_dedup(corpus, threshold=0.999, n_centroids=4)
+    survivors = semantic_dedup(corpus, mined)
     ids = {r["vec_id"] for r in survivors.collect()}
     assert survivors.count() == n_base
     assert {100000, 100001, 100002}.isdisjoint(ids)
     assert {0, 3} <= ids
-    # unknown codebook mode rejected
-    with pytest.raises(ValueError, match="train"):
-        embedding_dup_pairs_ivf(corpus, train="typo")
+    # unknown codebook modes rejected, the deleted id codebook included
+    for train in ("typo", "ids"):
+        with pytest.raises(ValueError, match="train"):
+            embedding_dup_pairs_ivf(corpus, 0.999, 4, train=train)
 
 
 def test_latest_snapshot_random_equivalence(spark):
@@ -1432,20 +1390,6 @@ def test_remove_repeated_spans_null_text_passthrough(spark):
     assert out[1]["clean_text"] == "" and out[1]["n_tokens_removed"] == 5
 
 
-def test_semantic_dedup_auto_nlist(spark, emb):
-    """n_centroids=None auto-sizes the quantizer from the corpus (min 4
-    cells on a tiny corpus) — the fixed-default scale-killer guard."""
-    from tesseract_rs_spark.functions.similarity import semantic_dedup
-
-    base = emb.limit(20)
-    dup = base.filter(F.col("vec_id") == 0).withColumn(
-        "vec_id", F.lit(100000).cast("long")
-    )
-    survivors = semantic_dedup(base.unionByName(dup), threshold=0.999)
-    assert survivors.count() == base.count()
-    assert 100000 not in {r["vec_id"] for r in survivors.collect()}
-
-
 def _distinct_unit_vectors(n):
     """n guaranteed-distinct-direction vectors: distinct mixed-radix
     (a,b,c) triples with a trailing 1.0 — two such vectors can only be
@@ -1489,7 +1433,7 @@ def test_ivf_kmeans_distributed_past_driver_budget(spark):
     )
     # the driver-Lloyd path refuses this size outright
     with pytest.raises(ValueError, match="driver-Lloyd budget"):
-        ivf_centroids_kmeans(corpus, want, sample_size=8 * want)
+        ivf_centroids_kmeans(corpus, want)
     cents = ivf_centroids_kmeans_distributed(corpus, want, n_iters=2)
     assert len(cents) == want
     assert [i for i, _ in cents] == list(range(want))
@@ -1506,7 +1450,7 @@ def test_ivf_kmeans_distributed_past_driver_budget(spark):
 
 def test_ivf_kmeans_distributed_matches_driver_lloyd(spark):
     """Equivalence at a size both trainers can run: when driver-Lloyd's
-    sample is the WHOLE corpus, both trainers iterate over identical
+    sample is the WHOLE corpus (its 4,096-row floor covers it), both trainers iterate over identical
     data from identical hash-ordered data-point seeds, so the codebooks
     must agree to float-summation tolerance (their only mechanical
     differences are empty-cell handling — no cell empties here — and
@@ -1524,7 +1468,7 @@ def test_ivf_kmeans_distributed_matches_driver_lloyd(spark):
     corpus = spark.createDataFrame(
         _distinct_unit_vectors(n), "vec_id long, embedding array<float>"
     )
-    driver = ivf_centroids_kmeans(corpus, k, sample_size=n, n_iters=5)
+    driver = ivf_centroids_kmeans(corpus, k, n_iters=5)
     dist = ivf_centroids_kmeans_distributed(corpus, k, n_iters=5)
     assert len(driver) == len(dist) == k
     d_mat = np.stack([c for _, c in driver])
@@ -1538,11 +1482,12 @@ def test_ivf_kmeans_distributed_matches_driver_lloyd(spark):
 
 def test_ann_ivf_distributed_full_recall_identity(spark, emb):
     """nprobe == n_centroids makes IVF exact for ANY codebook — holds for
-    the distributed trainer too, and semantic_dedup accepts it as a
-    train mode (survivors match the driver-Lloyd run)."""
+    the distributed trainer too, and semantic_dedup over pairs mined with
+    its codebook keeps the same survivors as over the driver-Lloyd run's."""
     from tesseract_rs_spark.functions.similarity import (
         ann_ivf_topk,
         cosine_topk,
+        embedding_dup_pairs_ivf,
         semantic_dedup,
     )
 
@@ -1560,36 +1505,33 @@ def test_ann_ivf_distributed_full_recall_identity(spark, emb):
         "vec_id", F.lit(100000).cast("long")
     )
     corpus = base.unionByName(dup)
-    s_kmeans = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            corpus, threshold=0.999, n_centroids=4, train="kmeans"
-        ).collect()
-    }
-    s_dist = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            corpus, threshold=0.999, n_centroids=4, train="distributed"
-        ).collect()
-    }
+    s_kmeans, s_dist = (
+        {
+            r["vec_id"]
+            for r in semantic_dedup(
+                corpus, embedding_dup_pairs_ivf(corpus, 0.999, 4, train=train)
+            ).collect()
+        }
+        for train in ("kmeans", "distributed")
+    )
     assert s_dist == s_kmeans
 
 
 def test_semantic_dedup_pairs_frame_validated(spark, emb):
-    """The pairs= escape hatch rejects the likeliest mix-ups (missing
-    id columns, a pair frame keyed on a different id type) instead of
-    silently producing a wrong survivor set (ADVICE r5)."""
+    """semantic_dedup rejects the likeliest mix-ups in its pair frame
+    (missing id columns, a pair frame keyed on a different id type)
+    instead of silently producing a wrong survivor set (ADVICE r5)."""
     from tesseract_rs_spark.functions.similarity import semantic_dedup
 
     base = emb.limit(10)
     bad_cols = spark.createDataFrame([(1, 2)], "left long, right long")
     with pytest.raises(ValueError, match="missing column"):
-        semantic_dedup(base, pairs=bad_cols)
+        semantic_dedup(base, bad_cols)
     bad_type = spark.createDataFrame(
         [("a", "b")], "id_a string, id_b string"
     )
     with pytest.raises(ValueError, match="different id"):
-        semantic_dedup(base, pairs=bad_type)
+        semantic_dedup(base, bad_type)
 
 
 def test_ivf_kmeans_distributed_empty_and_degenerate(spark):
@@ -1610,17 +1552,14 @@ def test_ivf_kmeans_distributed_empty_and_degenerate(spark):
         cents = ivf_centroids_kmeans_distributed(dup, 4, n_iters=2)
     assert len(cents) == 1
 
-def test_ivf_distributed_flat_codebook_bound(spark, monkeypatch):
+def test_ivf_distributed_flat_codebook_bound(spark):
     """The distributed trainer is bounded by the flat-codebook budget
     (the codebook is driver-resident and broadcast even though training
     never collects a sample): past MAX_DISTRIBUTED_NLIST it RAISES —
     silently degrading would OOM the driver at exactly the corpus scale
-    the feature exists for — and the auto-sizing path in
-    embedding_dup_pairs_ivf warns when it clamps there."""
-    from tesseract_rs_spark.functions import similarity
+    the feature exists for."""
     from tesseract_rs_spark.functions.similarity import (
         MAX_DISTRIBUTED_NLIST,
-        embedding_dup_pairs_ivf,
         ivf_centroids_kmeans_distributed,
     )
 
@@ -1630,27 +1569,6 @@ def test_ivf_distributed_flat_codebook_bound(spark, monkeypatch):
     # the guard fires before any job runs, so a tiny corpus suffices
     with pytest.raises(ValueError, match="flat-codebook budget"):
         ivf_centroids_kmeans_distributed(tiny, MAX_DISTRIBUTED_NLIST + 1)
-    # auto-sizing clamps AT the bound with a warning (shrink both knobs
-    # so the clamp is reachable on a unit-test corpus; the code reads
-    # the module globals at call time)
-    monkeypatch.setattr(similarity, "MAX_DISTRIBUTED_NLIST", 4)
-    monkeypatch.setattr(similarity, "SEMDEDUP_CELL_TARGET", 4)
-    corpus = spark.createDataFrame(
-        _distinct_unit_vectors(32), "vec_id long, embedding array<float>"
-    )
-    with pytest.warns(UserWarning, match="clamped at 4"):
-        pairs = embedding_dup_pairs_ivf(
-            corpus, threshold=0.999, train="distributed"
-        )
-    # mining still ran at the clamped nlist, and every emitted pair
-    # passed the exact cosine check (IVF can miss cross-cell pairs but
-    # never invents one)
-    mined = {tuple(r) for r in pairs.collect()}
-    exact = {
-        tuple(r)
-        for r in embedding_dup_pairs_exact(corpus, threshold=0.999).collect()
-    }
-    assert mined and mined <= exact
 
 
 def _imi_vectors(n):
@@ -1743,14 +1661,6 @@ def test_imi_full_recall_and_subset(spark):
     }
     assert fine <= exact
     assert (3, 100000) in fine  # identical halves -> identical cell
-    # auto-sizing (one count job) mines a verified subset too
-    auto = {
-        tuple(r)
-        for r in embedding_dup_pairs_imi(
-            corpus, 0.995, train="distributed"
-        ).collect()
-    }
-    assert auto <= exact and (3, 100000) in auto
 
 
 def test_imi_grid_exceeds_codebook_rows(spark):
@@ -1806,6 +1716,7 @@ def test_semantic_dedup_imi_matches_ivf_survivors(spark, emb):
     two quantizers are identical."""
     from tesseract_rs_spark.functions.similarity import (
         embedding_dup_pairs_imi,
+        embedding_dup_pairs_ivf,
         semantic_dedup,
     )
 
@@ -1814,16 +1725,14 @@ def test_semantic_dedup_imi_matches_ivf_survivors(spark, emb):
         "vec_id", F.lit(100000).cast("long")
     )
     corpus = base.unionByName(dup)
-    ivf = {
-        r["vec_id"]
-        for r in semantic_dedup(
-            corpus, threshold=0.999, n_centroids=1, train="distributed"
-        ).collect()
-    }
+    ivf_pairs = embedding_dup_pairs_ivf(
+        corpus, 0.999, n_centroids=1, train="distributed"
+    )
+    ivf = {r["vec_id"] for r in semantic_dedup(corpus, ivf_pairs).collect()}
     imi_pairs = embedding_dup_pairs_imi(
         corpus, 0.999, n_cells_per_half=1, train="distributed"
     )
-    imi = {r["vec_id"] for r in semantic_dedup(corpus, pairs=imi_pairs).collect()}
+    imi = {r["vec_id"] for r in semantic_dedup(corpus, imi_pairs).collect()}
     assert imi == ivf and 100000 not in imi
 
 
@@ -1937,13 +1846,13 @@ def test_cluster_quota_sample_on_quantizer_cells(spark):
     from tesseract_rs_spark.functions.sampling import cluster_quota_sample
     from tesseract_rs_spark.functions.similarity import (
         ivf_assign,
-        ivf_centroids,
+        ivf_centroids_kmeans,
     )
 
     corpus = spark.createDataFrame(
         _distinct_unit_vectors(64), "vec_id long, embedding array<float>"
     )
-    cents = ivf_centroids(corpus, 8)
+    cents = ivf_centroids_kmeans(corpus, 8)
     cells = ivf_assign(corpus, cents, 1)
     out = cluster_quota_sample(cells, 2, id_col="vec_id").collect()
     per_cell = {}
@@ -2033,6 +1942,82 @@ def test_imi_multiprobe_and_ann_topk(spark, emb):
         ).collect()
     }
     assert partial_pairs <= full_cand
+
+
+def _topk_paths(corpus, queries, k):
+    """Every top-k path, each ANN path at full recall: every IVF cell and
+    every IMI grid cell probed, and 40 two-bucket LSH tables over the
+    positive-orthant _imi_vectors (pairwise angles < 90 degrees, so a
+    pair misses one table with probability < 1/2)."""
+    from tesseract_rs_spark.functions.similarity import ann_imi_topk, ann_ivf_topk
+
+    return {
+        "exact": cosine_topk(corpus, queries, k=k),
+        "ivf": ann_ivf_topk(corpus, queries, k=k, n_centroids=3, nprobe=3),
+        "imi": ann_imi_topk(
+            corpus, queries, k=k, n_cells_per_half=2, nprobe_per_half=2,
+            train="kmeans",
+        ),
+        "lsh": ann_lsh_topk(corpus, queries, k=k, n_planes=1, n_tables=40, dim=4),
+    }
+
+
+def test_zero_embedding_has_cosine_zero(spark):
+    """An all-zero embedding's norm reads as 1 (the numpy stages' rule),
+    so its cosine with anything is 0 instead of an ANSI division by
+    zero: every top-k path ranks it last for a plain query and ranks a
+    zero query's neighbours by id, and every pair miner returns the
+    exact pairs, none of them with the zero vector."""
+    import warnings
+
+    from tesseract_rs_spark.functions.similarity import (
+        embedding_dup_pairs,
+        embedding_dup_pairs_imi,
+        embedding_dup_pairs_ivf,
+    )
+
+    corpus = spark.createDataFrame(
+        _imi_vectors(12) + [(12, [0.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.filter(F.col("vec_id") >= 11)  # one plain, one zero
+    for name, df in _topk_paths(corpus, queries, 12).items():
+        got = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
+        assert len(got) == 2 * 12, name
+        assert got[(11, 12)] == 12, name
+        assert [got[(12, rank)] for rank in range(1, 13)] == list(range(12)), name
+    exact = {tuple(r) for r in embedding_dup_pairs_exact(corpus, 0.45).collect()}
+    assert exact and all(12 not in pair for pair in exact)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # 0.45 affords only shallow tables
+        lsh = embedding_dup_pairs(corpus, 0.45, dim=4)
+    miners = {
+        "lsh": lsh,
+        "ivf": embedding_dup_pairs_ivf(corpus, 0.45, n_centroids=1),
+        "imi": embedding_dup_pairs_imi(
+            corpus, 0.45, n_cells_per_half=1, train="kmeans"
+        ),
+    }
+    for name, df in miners.items():
+        assert {tuple(r) for r in df.collect()} == exact, name
+
+
+def test_null_embedding_has_no_neighbours(spark):
+    """A NULL query gets no neighbours and a NULL corpus vector is no
+    one's neighbour — on the exact path as on the full-recall ANN paths,
+    even when k exceeds the number of non-NULL vectors."""
+    corpus = spark.createDataFrame(
+        _imi_vectors(12) + [(12, None)], "vec_id long, embedding array<double>"
+    )
+    queries = corpus.filter(F.col("vec_id") >= 10)  # two plain, one NULL
+    got = {
+        name: {tuple(r) for r in df.collect()}
+        for name, df in _topk_paths(corpus, queries, 20).items()
+    }
+    assert len(got["exact"]) == 2 * 11
+    assert all(12 not in (q, nb) for q, _, nb in got["exact"])
+    for name in ("ivf", "imi", "lsh"):
+        assert got[name] == got["exact"], name
 
 
 def test_stratified_token_budget_plan_no_global_window(spark):
