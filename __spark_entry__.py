@@ -2845,7 +2845,8 @@ def _oracle_parts() -> dict[str, str]:
           FROM documents
         )
         SELECT doc_id,
-               CASE WHEN en >= de AND en >= fr AND en >= es THEN 'en'
+               CASE WHEN en IS NULL THEN NULL
+                    WHEN en >= de AND en >= fr AND en >= es THEN 'en'
                     WHEN de >= fr AND de >= es THEN 'de'
                     WHEN fr >= es THEN 'fr'
                     ELSE 'es' END AS lang_pred

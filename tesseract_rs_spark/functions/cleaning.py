@@ -1,7 +1,8 @@
 """Corpus-cleaning operators for training-data pipelines: PII scrubbing,
 benchmark-contamination detection, and paragraph-level dedup.
 
-All pure JVM column expressions / equi-joins — no Python in the hot path;
+JVM column expressions and equi-joins, except the curation signals of
+:func:`curate` (one per-doc Python pass, ``functions.text.doc_signals``);
 every operator has an exact ANSI-SQL twin, so correctness is end-to-end
 hash-checked, not eyeballed.  Regex patterns are chosen to behave
 identically under Java regex (Spark) and RE2 (DuckDB): no backreferences,
@@ -14,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import broadcast
 
-from tesseract_rs_spark.functions.text import tokens, word_shingles
+from tesseract_rs_spark.functions.text import text_signals, tokens, word_shingles
 
 # PII patterns (cross-engine-safe subset).  (?i) is honored identically by
 # Java regex and RE2 — without it, mixed-case emails (John.Doe@Example.COM)
@@ -227,24 +228,17 @@ def curation_scored(
 ) -> DataFrame:
     """THE curation signal projection + filter — shared by batch
     :func:`curate` and the streaming twin (``streaming/curation.py``), so
-    the quality gate can never silently diverge between modes: inline
-    (n_tokens, quality, lang_pred) columns in one narrow projection, the
-    filter inside whole-stage codegen before anything shuffles."""
-    from tesseract_rs_spark.functions.text import (
-        lang_pred_expr,
-        quality_expr,
-        token_count,
-    )
-
-    return docs.select(
-        *[F.col(c) for c in id_cols],
-        F.col(col),
-        token_count(col).alias("n_tokens"),
-        quality_expr(col).alias("quality"),
-        lang_pred_expr(col).alias("lang_pred"),
-    ).filter(
-        (F.col("quality") >= min_quality)
-        & F.col("lang_pred").isin(*keep_langs)
+    the quality gate can never silently diverge between modes:
+    (id_cols..., col, n_tokens, quality, lang_pred) from one Python pass
+    of :func:`~tesseract_rs_spark.functions.text.doc_signals` per doc, then
+    the quality/language filter on the JVM."""
+    return (
+        text_signals(docs, id_cols, col)
+        .filter(
+            (F.col("quality") >= min_quality)
+            & F.col("lang_pred").isin(*keep_langs)
+        )
+        .select(*id_cols, col, "n_tokens", "quality", "lang_pred")
     )
 
 
@@ -257,19 +251,26 @@ def curate(
 ) -> DataFrame:
     """One-pass corpus curation — the canonical training-data shaping
     pipeline (quality filter -> language filter -> exact dedup) as ONE
-    plan: quality score, language ID, and token count are computed INLINE
-    in a single narrow projection (no per-signal self-joins on id), the
-    filter runs inside whole-stage codegen before anything shuffles, and
-    the only exchange in the whole job is the digest shuffle of
-    :func:`~tesseract_rs_spark.functions.dedup.dedup_keep_first` — over
-    the FILTERED survivors only, so low-quality rows never cross the
-    network.  Adds (n_tokens, quality, lang_pred, fingerprint) columns.
-    The signal projection is :func:`curation_scored` — shared verbatim
-    with the streaming twin."""
+    plan -> (id, text, n_tokens, quality, lang_pred, fingerprint).
+
+    The exact dedup runs first: the digest shuffle of ``dedup_keep_first``
+    (``functions/dedup.py``) is the only exchange, and
+    :func:`curation_scored` (shared with the streaming twin) scores and
+    filters its survivors in the stage after it.  That is the same result
+    as filtering first: the signals are a pure function of the text and
+    the dedup groups rows by the text's digest, so every copy in a group
+    passes or fails together (NULL text has a NULL digest and NULL
+    signals, so it is dropped either way).  Scoring after the shuffle
+    runs the Python pass on survivors only, and keeps it out of the
+    upstream stage, where a caller's own Python pass (the extract
+    ``mapInArrow``) would otherwise hold a second Python worker per task
+    slot.  The cost: rows that fail the filter cross the shuffle too."""
     from tesseract_rs_spark.functions.dedup import dedup_keep_first
 
-    scored = curation_scored(docs, (id_col,), col, min_quality, keep_langs)
-    return dedup_keep_first(scored, id_col=id_col, col=col)
+    deduped = dedup_keep_first(docs.select(id_col, col), id_col=id_col, col=col)
+    return curation_scored(
+        deduped, (id_col, "fingerprint"), col, min_quality, keep_langs
+    ).select(id_col, col, "n_tokens", "quality", "lang_pred", "fingerprint")
 
 
 def repeated_ngram_spans(

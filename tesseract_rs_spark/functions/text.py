@@ -1,10 +1,13 @@
 """Text-analysis functions for training-data pipelines.
 
-All pure JVM-side column expressions (``pyspark.sql.functions`` only — no
-Python in the hot path): token counting, quality scoring, stopword-list
-language ID, and document fingerprinting.  Each op is deterministic and has
-an exact ANSI-SQL twin (the driver's DuckDB oracle), so correctness is
-checked end-to-end, not eyeballed.
+Token counting, quality scoring, stopword-list language ID, and document
+fingerprinting.  The per-doc signals (token, distinct-token and stopword
+counts, quality, language) are one Python function, :func:`doc_signals`,
+run once per doc by :func:`text_signals` through ``operators.arrow.map_docs``
+and testable without a JVM; everything else is a JVM-side column
+expression.  Each op is deterministic and has an exact ANSI-SQL twin (the
+driver's DuckDB oracle), so correctness is checked end-to-end, not
+eyeballed.
 
 The is_valid_word/dictionary analog of the reference
 (/root/reference/src/api.rs:1003-1010) appears here as the stopword /
@@ -13,8 +16,12 @@ wordlist membership primitives.
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from tesseract_rs_spark.operators.arrow import map_docs, per_doc
 
 # deterministic stopword lists for the language-ID heuristic
 STOPWORDS = {
@@ -34,66 +41,84 @@ def token_count(col: str = "text") -> Column:
     return F.size(tokens(col)).cast("long")
 
 
-def stopword_hits(col: str = "text", lang: str = "en") -> Column:
-    """Count of stopword OCCURRENCES (not distinct matches)."""
-    sw = STOPWORDS[lang]
-    return F.size(
-        F.filter(tokens(col), lambda x: x.isin(*sw))
-    ).cast("long")
+# the fields of doc_signals, as a map_docs DDL field list
+SIGNAL_FIELDS = (
+    "n_tokens long, n_distinct long, "
+    + "".join(f"sw_{lang} long, " for lang in LANG_ORDER)
+    + "quality long, lang_pred string"
+)
+_NULL_SIGNALS = (None,) * len(SIGNAL_FIELDS.split(","))
 
 
-def text_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, n_tokens, n_chars, n_distinct, stopword_hits) — quality-scoring
-    raw features, all codegen-able expressions."""
-    return docs.select(
-        F.col(id_col),
-        token_count().alias("n_tokens"),
-        F.length("text").cast("long").alias("n_chars"),
-        F.size(F.array_distinct(tokens())).cast("long").alias("n_distinct"),
-        stopword_hits().alias("sw_hits"),
+def doc_signals(text: str | None) -> tuple:
+    """The curation signals of one text, in :data:`SIGNAL_FIELDS` order:
+    ``(n_tokens, n_distinct, sw_en, sw_de, sw_fr, sw_es, quality,
+    lang_pred)``; NULL text gives NULL for every signal.
+
+    Tokens are ``text.split(" ")``, which equals Spark's and DuckDB's
+    ``split(text, ' ')``: empty tokens from double, leading and trailing
+    spaces count, and ``""`` is one empty token, so ``n_tokens >= 1``.
+    ``sw_<lang>`` counts stopword OCCURRENCES (not distinct matches).
+
+    quality = floor(50*min(1, n_tokens/100) + 30*(n_distinct/n_tokens)
+                    + 20*min(1, 10*sw_en/n_tokens))
+
+    in this floating-point order, so ``floor`` lands where the SQL oracle's
+    does.  lang_pred is the stopword-count argmax, ties going to the
+    earlier language of :data:`LANG_ORDER`."""
+    if text is None:
+        return _NULL_SIGNALS
+    toks = text.split(" ")
+    distinct = set(toks)
+    hits = [
+        sum(map(toks.count, distinct.intersection(STOPWORDS[lang])))
+        for lang in LANG_ORDER
+    ]
+    nt = float(len(toks))
+    quality = math.floor(
+        50.0 * min(1.0, nt / 100.0)
+        + 30.0 * (len(distinct) / nt)
+        + 20.0 * min(1.0, 10.0 * hits[0] / nt)
+    )
+    lang = LANG_ORDER[hits.index(max(hits))]
+    return (len(toks), len(distinct), *hits, quality, lang)
+
+
+def text_signals(docs: DataFrame, id_cols: tuple, col: str = "text") -> DataFrame:
+    """``(id_cols..., col, SIGNAL_FIELDS...)``: :func:`doc_signals` over
+    ``col`` in one :func:`~tesseract_rs_spark.operators.arrow.map_docs`
+    pass, the text passed through after the ids."""
+    body = per_doc(doc_signals)
+    return map_docs(
+        docs, id_cols, col, f"{col} string, {SIGNAL_FIELDS}",
+        lambda texts: [texts, *body(texts)],
     )
 
 
-def quality_expr(col: str = "text") -> Column:
-    """The quality-score COLUMN (composable into one-pass pipelines):
-
-    score = floor(50*min(1, n_tokens/100) + 30*(n_distinct/n_tokens)
-                  + 20*min(1, 10*sw_hits/n_tokens))
-    """
-    nt = token_count(col).cast("double")
-    nd = F.size(F.array_distinct(tokens(col))).cast("long")
-    sw = stopword_hits(col)
-    return F.floor(
-        50.0 * F.least(F.lit(1.0), nt / 100.0)
-        + 30.0 * (nd / nt)
-        + 20.0 * F.least(F.lit(1.0), 10.0 * sw / nt)
-    ).cast("long")
+def text_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, n_tokens, n_chars, n_distinct, sw_hits) — quality-scoring raw
+    features; sw_hits counts English stopwords (see :func:`doc_signals`)."""
+    return text_signals(docs, (id_col,)).select(
+        id_col,
+        "n_tokens",
+        F.length("text").cast("long").alias("n_chars"),
+        "n_distinct",
+        F.col("sw_en").alias("sw_hits"),
+    )
 
 
 def quality_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic 0-100 quality score: length saturation + lexical
     diversity + stopword presence (heuristics in the spirit of public
     web-corpus quality filters; exact formula pinned for the oracle —
-    see :func:`quality_expr`)."""
-    return docs.select(F.col(id_col), quality_expr().alias("quality"))
-
-
-def lang_pred_expr(col: str = "text") -> Column:
-    """The language-ID COLUMN: stopword-list argmax with the fixed
-    LANG_ORDER tie-break."""
-    en, de, fr, es = (stopword_hits(col, lang) for lang in LANG_ORDER)
-    return (
-        F.when((en >= de) & (en >= fr) & (en >= es), "en")
-        .when((de >= fr) & (de >= es), "de")
-        .when(fr >= es, "fr")
-        .otherwise("es")
-    )
+    see :func:`doc_signals`)."""
+    return text_signals(docs, (id_col,)).select(id_col, "quality")
 
 
 def lang_id(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Stopword-list language ID with a fixed argmax tie-break order —
     a deterministic heuristic twin-able in SQL."""
-    return docs.select(F.col(id_col), lang_pred_expr().alias("lang_pred"))
+    return text_signals(docs, (id_col,)).select(id_col, "lang_pred")
 
 
 def fingerprint(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

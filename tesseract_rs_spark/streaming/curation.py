@@ -1,11 +1,11 @@
 """Ingest-time curation: the streaming twin of ``functions.cleaning.curate``.
 
-The batch pipeline (extract -> quality/language filter -> exact keep-first
-dedup) composes naturally onto a continuously-arriving crawl: extraction
-and the signal filters are stateless (they run inside the same fused
-stage, streaming or not), and the only stateful step — exact dedup —
-becomes ``dropDuplicatesWithinWatermark`` on the content digest, whose
-state is bounded by (dup horizon x ingest rate) rather than corpus size.
+The batch pipeline (extract -> quality/language filter and exact
+keep-first dedup, which commute) composes naturally onto a
+continuously-arriving crawl: extraction and the signal filters are
+stateless, and the only stateful step — exact dedup — becomes
+``dropDuplicatesWithinWatermark`` on the content digest, whose state is
+bounded by (dup horizon x ingest rate) rather than corpus size.
 First arrival per digest wins (the streaming analog of keep-first: one survivor
 per distinct text either way; which row survives differs — min-id in
 batch, first-seen in the stream — and the batch-equivalence test compares
@@ -35,12 +35,14 @@ def curate_stream(
     horizon: str = "1 hour",
 ) -> DataFrame:
     """The curation stages over an (already extracted) streaming frame:
-    flatten assembly newlines, score quality/language inline (stateless,
-    whole-stage codegen), filter, then watermark-bounded exact dedup on
-    the sha256 digest.  Works on batch frames too (minus the watermark
-    semantics) — the flatten rule and the signal projection ARE the batch
-    code (``cleaning.flatten_extracted`` / ``cleaning.curation_scored``),
-    so the quality gate cannot drift between modes."""
+    flatten assembly newlines, score quality/language (stateless: one
+    Python pass per doc), filter, then watermark-bounded exact dedup on
+    the sha256 digest.  Unlike batch ``curate``, it filters before the
+    dedup, so only passing rows enter the dedup state.  Works on batch
+    frames too (minus the watermark semantics) — the flatten rule and the
+    signal projection ARE the batch code (``cleaning.flatten_extracted``
+    / ``cleaning.curation_scored``), so the quality gate cannot drift
+    between modes."""
     from tesseract_rs_spark.functions.cleaning import (
         curation_scored,
         flatten_extracted,

@@ -11,11 +11,18 @@ import struct
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
 
+from tesseract_rs_spark.functions.dedup import dedup_keep_first
 from tesseract_rs_spark.functions.multimodal import MEDIA_MAGIC
 from tesseract_rs_spark.functions.similarity import _dot, _norm
+from tesseract_rs_spark.functions.text import (
+    LANG_ORDER,
+    STOPWORDS,
+    token_count,
+    tokens,
+)
 
 
 def _ordered_concat(id_col: str, text_col: str, sep: str):
@@ -92,3 +99,54 @@ def make_media_corpus(n: int = 64, seed: int = 42) -> pd.DataFrame:
         }
         rows.append((i, kind, payload, meta))
     return pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
+
+
+# The curation signals as Spark SQL column expressions: the route
+# ``functions.text.doc_signals`` replaced, kept as its oracle.
+
+
+def stopword_hits_sql(col: str = "text", lang: str = "en") -> Column:
+    """Count of stopword OCCURRENCES (not distinct matches)."""
+    sw = STOPWORDS[lang]
+    return F.size(F.filter(tokens(col), lambda x: x.isin(*sw))).cast("long")
+
+
+def quality_sql(col: str = "text") -> Column:
+    nt = token_count(col).cast("double")
+    nd = F.size(F.array_distinct(tokens(col))).cast("long")
+    sw = stopword_hits_sql(col)
+    return F.floor(
+        50.0 * F.least(F.lit(1.0), nt / 100.0)
+        + 30.0 * (nd / nt)
+        + 20.0 * F.least(F.lit(1.0), 10.0 * sw / nt)
+    ).cast("long")
+
+
+def lang_pred_sql(col: str = "text") -> Column:
+    """Stopword-list argmax with the fixed LANG_ORDER tie-break.  NULL
+    text falls through every comparison to 'es'."""
+    en, de, fr, es = (stopword_hits_sql(col, lang) for lang in LANG_ORDER)
+    return (
+        F.when((en >= de) & (en >= fr) & (en >= es), "en")
+        .when((de >= fr) & (de >= es), "de")
+        .when(fr >= es, "fr")
+        .otherwise("es")
+    )
+
+
+def curate_filter_first(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    min_quality: int = 55,
+    keep_langs: tuple = ("en",),
+) -> DataFrame:
+    """``curate`` in the other order: the SQL signals and filter on every
+    row, then ``dedup_keep_first`` over the survivors."""
+    scored = docs.select(
+        id_col,
+        "text",
+        token_count().alias("n_tokens"),
+        quality_sql().alias("quality"),
+        lang_pred_sql().alias("lang_pred"),
+    ).filter((F.col("quality") >= min_quality) & F.col("lang_pred").isin(*keep_langs))
+    return dedup_keep_first(scored, id_col=id_col)

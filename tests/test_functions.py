@@ -63,17 +63,82 @@ def test_dedup_keep_first_survivors(spark, docs):
     assert res.filter(F.col("doc_id") >= 100000).count() == 0
 
 
+def _python_maps_per_stage(plan) -> list:
+    """Python map nodes per stage of a physical plan (a JVM SparkPlan),
+    the stages being the pieces that ``Exchange`` nodes cut it into."""
+    python_maps = {"MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"}
+    counts = [0]
+
+    def walk(node, stage):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if "Exchange" in node.nodeName():
+            counts.append(0)
+            stage = len(counts) - 1
+        counts[stage] += node.nodeName() in python_maps
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), stage)
+
+    walk(plan, 0)
+    return counts
+
+
 def test_curate_single_shuffle(spark, docs):
-    """The composed curation pipeline must pay exactly ONE exchange (the
-    digest shuffle of the dedup) — signals and filters stay inside the
-    scan stage."""
-    from tesseract_rs_spark.functions.cleaning import curate
+    """The composed curation pipeline pays exactly ONE exchange (the
+    digest shuffle of the dedup), and its Python signal pass runs after
+    that shuffle: no stage of extract -> curate holds two Python map
+    nodes, each of which keeps a Python worker alive per task slot."""
+    from tesseract_rs_spark.corpus import make_corpus
+    from tesseract_rs_spark.functions.cleaning import curate, flatten_extracted
+    from tesseract_rs_spark.operators.extract import extract_text
 
     out = curate(docs, min_quality=0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert out.count() == docs.count()  # min_quality=0: nothing filtered,
     # corpus has no exact dupes at sf0.001
+
+    pages = spark.createDataFrame(make_corpus("smoke")[0])
+    chain = curate(flatten_extracted(extract_text(pages)), id_col="url")
+    plan = chain._jdf.queryExecution().executedPlan()
+    assert plan.toString().count("Exchange") == 1, plan.toString()
+    assert _python_maps_per_stage(plan) == [1, 1], plan.toString()
+
+
+def test_curate_filter_dedup_commute(spark):
+    """Dedup-then-score equals score-then-dedup (the SQL filter followed by
+    dedup_keep_first), row for row and survivor id for survivor id, on
+    planted exact copies that pass, fail the quality gate, or are not
+    'en', a NULL-id copy and NULL text."""
+    from support import curate_filter_first
+
+    from tesseract_rs_spark.functions.cleaning import curate
+    from tesseract_rs_spark.functions.text import doc_signals
+
+    good = "the cat sat on a mat and the dog is of no kind at all"
+    good2 = "a bird is the friend of every tree and sky above us"
+    short = "alpha beta"  # en, quality 31
+    german = "der hund und die katze das ist gut"
+    rows = [
+        (5, good), (2, good), (9, good),
+        (4, good2), (None, good2), (7, good2),
+        (3, short), (1, short),
+        (6, german), (8, german),
+        (10, None), (11, None),
+        (12, "one day is the end of a long and dark night"),
+    ]
+    assert doc_signals(short)[-2] < 55 and doc_signals(german)[-1] == "de"
+    assert doc_signals(good)[-2] >= 55 and doc_signals(good2)[-2] >= 55
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    got, want = curate(df), curate_filter_first(df)
+    assert got.schema == want.schema
+    got, want = sorted(got.collect(), key=repr), sorted(want.collect(), key=repr)
+    assert got == want
+    assert {(r["doc_id"], r["text"]) for r in got} == {
+        (2, good), (None, good2), (12, rows[-1][1])
+    }
 
 
 def test_repeated_ngram_spans_merge(spark):
@@ -397,6 +462,81 @@ def test_quality_and_lang_domains(docs):
     assert q.filter((F.col("quality") < 0) | (F.col("quality") > 100)).count() == 0
     langs = {r["lang_pred"] for r in lang_id(docs).distinct().collect()}
     assert langs <= {"en", "de", "fr", "es"}
+
+
+# Strings where the Python signals and Spark's split/filter could part:
+# empty tokens (empty, blank, double, leading and trailing spaces), other
+# whitespace inside tokens, non-ASCII, stopwords only, past the
+# 100-token saturation, and LANG_ORDER ties.
+SIGNAL_EDGE_TEXTS = [
+    "",
+    " ",
+    "   ",
+    "the  cat",
+    " the cat",
+    "the cat ",
+    " the  a ",
+    "the\tcat is\tof",
+    "the\xa0cat a\xa0is",
+    "naïve café the straße 東京 the émigré",
+    "Ünïcödé  the\u2003a",
+    "the a is of and",
+    "der die und ist das",
+    "the the the the",
+    " ".join(f"w{i % 37}" for i in range(150)) + " the of",
+    " ".join(["the"] * 120),
+    "es es fr le",
+    "le la et el los y",
+    "der die le la",
+    "a der le el",
+    "the der",
+    "THE The the",
+]
+
+
+def test_doc_signals_match_sql_oracle(spark, docs):
+    """``doc_signals`` equals the Spark SQL signal expressions it replaced
+    (``tests/support.py``) on edge strings and on every sf0.001 document.
+    The body runs as a plain Python call, without a JVM."""
+    from support import lang_pred_sql, quality_sql, stopword_hits_sql
+
+    from tesseract_rs_spark.functions.text import (
+        LANG_ORDER,
+        doc_signals,
+        token_count,
+        tokens,
+    )
+
+    edge = spark.createDataFrame(
+        list(enumerate(SIGNAL_EDGE_TEXTS)), "doc_id long, text string"
+    )
+    for frame in (edge, docs):
+        want = frame.select(
+            "text",
+            token_count().alias("n_tokens"),
+            F.size(F.array_distinct(tokens())).cast("long").alias("n_distinct"),
+            *[stopword_hits_sql(lang=lang).alias(f"sw_{lang}") for lang in LANG_ORDER],
+            quality_sql().alias("quality"),
+            lang_pred_sql().alias("lang_pred"),
+        ).collect()
+        assert want
+        for row in want:
+            assert doc_signals(row["text"]) == tuple(row)[1:], row["text"]
+
+
+def test_text_signals_null_text(spark):
+    """NULL text has NULL signals in every entry point, the language
+    included (the SQL CASE once fell through to 'es')."""
+    from tesseract_rs_spark.functions.text import doc_signals, text_stats
+
+    def by_id(frame):
+        return {r["doc_id"]: tuple(r)[1:] for r in frame.collect()}
+
+    df = spark.createDataFrame([(1, None), (2, "the cat")], "doc_id long, text string")
+    assert by_id(lang_id(df)) == {1: (None,), 2: ("en",)}
+    assert by_id(quality_score(df)) == {1: (None,), 2: (51,)}
+    assert by_id(text_stats(df)) == {1: (None,) * 4, 2: (2, 7, 2, 1)}
+    assert set(doc_signals(None)) == {None}
 
 
 def test_word_ngrams_match_split_reference(spark):
