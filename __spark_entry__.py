@@ -47,8 +47,6 @@ from tesseract_rs_spark.functions.similarity import (
 )
 from tesseract_rs_spark.functions.text import (
     fingerprint,
-    lang_id,
-    quality_score,
     shingle_fingerprint,
     text_stats,
 )
@@ -334,10 +332,11 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     document plus an exact replica (doc_id + 1_000_000) renders to pages,
     the engine extracts, the extracted text is flattened back to one line
     (assembly newlines -> spaces, which reconstructs the source text by
-    the assembly contract), then curate() quality-filters, language-
-    filters, and exact-dedups — so every replica must be dropped in favor
-    of its original, and only quality>=55 'en' rows survive.  The whole
-    pipeline is one fused extract stage + one digest shuffle."""
+    the assembly contract), then curate() exact-dedups, quality-filters
+    and language-filters — so every replica must be dropped in favor of
+    its original, and only quality>=55 'en' rows survive.  The whole
+    pipeline is one fused extract stage, one digest shuffle, and the
+    scoring stage after it."""
     from tesseract_rs_spark.functions.cleaning import curate
 
     docs = _docs(spark, sf_dir)
@@ -857,14 +856,6 @@ def _q_multipage_text(spark, sf_dir):
 
 def _q_text_stats(spark, sf_dir):
     return text_stats(_docs(spark, sf_dir))
-
-
-def _q_quality_score(spark, sf_dir):
-    return quality_score(_docs(spark, sf_dir))
-
-
-def _q_lang_id(spark, sf_dir):
-    return lang_id(_docs(spark, sf_dir))
 
 
 def _q_fingerprint(spark, sf_dir):
@@ -1564,15 +1555,18 @@ def _q_doc_profile_m(spark, sf_dir):
     signals, and corpus-frequency fluency signals (CCNet/Gopher-style
     rare-bigram statistics vs the whole corpus) — four signal families,
     one row per doc."""
-    from tesseract_rs_spark.functions.text import corpus_fluency_signals
+    from tesseract_rs_spark.functions.text import (
+        corpus_fluency_signals,
+        text_signals,
+    )
 
-    q = _q_quality_score(spark, sf_dir)
-    l = _q_lang_id(spark, sf_dir)
+    ql = text_signals(_docs(spark, sf_dir), ("doc_id",)).select(
+        "doc_id", "quality", "lang_pred"
+    )
     r = _q_repetition_signals(spark, sf_dir)
     f = corpus_fluency_signals(_docs(spark, sf_dir))
     return (
-        q.join(l, "doc_id")
-        .join(r, "doc_id")
+        ql.join(r, "doc_id")
         .join(f, "doc_id", "left")
         .select(
             "doc_id", "quality", "lang_pred",

@@ -264,7 +264,10 @@ def curate(
     runs the Python pass on survivors only, and keeps it out of the
     upstream stage, where a caller's own Python pass (the extract
     ``mapInArrow``) would otherwise hold a second Python worker per task
-    slot.  The cost: rows that fail the filter cross the shuffle too."""
+    slot.  The cost: rows that fail the filter cross the shuffle too, so
+    the shuffle carries every row's text where filtering first would carry
+    the passing share's; with no Python pass upstream (stored documents)
+    that is all the order changes."""
     from tesseract_rs_spark.functions.dedup import dedup_keep_first
 
     deduped = dedup_keep_first(docs.select(id_col, col), id_col=id_col, col=col)

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -64,8 +65,11 @@ def doc_signals(text: str | None) -> tuple:
                     + 20*min(1, 10*sw_en/n_tokens))
 
     in this floating-point order, so ``floor`` lands where the SQL oracle's
-    does.  lang_pred is the stopword-count argmax, ties going to the
-    earlier language of :data:`LANG_ORDER`."""
+    does: a deterministic 0-100 score of length saturation, lexical
+    diversity and stopword presence (heuristics in the spirit of public
+    web-corpus quality filters).  lang_pred is the stopword-list language
+    ID, the stopword-count argmax, ties going to the earlier language of
+    :data:`LANG_ORDER`."""
     if text is None:
         return _NULL_SIGNALS
     toks = text.split(" ")
@@ -87,11 +91,14 @@ def doc_signals(text: str | None) -> tuple:
 def text_signals(docs: DataFrame, id_cols: tuple, col: str = "text") -> DataFrame:
     """``(id_cols..., col, SIGNAL_FIELDS...)``: :func:`doc_signals` over
     ``col`` in one :func:`~tesseract_rs_spark.operators.arrow.map_docs`
-    pass, the text passed through after the ids."""
+    pass, the text passed through after the ids.  Under
+    ``spark.sql.execution.arrow.useLargeVarTypes`` the text arrives as
+    ``large_string``; it goes back as the declared ``string``, its data
+    buffer shared."""
     body = per_doc(doc_signals)
     return map_docs(
         docs, id_cols, col, f"{col} string, {SIGNAL_FIELDS}",
-        lambda texts: [texts, *body(texts)],
+        lambda texts: [texts.cast(pa.string()), *body(texts)],
     )
 
 
@@ -105,20 +112,6 @@ def text_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         "n_distinct",
         F.col("sw_en").alias("sw_hits"),
     )
-
-
-def quality_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic 0-100 quality score: length saturation + lexical
-    diversity + stopword presence (heuristics in the spirit of public
-    web-corpus quality filters; exact formula pinned for the oracle —
-    see :func:`doc_signals`)."""
-    return text_signals(docs, (id_col,)).select(id_col, "quality")
-
-
-def lang_id(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Stopword-list language ID with a fixed argmax tie-break order —
-    a deterministic heuristic twin-able in SQL."""
-    return text_signals(docs, (id_col,)).select(id_col, "lang_pred")
 
 
 def fingerprint(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -162,7 +162,9 @@ def test_large_var_types_give_the_same_rows(spark):
     ``large_string``/``large_binary``: every ported stage returns the same
     rows as with the default setting."""
     from tesseract_rs_spark.corpus import render_html
+    from tesseract_rs_spark.functions.cleaning import curate
     from tesseract_rs_spark.functions.dedup import minhash_signatures
+    from tesseract_rs_spark.functions.text import text_signals
     from tesseract_rs_spark.kernels.raster import render_page
     from tesseract_rs_spark.operators.extract import extract_text, extract_words
     from tesseract_rs_spark.operators.ocr import ocr_text
@@ -179,8 +181,14 @@ def test_large_var_types_give_the_same_rows(spark):
         [("r1", bytearray(render_page("abc def ghi jkl"))), ("r2", bytearray(b"PAGE?"))],
         "url string, html binary",
     )
+    kept = " ".join(["the"] + [f"w{i}" for i in range(60)])  # passes curate
     docs = spark.createDataFrame(
-        [("d1", "one two three four five six"), ("d2", "too short")],
+        [
+            ("d1", "one two three four five six"),
+            ("d2", "too short"),
+            ("d3", kept),
+            ("d4", kept),
+        ],
         "url string, text string",
     )
     stages = {
@@ -188,6 +196,8 @@ def test_large_var_types_give_the_same_rows(spark):
         "extract_words": lambda: extract_words(html),
         "ocr_text": lambda: ocr_text(raster),
         "minhash_signatures": lambda: minhash_signatures(docs, id_col="url"),
+        "text_signals": lambda: text_signals(docs, ("url",)),
+        "curate": lambda: curate(docs, id_col="url"),
     }
     key = "spark.sql.execution.arrow.useLargeVarTypes"
     out = {}

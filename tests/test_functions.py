@@ -13,7 +13,7 @@ from tesseract_rs_spark.functions.dedup import (
     simhash,
 )
 from tesseract_rs_spark.functions.similarity import ann_lsh_topk, cosine_topk
-from tesseract_rs_spark.functions.text import lang_id, quality_score
+from tesseract_rs_spark.functions.text import text_signals
 
 SF = "/root/testdata/sf0.001"
 
@@ -458,9 +458,9 @@ def test_word_predicates(spark):
 
 
 def test_quality_and_lang_domains(docs):
-    q = quality_score(docs)
+    q = text_signals(docs, ("doc_id",))
     assert q.filter((F.col("quality") < 0) | (F.col("quality") > 100)).count() == 0
-    langs = {r["lang_pred"] for r in lang_id(docs).distinct().collect()}
+    langs = {r["lang_pred"] for r in q.select("lang_pred").distinct().collect()}
     assert langs <= {"en", "de", "fr", "es"}
 
 
@@ -533,8 +533,9 @@ def test_text_signals_null_text(spark):
         return {r["doc_id"]: tuple(r)[1:] for r in frame.collect()}
 
     df = spark.createDataFrame([(1, None), (2, "the cat")], "doc_id long, text string")
-    assert by_id(lang_id(df)) == {1: (None,), 2: ("en",)}
-    assert by_id(quality_score(df)) == {1: (None,), 2: (51,)}
+    scored = text_signals(df, ("doc_id",))
+    assert by_id(scored.select("doc_id", "lang_pred")) == {1: (None,), 2: ("en",)}
+    assert by_id(scored.select("doc_id", "quality")) == {1: (None,), 2: (51,)}
     assert by_id(text_stats(df)) == {1: (None,) * 4, 2: (2, 7, 2, 1)}
     assert set(doc_signals(None)) == {None}
 
