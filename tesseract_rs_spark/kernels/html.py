@@ -82,9 +82,13 @@ _SPLIT_RE = re.compile(
 # inline tag, like every name outside the block set, ``br`` and ``a``.
 _TAG_HEAD_RE = re.compile(r"</?[a-zA-Z][a-zA-Z0-9:-]*")
 
-# whole attribute names only: ``data-id`` or ``subclass`` is another attribute
+# whole attribute names only: ``data-id`` or ``subclass`` is another
+# attribute.  A quoted value matches as a whole with no group set, so a
+# ``class=`` inside ``title="see class=nav"`` is part of the title.
 _CLASS_ID_RE = re.compile(
-    r"""(?<![^\s"'/])(?:class|id)\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))""", re.IGNORECASE
+    r""""[^"]*"|'[^']*'"""
+    r"""|(?<![^\s"'/])(?:class|id)\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))""",
+    re.IGNORECASE,
 )
 
 # Block-level elements: opening/closing one flushes the current text block.
@@ -202,6 +206,7 @@ def _token_info(token: str) -> tuple:
         if attrs:
             name, _, drops, keeps = info
             for am in _CLASS_ID_RE.finditer(attrs):
+                # "" for a skipped quoted value: neither class regex matches it
                 val = am.group(2) or am.group(3) or am.group(4) or ""
                 if _NEGATIVE_CLASS_RE.search(val):
                     drops = True
@@ -272,7 +277,8 @@ def _clean_lines(parts: list, preserve_spaces: bool) -> list:
             # no tabs/newlines/double spaces: sub would be the identity
             line = raw_line.strip(" ")
         else:
-            line = _WS_RE.sub(" ", raw_line).strip()
+            # strip(" ") as above: U+00A0 is not HTML whitespace
+            line = _WS_RE.sub(" ", raw_line).strip(" ")
         if line:
             out.append(line)
     return out

@@ -41,7 +41,10 @@ def get_spark(
 
     - Arrow enabled and capped at a modest records-per-batch because rows
       carry multi-KB..MB `html` payloads (SURVEY.md §4.2);
-    - AQE on for post-shuffle coalescing and skew-join splitting;
+    - AQE on for post-shuffle coalescing and skew-join splitting, with
+      no 1 MB floor under a coalesced partition: a shuffle smaller than
+      slots x 1 MB still gets about one partition per slot, so the
+      CPU-bound stages after a small shuffle run on every slot;
     - shuffle partitions sized to the core count (2x) by default, not the
       200 default that would fragment small-SF test runs;
     - Python workers start through ``worker_daemon``, which takes Spark's
@@ -81,6 +84,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "8m")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # AQE coalesces to max(minPartitionSize, min(64 MB advisory,
+        # shuffle bytes / slots)).  The 1 MB default floor prices a row by
+        # its bytes; curation and near-dup rows cost CPU, and their
+        # 0.2-2.6 MB shuffles ran on 1-2 of 4 slots (a warm curate_dedup
+        # unit, floor toggled per unit in one session on a 4-core VM:
+        # 1,704 -> 2,018 docs/s, 10 of 10).  Shuffles over slots x 1 MB
+        # keep the same sizing.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "128m")

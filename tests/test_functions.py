@@ -3,6 +3,8 @@
 the reference's confidence quality gates
 (/root/reference/tests/integration_test.rs:53-58)."""
 
+import random
+
 import pyspark.sql.functions as F
 import pytest
 from support import embedding_dup_pairs_exact
@@ -88,8 +90,10 @@ def test_curate_single_shuffle(spark, docs):
     """The composed curation pipeline pays exactly ONE exchange (the
     digest shuffle of the dedup), and its Python signal pass runs after
     that shuffle: no stage of extract -> curate holds two Python map
-    nodes, each of which keeps a Python worker alive per task slot."""
-    from tesseract_rs_spark.corpus import make_corpus
+    nodes, each of which keeps a Python worker alive per task slot.
+    After a small shuffle the curated rows and the near-dup edges still
+    spread over at least one partition per slot."""
+    from tesseract_rs_spark.corpus import _VOCAB, make_corpus, render_html
     from tesseract_rs_spark.functions.cleaning import curate, flatten_extracted
     from tesseract_rs_spark.operators.extract import extract_text
 
@@ -104,6 +108,34 @@ def test_curate_single_shuffle(spark, docs):
     plan = chain._jdf.queryExecution().executedPlan()
     assert plan.toString().count("Exchange") == 1, plan.toString()
     assert _python_maps_per_stage(plan) == [1, 1], plan.toString()
+
+    # A small shuffle still runs on every slot: 96 planted near-dup pairs
+    # whose digests hash to all 8 shuffle partitions (the suite's count;
+    # a get_spark() call in an earlier test may have reset it), a few
+    # hundred KB in all.  Under AQE's default 1 MB coalescing floor both
+    # the curated pin and the pair miner's edges came back in ONE partition.
+    rng = random.Random(18)
+    rows = []
+    for g in range(96):
+        base = [rng.choice(_VOCAB) for _ in range(120)]
+        variant = base[:60] + ["variant"] + base[61:]
+        for k, words in enumerate((base, variant)):
+            i = 2 * g + k
+            rows.append((f"https://example.org/{i}", render_html(" ".join(words), i, "en").encode()))
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        cur = curate(flatten_extracted(extract_text(pages)), id_col="url").localCheckpoint()
+        assert cur.count() == 192
+        assert cur.select(F.pmod(F.hash("fingerprint"), F.lit(8))).distinct().count() == 8
+        assert cur.rdd.getNumPartitions() >= slots
+        edges = minhash_dedup_pairs(cur, threshold=0.8, id_col="url").localCheckpoint()
+        assert edges.count() == 96
+        assert edges.rdd.getNumPartitions() >= slots
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_curate_filter_dedup_commute(spark):

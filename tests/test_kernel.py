@@ -130,6 +130,35 @@ class TestBoilerplate:
             assert got.text == plain.text
 
     @pytest.mark.parametrize(
+        "attrs",
+        ['title="see class=nav"', "title='a id=nav b'", 'alt="x" title="see class=nav"',
+         'title="see class=post-body"'],
+    )
+    def test_class_id_inside_quoted_value_does_not_classify(self, attrs):
+        """``class=``/``id=`` inside another attribute's quoted value is part
+        of that value, not an attribute: the block is judged like a plain
+        ``<div>``, while a real ``class`` after a quoted value still counts."""
+        article = "<article><p>real content words go here today</p></article>"
+        for body in ("menu words one two three four", "short text"):
+            got = extract_doc(wrap(f"<div {attrs}>{body}</div>" + article), CFG)
+            plain = extract_doc(wrap(f"<div>{body}</div>" + article), CFG)
+            assert got.text == plain.text
+        real = wrap(f'<div title="x"class="nav">menu words one two three four</div>{article}')
+        assert extract_doc(real, CFG).text == "real content words go here today\n"
+
+    @pytest.mark.parametrize(
+        "mode", [MODE_AUTO, MODE_RAW, MODE_SINGLE_BLOCK], ids=["auto", "raw", "single_block"]
+    )
+    def test_nbsp_edges_do_not_depend_on_the_line(self, mode):
+        """U+00A0 is not HTML whitespace: a line keeps its leading NBSP
+        whether or not the rest of the line holds a space run or a tab."""
+        cfg = ExtractConfig(mode=mode)
+        lead = "<article><p>lead prose words one two three four five six</p></article>"
+        for body in ("\xa0alpha beta\xa0", "\xa0alpha  beta\xa0", "\xa0alpha\tbeta\xa0"):
+            r = extract_doc(wrap(f"{lead}<p>{body}</p>"), cfg)
+            assert r.text.endswith("\xa0alpha beta\xa0\n"), (body, r.text)
+
+    @pytest.mark.parametrize(
         "body, mode",
         [
             ("<b>tail\x00text more words here</b>", MODE_AUTO),

@@ -7,8 +7,10 @@ under seven configurations and folds every ``DocResult`` field and every
 ``word_rows`` row into one sha256.  The digest was first recorded before the
 kernel's one-group tokenizer rewrite, and re-recorded once when text after
 the last tag joined the token loop's text path (only docs ending in such
-text changed); any change to what the kernel emits, for any input shape
-below, changes it.
+text changed), and again when every line came to strip only ASCII spaces
+from its edges (only docs with a line that had non-ASCII whitespace, such as
+U+00A0, at an edge and a tab, newline or double space inside changed); any
+change to what the kernel emits, for any input shape below, changes it.
 
 To inspect a mismatch, call ``_doc_record`` on single documents of
 ``_tag_soup_docs()`` with the old and the new kernel and diff the tuples.
@@ -45,7 +47,7 @@ CONFIGS = {
     "timeout": ExtractConfig(page_timeout_ms=0),
 }
 
-EXPECTED_DIGEST = "5347a73d4a19515805728b1b9c8938fcd3b6218a5c226df15f41e7bf34efdce6"
+EXPECTED_DIGEST = "ef908ff7a246c39c8da26866c76514ce84be2baa3920d6de4f95ad355bba9a25"
 
 _WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
